@@ -577,6 +577,48 @@ private[graft] object SliceGeom {
     Block(from, until, strides, start, extent.clone())
   }
 
+  /** One chunk's (count, sum, min, max) over its cells inside `[lo, hi)`.
+    * `min`/`max` are meaningless when `n == 0` (no overlap).
+    */
+  final case class Stats(n: Long, sum: Double, min: Double, max: Double)
+
+  /** The per-chunk rule of a slice-statistics read, shared by
+    * [[ChunkSliceStatsExpr]] (the Spark route) and the driver route of
+    * `TensorPlane.sliceStats`: decode only the sub-block of `bytes` (the
+    * chunk at `coord`) inside the region and reduce it in one pass.
+    */
+  def stats(bytes: Array[Byte], coord: Array[Int], dtype: String,
+            compression: String, chunkShape: Array[Long],
+            rectSizes: Seq[Seq[Long]], lo: Array[Long],
+            hi: Array[Long]): Stats = {
+    val blk = blockOf(coord, chunkShape, rectSizes, lo, hi)
+    if (blk == null)
+      return Stats(0L, 0.0, Double.PositiveInfinity, Double.NegativeInfinity)
+    val raw = ChunkCodec.decompress(bytes, compression)
+    val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
+    val read: Long => Double = dtype match {
+      case "int8" => p => bb.get(p.toInt).toDouble
+      case "int16" => p => bb.getShort(p.toInt * 2).toDouble
+      case "int32" => p => bb.getInt(p.toInt * 4).toDouble
+      case "int64" => p => bb.getLong(p.toInt * 8).toDouble
+      case "float32" => p => bb.getFloat(p.toInt * 4).toDouble
+      case "float64" => p => bb.getDouble(p.toInt * 8)
+    }
+    var n = 0L; var sum = 0.0
+    var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
+    foreachRun(blk) { (base, len) =>
+      var j = 0
+      while (j < len) {
+        val v = read(base + j)
+        n += 1; sum += v
+        if (v < mn) mn = v
+        if (v > mx) mx = v
+        j += 1
+      }
+    }
+    Stats(n, sum, mn, mx)
+  }
+
   /** Iterate the sub-block as contiguous inner runs: `f(basePos, len)` is
     * called once per run (innermost dim is contiguous in row-major).
     */
@@ -628,35 +670,11 @@ case class ChunkSliceStatsExpr(bytes: Expression, coord: Expression,
   private val hiArr = hi.toArray
 
   override def nullSafeEval(b: Any, c: Any): Any = {
-    val raw = ChunkCodec.decompress(b.asInstanceOf[Array[Byte]], compression)
-    val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    val coordInts = c.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toIntArray()
-    val blk = SliceGeom.blockOf(coordInts, chunkArr, rectSizes, loArr, hiArr)
-    if (blk == null)
-      return org.apache.spark.sql.catalyst.InternalRow(0L, 0.0, null, null)
-    val read: Long => Double = dtype match {
-      case "int8" => p => bb.get(p.toInt).toDouble
-      case "int16" => p => bb.getShort(p.toInt * 2).toDouble
-      case "int32" => p => bb.getInt(p.toInt * 4).toDouble
-      case "int64" => p => bb.getLong(p.toInt * 8).toDouble
-      case "float32" => p => bb.getFloat(p.toInt * 4).toDouble
-      case "float64" => p => bb.getDouble(p.toInt * 8)
-    }
-    var n = 0L; var sum = 0.0
-    var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-    SliceGeom.foreachRun(blk) { (base, len) =>
-      var j = 0
-      while (j < len) {
-        val v = read(base + j)
-        n += 1; sum += v
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-        j += 1
-      }
-    }
-    org.apache.spark.sql.catalyst.InternalRow(n, sum,
-      if (n == 0) null else mn, if (n == 0) null else mx)
+    val s = SliceGeom.stats(b.asInstanceOf[Array[Byte]],
+      c.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toIntArray(), dtype, compression, chunkArr, rectSizes, loArr, hiArr)
+    org.apache.spark.sql.catalyst.InternalRow(s.n, s.sum,
+      if (s.n == 0) null else s.min, if (s.n == 0) null else s.max)
   }
 
   override protected def withNewChildrenInternal(

@@ -927,11 +927,14 @@ final class AssetManager(val store: Store, spark: SparkSession) {
 
   /** Ranged chunk read — a 4 KB slice of a 128 MB chunk is one ranged GET,
     * not a whole-object fetch (get_object_range, storage.rs:196-206).
+    * `cacheable = false` bypasses the chunk cache (the bulk-scan contract
+    * of [[graft.storage.ChunkCache.getOrFetch]]).
     */
-  def readChunk(id: String, offset: Long, length: Long): Array[Byte] = {
+  def readChunk(id: String, offset: Long, length: Long,
+                cacheable: Boolean = true): Array[Byte] = {
     val key = Layout.chunkKey(id)
-    graft.storage.ChunkCache.getOrFetch(store, key, offset, length)(
-      store.getRangeSplit(key, offset, length))
+    graft.storage.ChunkCache.getOrFetch(store, key, offset, length,
+      cacheable)(store.getRangeSplit(key, offset, length))
   }
 }
 

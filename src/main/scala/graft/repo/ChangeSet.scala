@@ -249,13 +249,6 @@ final class ChangeSet {
 }
 
 object ChangeSet {
-  /** Driver-side last-write-wins precedence over raw (ref, _batch) rows —
-    * the in-memory equivalent of [[ChangeSet.chunkChanges]]'s window
-    * (row_number over _batch desc per (node_id, coord)). Ties (duplicate
-    * coords within ONE staged batch) resolve arbitrarily in both forms;
-    * here the later-collected row wins. Insertion order is preserved so
-    * repeated resolutions are stable.
-    */
   /** Bounded collect of a RAW changes relation ([[ChangeSet
     * .chunkChangesRaw]] output, possibly persisted by the caller) with
     * driver-side precedence resolution: Some(resolved) when the raw rows
@@ -275,6 +268,13 @@ object ChangeSet {
     if (head.length <= maxRows) Some(dedupDriver(head.toSeq)) else None
   }
 
+  /** Driver-side last-write-wins precedence over raw (ref, _batch) rows —
+    * the in-memory equivalent of [[ChangeSet.chunkChanges]]'s window
+    * (row_number over _batch desc per (node_id, coord)). Ties (duplicate
+    * coords within ONE staged batch) resolve arbitrarily in both forms;
+    * here the later-collected row wins. Insertion order is preserved so
+    * repeated resolutions are stable.
+    */
   private[graft] def dedupDriver(
       rows: Seq[(ChunkRef, Double)]): Seq[ChunkRef] = {
     val m = mutable.LinkedHashMap[(String, Seq[Int]), (ChunkRef, Double)]()

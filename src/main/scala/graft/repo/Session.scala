@@ -384,10 +384,7 @@ final class Session private[repo] (
     getChunkRefsBatch(reqs).map(_.orNull).asJava
   }
 
-  /** [[getChunkRefsBatchJ]] with the payloads materialized — refs
-    * resolve in one wave, then inline/object/virtual payloads fetch
-    * CONCURRENTLY (misses are null).
-    */
+  /** [[getChunksBatch]] for Python callers (misses are null). */
   def getChunksBatchJ(paths: java.util.List[String],
       coords: java.util.List[java.util.List[Integer]])
       : java.util.List[Array[Byte]] = {
@@ -396,9 +393,7 @@ final class Session private[repo] (
       s"paths (${paths.size}) and coords (${coords.size}) must align")
     val reqs = paths.asScala.toSeq.zip(
       coords.asScala.toSeq.map(coordOf))
-    val refs = getChunkRefsBatch(reqs)
-    graft.storage.Store.parallelIO(refs)(
-      _.map(materialize).orNull).asJava
+    getChunksBatch(reqs).map(_.orNull).asJava
   }
 
   private def boundsOf(lo: java.util.List[java.lang.Number],
@@ -416,7 +411,8 @@ final class Session private[repo] (
     * py4j call. `lo`/`hi` are per-DIMENSION bound vectors (inclusive
     * lo, exclusive hi): region `[lo(d), hi(d))` on each axis. Returns
     * the DataFrame (wrap with `pyspark.sql.DataFrame(jdf, spark)`), so
-    * Python gets region reads without per-cell round trips.
+    * Python gets region reads without per-cell round trips. Small regions
+    * take the same zero-job driver route as the Scala call.
     */
   def sliceStatsJ(path: String, dtype: String,
       lo: java.util.List[java.lang.Number],
@@ -587,10 +583,6 @@ final class Session private[repo] (
   private def committedRefsFor(nodeId: String): DataFrame =
     assets.committedRefs(baseSnapshot, Seq(nodeId))
 
-  /** The effective chunk-ref relation for an array: committed refs with
-    * changeset precedence applied (left-anti + union — the same merge the
-    * flush runs, session.rs:2587-2635) and tombstones dropped.
-    */
   /** Distinct location URLs of every virtual chunk visible in this
     * session, across ALL arrays (reference
     * `all_virtual_chunk_locations`, session.rs) — the input to
@@ -618,6 +610,10 @@ final class Session private[repo] (
     virtualChunkLocationsDF()
       .collect().map(_.getString(0)).toSeq.sorted
 
+  /** The effective chunk-ref relation for an array: committed refs with
+    * changeset precedence applied (left-anti + union — the same merge the
+    * flush runs, session.rs:2587-2635) and tombstones dropped.
+    */
   def refs(path: String): DataFrame = {
     val n = arrayNode(path)
     val committed =
@@ -805,7 +801,7 @@ final class Session private[repo] (
 
   /** Fetch + assemble chunk bytes (payload dispatch of §3.1 step 4). */
   def getChunk(path: String, coord: Seq[Int]): Option[Array[Byte]] =
-    getChunkRef(path, coord).map(materialize)
+    getChunkRef(path, coord).map(materialize(_))
 
   /** Batched point lookups: every split any requested coordinate's
     * extents match is warmed into the driver cache CONCURRENTLY first,
@@ -878,9 +874,22 @@ final class Session private[repo] (
     }
   }
 
-  private[graft] def materialize(r: ChunkRef): Array[Byte] = r.kind match {
+  /** [[getChunkRefsBatch]] with the payloads materialized: refs resolve
+    * in one wave, then inline/object/virtual payloads fetch CONCURRENTLY.
+    * Results align with `reqs` by index (misses are None). Pass
+    * `cacheable = false` for a read that touches each chunk once (the
+    * bulk-scan contract of [[graft.storage.ChunkCache.getOrFetch]]).
+    */
+  def getChunksBatch(reqs: Seq[(String, Seq[Int])],
+      cacheable: Boolean = true): Seq[Option[Array[Byte]]] =
+    graft.storage.Store.parallelIO(getChunkRefsBatch(reqs))(
+      _.map(materialize(_, cacheable)))
+
+  private[graft] def materialize(r: ChunkRef,
+      cacheable: Boolean = true): Array[Byte] = r.kind match {
     case ChunkRef.KindInline => r.inline
-    case ChunkRef.KindRef => assets.readChunk(r.chunk_id, r.offset, r.length)
+    case ChunkRef.KindRef =>
+      assets.readChunk(r.chunk_id, r.offset, r.length, cacheable)
     case ChunkRef.KindVirtual =>
       repo.virtualResolver.fetch(r.location, r.offset, r.length, r.etag,
         r.last_modified)

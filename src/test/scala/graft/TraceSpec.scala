@@ -141,7 +141,7 @@ class TraceSpec extends SparkTestBase {
   test("span names are stable (docs/observability.md contract)") {
     val documented = Set("commit", "flush", "merge", "push", "gc",
       "expire", "compact", "scan.plan", "scan.spj.error",
-      "rechunk", "downsample",
+      "rechunk", "downsample", "slice",
       // flush-phase breakdown spans (r16 optimization round)
       "flush.splits", "flush.finalize", "manifest.write",
       "manifest.extents")

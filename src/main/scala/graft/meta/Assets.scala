@@ -460,58 +460,6 @@ final class AssetManager(val store: Store, spark: SparkSession) {
   // ---- manifests (Parquet, written sorted for stats-based pruning) ----
   def manifestUri(id: String): String = store.uri(Layout.manifestPrefix(id))
 
-  /** Write chunk refs as one manifest dataset partitioned by (node_id,
-    * split) — each split is the Spark-native analog of one reference
-    * manifest file; sorting within partitions by coordinate makes Parquet
-    * min/max stats tight (manifest sort, session.rs:2564). Returns
-    * per-(node, split) extents + file info for the snapshot.
-    */
-  def writeManifest(id: String, refs: DataFrame,
-                    ndimOf: Map[String, Int]): Map[String, Seq[ManifestRef]] = {
-    graft.core.Trace.span("manifest.write", "id" -> id) { _ =>
-      refs
-        .repartition(col("node_id"), col("split"))
-        // `split` rides second so the dynamic-partition writer's required
-        // ordering (node_id, split) is satisfied by THIS sort — without it
-        // FileFormatWriter plans a SECOND full sort of every flush's rows
-        // (guide §2.4: remove shuffles/sorts outright). Within a
-        // (node_id, split) file the row order is c0..c3 either way, so
-        // file contents and Parquet min/max stats are identical.
-        .sortWithinPartitions("node_id", "split", "c0", "c1", "c2", "c3")
-        .write
-        .partitionBy("node_id", "split")
-        .option("compression", "zstd")
-        .parquet(manifestUri(id))
-    }
-
-    // extents readback: ndim comes from the caller's node specs (the
-    // bounds filter upstream guarantees coord arity == spec arity), so
-    // the agg never touches the `coord` ARRAY column — the readback scan
-    // column-prunes to the int/long columns only (guide §6: verify
-    // pruning reaches the scan; `coord` was the widest column here).
-    val ndims = graft.core.Trace.span("manifest.extents", "id" -> id) { _ =>
-      readManifest(id)
-      .groupBy("node_id", "split")
-      .agg(
-        min("c0").as("min0"), max("c0").as("max0"),
-        min("c1").as("min1"), max("c1").as("max1"),
-        min("c2").as("min2"), max("c2").as("max2"),
-        min("c3").as("min3"), max("c3").as("max3"),
-        count(lit(1)).as("refs"),
-        sum(coalesce(col("length"), lit(0L))).as("bytes"))
-      .collect()
-    }
-    ndims.groupBy(_.getAs[String]("node_id")).map { case (node, rows) =>
-      val nd = ndimOf.getOrElse(node, 4)
-      node -> rows.toSeq.map { r =>
-        val mins = (0 until nd).map(i => r.getAs[Int](s"min$i"))
-        val maxs = (0 until nd).map(i => r.getAs[Int](s"max$i"))
-        ManifestRef(id, r.getAs[Int]("split"), mins, maxs,
-          r.getAs[Long]("refs"), r.getAs[Long]("bytes"))
-      }
-    }
-  }
-
   /** FUSED manifest write for the bulk (Spark-path) flush (r17, guide
     * §2.4): ONE exchange + ONE sort + ONE job where the window-based
     * flush paid the precedence window's exchange+sort, the anti-join, the
@@ -582,7 +530,7 @@ final class AssetManager(val store: Store, spark: SparkSession) {
     // concurrently (a 10-shard commit at 150 ms RTT costs ~1 RTT of
     // wall, not 10; round-13 latency soak)
     graft.storage.Store.parallelIO(shards.toSeq) { case ((node, split), refs0) =>
-      val refs = refs0.sortBy(r => (r.c0, r.c1, r.c2, r.c3))
+      val refs = refs0.sorted(AssetManager.CoordOrder)
       store.putBytes(
         s"${Layout.manifestPrefix(id)}/node_id=$node/split=$split/" +
           "part-00000-driver.zstd.parquet",
@@ -604,6 +552,22 @@ final class AssetManager(val store: Store, spark: SparkSession) {
     */
   def shardRefsDriver(mref: ManifestRef, nodeId: String): Seq[ChunkRef] =
     loadSplitDriver(mref, nodeId).values.toSeq
+
+  /** The bounded driver read under the metadata ops (compaction, fsck,
+    * zarr listing): every ref of the given (shard, node) pairs, read in
+    * one concurrent wave of [[shardRefsDriver]] reads with zero Spark
+    * jobs, aligned with `parts`. None, decided before any IO, when the
+    * shards' recorded `numRefs` sum past `maxRefs` — by default the
+    * driver-memory bound (`Session.SmallCommitMaxShardRefs`, ~25 MB of
+    * refs): the caller then takes its Spark route.
+    */
+  def refsDriverBounded(parts: Seq[(ManifestRef, String)],
+      maxRefs: Long = graft.repo.Session.SmallCommitMaxShardRefs)
+      : Option[Seq[Seq[ChunkRef]]] =
+    if (parts.iterator.map(_._1.numRefs).sum > maxRefs) None
+    else Some(graft.storage.Store.parallelIO(parts) { case (m, node) =>
+      shardRefsDriver(m, node)
+    })
 
   /** Load one split's coord→ref table through the cache, reading the
     * shard's data files driver-side (Store GET + [[DriverParquet]], zero
@@ -793,6 +757,23 @@ final class AssetManager(val store: Store, spark: SparkSession) {
     (String, String, Int),
     java.util.concurrent.CompletableFuture[Seq[graft.storage.ObjectInfo]]]()
 
+  /** One LIST of a whole manifest, which also seeds the per-shard file
+    * listings, so the driver shard reads that follow pay no LIST of
+    * their own (fsck lists every manifest of its closure anyway).
+    */
+  def listManifest(manifestId: String): Seq[graft.storage.ObjectInfo] = {
+    val prefix = Layout.manifestPrefix(manifestId) + "/"
+    val objs = store.list(prefix)
+    val shardFile = """node_id=([^/]+)/split=(-?\d+)/[^/]+\.parquet""".r
+    objs.flatMap(o => o.key.stripPrefix(prefix) match {
+      case shardFile(node, split) => Some((manifestId, node, split.toInt) -> o)
+      case _ => None
+    }).groupMap(_._1)(_._2).foreach { case (k, fs) =>
+      splitFilesCache.synchronized { splitFilesCache.put(k, fs); () }
+    }
+    objs
+  }
+
   private def splitFiles(manifestId: String, nodeId: String,
                          split: Int): Seq[graft.storage.ObjectInfo] = {
     val key = (manifestId, nodeId, split)
@@ -946,6 +927,15 @@ final case class FusedShardStat(node_id: String, split: Int,
     emin: Seq[Int], emax: Seq[Int], nrefs: Long, bytes: Long)
 
 object AssetManager {
+  /** Row order inside a manifest shard: c0..c3, as the Spark writers sort. */
+  private[meta] val CoordOrder: Ordering[ChunkRef] = (a, b) => {
+    var c = Integer.compare(a.c0, b.c0)
+    if (c == 0) c = Integer.compare(a.c1, b.c1)
+    if (c == 0) c = Integer.compare(a.c2, b.c2)
+    if (c == 0) c = Integer.compare(a.c3, b.c3)
+    c
+  }
+
   /** Column indices of the fused-write input, resolved driver-side once. */
   final case class FusedCols(node: Int, coord: Int, c0: Int, c1: Int,
       c2: Int, c3: Int, kind: Int, inline: Int, chunkId: Int,

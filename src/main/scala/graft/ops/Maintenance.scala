@@ -417,6 +417,17 @@ object GC {
   * appends fragmented the shards.
   */
 object Compaction {
+
+  /** Rewrite `branch`'s manifests in one commit; returns its snapshot id.
+    *
+    * Route rule, decided before any IO from the `numRefs` the tip's
+    * snapshot records: when every array's refs together number at most
+    * [[DriverMaxRefs]], the driver reads every shard ([[graft.meta
+    * .AssetManager.refsDriverBounded]]) and the commit flushes through the
+    * small-commit fast path — driver shard writer and tx log, zero Spark
+    * jobs. Larger repos stage the committed refs as one Spark batch and
+    * flush through the fused executor write.
+    */
   def rewriteManifests(repo: Repository, branch: String,
                        message: String = "rewrite_manifests"): String =
     graft.core.Trace.span("compact", "branch" -> branch) { h =>
@@ -425,12 +436,20 @@ object Compaction {
       id
     }
 
+  /** The driver route's bound, below the 250k-ref driver-memory bound the
+    * other metadata ops use: the driver flush is single-threaded, and on
+    * 4 cores it ties the fused executor write near 100k refs and loses
+    * by ~40% at 250k (2.0 s vs 1.46 s), while it halves the time at 50k.
+    */
+  private final val DriverMaxRefs = 100000L
+
   private def rewriteImpl(repo: Repository, branch: String,
                           message: String,
                           h: graft.core.Trace.Handle): String = {
-    // per-phase wall clocks (same discipline as push/merge): staging is
-    // lazy, so nearly all wall lands in ms_commit — a drifting compact
-    // entry is answerable from the span without a forensic rerun
+    // per-phase wall clocks (same discipline as push/merge): on the Spark
+    // route staging is lazy, so nearly all wall lands in ms_commit — a
+    // drifting compact entry is answerable from the span without a
+    // forensic rerun
     var tPhase = System.nanoTime()
     def phase(name: String): Unit = {
       val now = System.nanoTime()
@@ -442,12 +461,22 @@ object Compaction {
     if (arrays.isEmpty)
       throw new GraftException("no arrays to compact")
     h.set("arrays", arrays.size.toLong)
-    // ONE batched read + ONE staged batch for every array: a
-    // 1000-array compaction must not stage 1000 per-array plans
-    val refs = repo.assets
-      .committedRefs(session.base, arrays.map(_.id)).drop("split")
+    val parts = for {
+      n <- arrays
+      m <- session.base.manifests.getOrElse(n.id, Nil)
+    } yield (m, n.id)
+    repo.assets.refsDriverBounded(parts, DriverMaxRefs) match {
+      case Some(shards) =>
+        h.set("route", "driver")
+        shards.foreach(_.foreach(session.changeSet.setChunkRef))
+      case None =>
+        h.set("route", "spark")
+        // ONE batched read + ONE staged batch for every array: a
+        // 1000-array compaction must not stage 1000 per-array plans
+        session.changeSet.stageBatch(repo.assets
+          .committedRefs(session.base, arrays.map(_.id)).drop("split"))
+    }
     arrays.foreach(n => session.changeSet.rewrittenNodes += n.id)
-    session.changeSet.stageBatch(refs)
     phase("plan")
     val id = session.commit(message)
     phase("commit")

@@ -61,11 +61,17 @@ final class ChangeSet {
 
   /** Point edits with last-write-wins precedence applied driver-side
     * (valid whenever [[pointOnly]] — buffer order IS chronology).
+    * Memoized until the next mutation: a flush consults it several times,
+    * and compaction's driver route holds every committed ref here.
     */
-  def resolvedPointEdits: Seq[ChunkRef] = {
-    val m = mutable.LinkedHashMap[(String, Seq[Int]), ChunkRef]()
-    pointEdits.foreach { case (r, _) => m.put((r.node_id, r.coord), r) }
-    m.values.toSeq
+  def resolvedPointEdits: Seq[ChunkRef] = pointMemo match {
+    case Some((s, v)) if s == mutations => v
+    case _ =>
+      val m = mutable.LinkedHashMap[(String, Seq[Int]), ChunkRef]()
+      pointEdits.foreach { case (r, _) => m.put((r.node_id, r.coord), r) }
+      val v = m.values.toVector
+      pointMemo = Some((mutations, v))
+      v
   }
 
   def setChunkRef(ref: ChunkRef): Unit = {
@@ -87,6 +93,7 @@ final class ChangeSet {
   private var mutations = 0L
   private def touched(): Unit = { mutations += 1; resolvedMemo = None }
   private var resolvedMemo: Option[(Long, Option[Seq[ChunkRef]])] = None
+  private var pointMemo: Option[(Long, Seq[ChunkRef])] = None
   // exclusions.size rides the stamp as a safety net for any direct
   // mutation of the public buffer that bypassed addExclusion
   private def stamp: Long = mutations * 1000003L + exclusions.size

@@ -642,6 +642,37 @@ final class Session private[repo] (
       Seq("node_id"))
   }
 
+  /** [[refsBatch]]'s rows read on the driver with zero Spark jobs, as
+    * (path, ref) pairs: each array's committed shards
+    * ([[AssetManager.refsDriverBounded]]) under the session's point
+    * edits, tombstones dropped — the same precedence as
+    * [[overlayChanges]]. None when the Spark route must serve: the
+    * session holds staged batches or rebase exclusions (resolving them
+    * costs a job), or the arrays' committed refs sum past the driver
+    * bound.
+    */
+  private[graft] def refsBatchDriver(
+      paths: Seq[String]): Option[Seq[(String, ChunkRef)]] =
+    if (!changeSet.pointOnly) None
+    else {
+      val ns = paths.distinct.map(arrayNode)
+      val parts = for {
+        n <- ns if !changeSet.rewrittenNodes.contains(n.id)
+        m <- baseSnapshot.manifests.getOrElse(n.id, Nil)
+      } yield (m, n.id)
+      assets.refsDriverBounded(parts).map { shards =>
+        val committed = parts.map(_._2).zip(shards)
+          .groupMapReduce(_._1)(_._2)(_ ++ _)
+        val edits = changeSet.resolvedPointEdits.groupBy(_.node_id)
+        ns.flatMap { n =>
+          val own = edits.getOrElse(n.id, Nil)
+          val edited = own.iterator.map(r => r.coord: Seq[Int]).toSet
+          (committed.getOrElse(n.id, Nil).filterNot(r => edited(r.coord)) ++
+            own).filter(_.kind != ChunkRef.KindDelete).map(n.path -> _)
+        }
+      }
+    }
+
   /** [[refsBatch]] restricted per path to a chunk-coordinate bounding box
     * (inclusive per dim; paths absent from `boundsOf` are unpruned):
     * manifest splits whose extents cannot intersect a path's box are
@@ -1101,21 +1132,32 @@ final class Session private[repo] (
     // Eligible when every edit is a driver-held point edit, no shape
     // shrink/reindex forces a full rewrite, and each previous shard to
     // merge is small enough to hold in memory (Session.SmallCommitMaxShardRefs;
-    // see its scaladoc for the cost model). Everything else falls through
-    // to the Spark path.
+    // see its scaladoc for the cost model). Rewritten nodes qualify when
+    // the driver holds their rows (a point-only changeset — compaction's
+    // driver route): no committed shard merges into them, and their rows
+    // are committed refs the caller already read under that bound, so
+    // neither the staged-collect bound (SmallCommitMaxRefs) nor the
+    // per-shard bound applies to them. Everything else falls through to
+    // the Spark path.
+    val splitRuleOf = scala.collection.mutable.HashMap[String, (Int, Int)]()
     def splitOfRef(r: ChunkRef): Int = {
-      val (axis, sz) = cfg.splitFor(byId(r.node_id))
+      val (axis, sz) =
+        splitRuleOf.getOrElseUpdate(r.node_id, cfg.splitFor(byId(r.node_id)))
       (if (axis < r.coord.size) r.coord(axis) else 0) / sz
     }
+    val heldRewrite: Set[String] =
+      if (changeSet.pointOnly) fullRewrite else Set.empty
     lazy val pointRefs = (
       if (changeSet.pointOnly) changeSet.resolvedPointEdits
       else collectedRefs.getOrElse(Nil))
       .filter(r => changedIds.contains(r.node_id))
+    lazy val mergedRefs = pointRefs.filterNot(r => heldRewrite(r.node_id))
     val fastEligible = changedIds.nonEmpty &&
       (changeSet.pointOnly || collectedRefs.isDefined) &&
-      shrunkIds.isEmpty && changeSet.rewrittenNodes.isEmpty &&
-      pointRefs.nonEmpty && pointRefs.size <= Session.SmallCommitMaxRefs &&
-      pointRefs.groupBy(_.node_id).forall { case (id, refs) =>
+      shrunkIds.isEmpty && changeSet.rewrittenNodes.forall(heldRewrite) &&
+      (pointRefs.nonEmpty || heldRewrite.nonEmpty) &&
+      mergedRefs.size <= Session.SmallCommitMaxRefs &&
+      mergedRefs.groupBy(_.node_id).forall { case (id, refs) =>
         val touched = refs.map(splitOfRef).toSet
         baseSnapshot.manifests.getOrElse(id, Nil)
           .filter(m => touched.contains(m.split))
@@ -1131,7 +1173,8 @@ final class Session private[repo] (
       // then reads them from the warmed split cache. Default 1 keeps the
       // reference's serial behavior.
       val prevShards = byShard.keys.toSeq.flatMap { case (node, split) =>
-        baseSnapshot.manifests.getOrElse(node, Nil)
+        if (heldRewrite.contains(node)) Nil
+        else baseSnapshot.manifests.getOrElse(node, Nil)
           .filter(_.split == split).map(m => (m, node))
       }.distinct
       if (cfg.manifestFetchConcurrency > 1 && prevShards.size > 1) {
@@ -1149,7 +1192,8 @@ final class Session private[repo] (
       }
       val shards = byShard.flatMap { case (key @ (node, split), edits) =>
         val editedCoords = edits.map(r => (r.coord: Seq[Int])).toSet
-        val prev = baseSnapshot.manifests.getOrElse(node, Nil)
+        val prev = (if (heldRewrite.contains(node)) Nil
+          else baseSnapshot.manifests.getOrElse(node, Nil))
           .filter(_.split == split)
           .flatMap(m => assets.shardRefsDriver(m, node))
           .filterNot(r => editedCoords.contains(r.coord))
@@ -1597,6 +1641,9 @@ object Session {
     * Spark path and interactive commits went 33 ms -> 930 ms. Memory, not
     * time, sets the ceiling: refs are ~100 B driver-side, so 250 k keeps
     * the transient under ~25 MB against the default 8 GiB driver heap.
+    * The driver-sized metadata ops compare their TOTAL refs against the
+    * same bound ([[graft.meta.AssetManager.refsDriverBounded]]; compaction
+    * uses a lower one, see `Compaction.DriverMaxRefs`).
     */
-  private[repo] val SmallCommitMaxShardRefs = 250000
+  private[graft] val SmallCommitMaxShardRefs = 250000
 }

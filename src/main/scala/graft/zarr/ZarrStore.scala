@@ -218,35 +218,16 @@ final class ZarrStore(val session: Session) {
   def listKeysDf(prefixFilter: String): DataFrame = {
     val spark = session.repo.spark
     import spark.implicits._
-    val metaKeys = session.nodes.map { n =>
-      (ZarrKey.format(Metadata(n.path)),
-        metadataDocument(n).getBytes.length.toLong)
-    }
-    val metaDf = spark.createDataset(metaKeys).toDF("key", "size")
-    val pf = if (prefixFilter.isEmpty) "" else prefixFilter + "/"
-    def intersects(n: graft.meta.NodeSpec): Boolean = pf.isEmpty || {
-      val nPrefix = (NodePath.normalize(n.path) match {
-        case "/" => ChunkMarker
-        case np => np.stripPrefix("/") + "/" + ChunkMarker
-      }) + "/"
-      nPrefix.startsWith(pf) || pf.startsWith(nPrefix)
-    }
-    val arrays = session.nodes.filter(n => n.isArray && intersects(n))
+    val metaDf = spark.createDataset(metadataKeys).toDF("key", "size")
+    val arrays = arraysUnder(prefixFilter)
     // ONE batched refs relation for every array, not a per-array
     // refs() union — a 100-array union is a 100-leg plan Catalyst
     // spends tens of seconds analyzing (the Session.refsBatch rationale)
     val chunkDf =
       if (arrays.isEmpty) None
       else {
-        val prefixByPath = arrays.map { n =>
-          val prefix = (NodePath.normalize(n.path) match {
-            case "/" => ChunkMarker
-            case np => np.stripPrefix("/") + "/" + ChunkMarker
-          }) + "/"
-          (n.path, prefix)
-        }
-        val pDf = broadcast(
-          spark.createDataset(prefixByPath).toDF("path", "prefix"))
+        val pDf = broadcast(arrays.map(n => (n.path, chunkPrefix(n)))
+          .toDF("path", "prefix"))
         Some(session.refsBatch(arrays.map(_.path))
           .join(pDf, Seq("path"))
           .select(
@@ -256,37 +237,121 @@ final class ZarrStore(val session: Session) {
     chunkDf.map(metaDf.unionByName(_)).getOrElse(metaDf)
   }
 
-  /** `list_prefix` (store.rs:580) as a '''streaming''' iterator: ordered
-    * partitions surface one at a time (`toLocalIterator`), so a
-    * 500 M-chunk array never materializes its key list on the driver.
+  /** [[listKeysDf]]`(prefixFilter)` built on the driver, row for row (the
+    * same key format and `coalesce(length, 0)` size), from the node specs
+    * plus [[Session.refsBatchDriver]]'s effective refs. None when that
+    * read routes to Spark: staged batches in the session, or the
+    * intersecting arrays' committed refs past the driver bound.
+    */
+  private def listKeysDriver(
+      prefixFilter: String): Option[Seq[(String, Long)]] = {
+    val arrays = arraysUnder(prefixFilter)
+    val chunks =
+      if (arrays.isEmpty) Some(Nil)
+      else session.refsBatchDriver(arrays.map(_.path))
+    chunks.map { rows =>
+      val prefixOf = arrays.map(n => n.path -> chunkPrefix(n)).toMap
+      metadataKeys ++ rows.map { case (path, r) =>
+        (prefixOf(path) + r.coord.mkString("/"), r.length)
+      }
+    }
+  }
+
+  private def metadataKeys: Seq[(String, Long)] = session.nodes.map { n =>
+    (ZarrKey.format(Metadata(n.path)),
+      metadataDocument(n).getBytes.length.toLong)
+  }
+
+  /** `<path>/c/` — the key prefix of an array's chunks. */
+  private def chunkPrefix(n: NodeSpec): String =
+    (NodePath.normalize(n.path) match {
+      case "/" => ChunkMarker
+      case np => np.stripPrefix("/") + "/" + ChunkMarker
+    }) + "/"
+
+  /** Arrays whose chunk-key space intersects `prefixFilter` (every array
+    * when it is empty).
+    */
+  private def arraysUnder(prefixFilter: String): Seq[NodeSpec] = {
+    val pf = if (prefixFilter.isEmpty) "" else prefixFilter + "/"
+    session.nodes.filter(n => n.isArray && (pf.isEmpty || {
+      val nPrefix = chunkPrefix(n)
+      nPrefix.startsWith(pf) || pf.startsWith(nPrefix)
+    }))
+  }
+
+  /** Run a listing over the keys under `prefix`: on the driver when
+    * [[listKeysDriver]] serves it, else over [[listKeysDf]] — recording
+    * the route on the caller's span. The callers' row filters keep only
+    * keys under `prefix`, which no pruned array holds, so pruning never
+    * changes a listing.
+    */
+  private def routed[T](h: graft.core.Trace.Handle, prefix: String)(
+      driver: Seq[(String, Long)] => T)(spark: DataFrame => T): T =
+    listKeysDriver(prefix) match {
+      case Some(keys) => h.set("route", "driver"); driver(keys)
+      case None => h.set("route", "spark"); spark(listKeysDf(prefix))
+    }
+
+  /** Keys in Spark's string order (unsigned UTF-8 bytes), so both routes
+    * list alike. UTF-16 order is the same order unless a surrogate pair
+    * meets a char at or above U+E000, so only keys holding surrogates pay
+    * the UTF-8 comparison.
+    */
+  private def sparkOrdered(keys: Iterator[String]): Seq[String] = {
+    val ks = keys.toVector
+    if (ks.forall(_.forall(c => !Character.isSurrogate(c)))) ks.sorted
+    else ks.map(k => (org.apache.spark.unsafe.types.UTF8String.fromString(k), k))
+      .sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
+  }
+
+  /** `list_prefix` (store.rs:580) as an iterator. The Spark route
+    * '''streams''': ordered partitions surface one at a time
+    * (`toLocalIterator`), so a 500 M-chunk array never materializes its
+    * key list on the driver.
     */
   def listPrefixIterator(prefix: String): Iterator[String] = {
     import scala.jdk.CollectionConverters._
     val norm = prefix.stripPrefix("/")
-    listKeysDf().filter(
-        if (norm.isEmpty) lit(true)
-        else col("key").startsWith(norm + "/") || col("key") === norm)
-      .select("key").orderBy("key")
-      .toLocalIterator().asScala.map(_.getString(0))
+    graft.core.Trace.span("zarr.list", "prefix" -> norm) { h =>
+      routed(h, norm) { keys =>
+        sparkOrdered(keys.iterator.map(_._1).filter(k =>
+          norm.isEmpty || k.startsWith(norm + "/") || k == norm)).iterator
+      } { df =>
+        df.filter(
+            if (norm.isEmpty) lit(true)
+            else col("key").startsWith(norm + "/") || col("key") === norm)
+          .select("key").orderBy("key")
+          .toLocalIterator().asScala.map(_.getString(0))
+      }
+    }
   }
 
   /** `list_prefix` as a Seq — tool-scale convenience over the iterator. */
   def listPrefix(prefix: String): Seq[String] =
     listPrefixIterator(prefix).toSeq
 
-  /** `list_dir` (store.rs:660): direct children names under a prefix
-    * (bounded by the child count after the distributed distinct).
+  /** `list_dir` (store.rs:660): the sorted distinct names directly under
+    * a prefix. The driver route derives them from the driver key list;
+    * the Spark route runs a distributed distinct, so only the child names
+    * reach the driver.
     */
   def listDir(prefix: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val norm = prefix.stripPrefix("/").stripSuffix("/")
     val base = if (norm.isEmpty) "" else norm + "/"
-    listKeysDf()
-      .filter(if (base.isEmpty) lit(true) else col("key").startsWith(base))
-      .select(substring_index(expr(
-        s"substring(key, ${base.length + 1})"), "/", 1).as("child"))
-      .distinct().orderBy("child")
-      .toLocalIterator().asScala.map(_.getString(0)).toSeq
+    graft.core.Trace.span("zarr.list", "prefix" -> norm) { h =>
+      routed(h, norm) { keys =>
+        sparkOrdered(keys.iterator.map(_._1).filter(_.startsWith(base))
+          .map(_.substring(base.length).takeWhile(_ != '/')).distinct)
+      } { df =>
+        df.filter(if (base.isEmpty) lit(true) else col("key").startsWith(base))
+          .select(substring_index(expr(
+            s"substring(key, ${base.length + 1})"), "/", 1).as("child"))
+          .distinct().orderBy("child")
+          .toLocalIterator().asScala.map(_.getString(0)).toSeq
+      }
+    }
   }
 
   /** `getsize` (store.rs:700). */
@@ -301,12 +366,20 @@ final class ZarrStore(val session: Session) {
           else r.length)
     }
 
-  /** `getsize_prefix` (store.rs:707): one aggregation over the key frame. */
+  /** `getsize_prefix` (store.rs:707): the summed sizes of the keys under
+    * a prefix — a driver sum, or one aggregation over the key frame.
+    */
   def getSizePrefix(prefix: String): Long = {
     val norm = prefix.stripPrefix("/")
-    val row = listKeysDf(norm).filter(
-        if (norm.isEmpty) lit(true) else col("key").startsWith(norm + "/"))
-      .agg(coalesce(sum("size"), lit(0L))).head()
-    row.getLong(0)
+    graft.core.Trace.span("zarr.getsize", "prefix" -> norm) { h =>
+      routed(h, norm) { keys =>
+        keys.iterator.filter(k => norm.isEmpty || k._1.startsWith(norm + "/"))
+          .map(_._2).sum
+      } { df =>
+        df.filter(
+            if (norm.isEmpty) lit(true) else col("key").startsWith(norm + "/"))
+          .agg(coalesce(sum("size"), lit(0L))).head().getLong(0)
+      }
+    }
   }
 }

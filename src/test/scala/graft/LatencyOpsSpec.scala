@@ -162,8 +162,10 @@ class LatencyOpsSpec extends SparkTestBase {
       graft.meta.ChunkRef.nativeRef("nX", Seq(i), s"id$i", 0L, i.toLong))
     val df = spark.createDataset(refs)(
       org.apache.spark.sql.Encoders.product[graft.meta.ChunkRef])
-      .toDF().withColumn("split", lit(0))
-    val refsMap = repo.assets.writeManifest("mRANGED", df, Map("nX" -> 1))
+      .toDF().withColumn("split", lit(0)).withColumn("_batch", lit(0.0))
+    // the executor (fused) route: the shard is written inside a Spark task
+    val refsMap = repo.assets.writeManifestFused("mRANGED", df,
+      Map("nX" -> Seq(300)))
     val files = repo.store.list("manifests/mRANGED/node_id=nX/split=0/")
       .filter(_.key.endsWith(".parquet"))
     assert(files.nonEmpty)

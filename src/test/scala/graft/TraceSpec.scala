@@ -141,10 +141,9 @@ class TraceSpec extends SparkTestBase {
   test("span names are stable (docs/observability.md contract)") {
     val documented = Set("commit", "flush", "merge", "push", "gc",
       "expire", "compact", "scan.plan", "scan.spj.error",
-      "rechunk", "downsample", "slice",
+      "rechunk", "downsample", "slice", "fsck", "zarr.list", "zarr.getsize",
       // flush-phase breakdown spans (r16 optimization round)
-      "flush.splits", "flush.finalize", "manifest.write",
-      "manifest.extents")
+      "flush.splits", "flush.finalize", "manifest.write")
     val srcDir = java.nio.file.Paths.get("src/main/scala")
     val spanRe = """Trace\.span\("([^"]+)"""".r
     val inCode = scala.collection.mutable.Set[String]()

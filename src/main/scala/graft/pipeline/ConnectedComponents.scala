@@ -116,34 +116,40 @@ object ConnectedComponents {
       .groupBy("id").agg(min("cluster_id").as("cluster_id"))
   }
 
-  /** Single-task union-find over an edge set known to fit one partition:
-    * path-compressed, min-id roots, one pass.
-    */
+  /** Single-task union-find over an edge set known to fit one partition. */
   private def localFinish(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     edges.select(col("a"), col("b")).as[(Long, Long)]
       .coalesce(1)
-      .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap[Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (c != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        it.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-        val ks = parent.keys.toArray
-        ks.iterator.map(k => (k, find(k)))
-      }
+      .mapPartitions(it => unionFind(it).iterator)
       .toDF("id", "cluster_id")
+  }
+
+  /** Union-find over an edge iterator: path-compressed, min-id roots, one
+    * pass. Returns every endpoint's component label (the component's
+    * minimum id) — the single-task finish above and the dedup driver
+    * route ([[Dedup.nearDupClusters]]) both solve components here.
+    */
+  private[pipeline] def unionFind(
+      edges: Iterator[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
+    val parent = scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    parent.keys.toArray.foreach(k => parent(k) = find(k))
+    parent
   }
 }

@@ -1,15 +1,51 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.core.Trace
 
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB shape: exact dedup is one hash-shuffle; the near-dup family
   * (MinHash-LSH, SimHash, n-gram Jaccard, embedding cosine) all reduce the
   * O(n²) pair space to a band/bucket join before any pairwise work, so the
   * shuffle volume is O(n · bands), never O(n²).
+  *
+  * '''Route rule''' of [[minhashCandidates]], [[ngramJaccardPairsLsh]] and
+  * [[nearDupClusters]]: each call first collects, under a bound, the
+  * per-document rows its band join needs (`doc_id`, shingle-set size,
+  * signature, band bucket keys, plus the shingles for the verify) with
+  * `limit(DriverMaxDocs + 1)`, when the call is made. A corpus of at
+  * most `DriverMaxDocs` (50,000) rows with an integral `doc_id`, whose
+  * band buckets share at most `DriverMaxPairs` (200,000) row pairs,
+  * takes the DRIVER route: the band join, the distinct and the
+  * component solve run on the driver, while the per-pair rules
+  * (estimated Jaccard, size-ratio cut, exact verify) stay the Spark
+  * route's own column expressions, evaluated over a local relation. The
+  * result is a local DataFrame; the call runs one or two Spark jobs (the
+  * collect) and its result none. Any other corpus takes the SPARK route
+  * (bucket self-join over [[stageCached]] intermediates, lazy as
+  * before). Both routes build every per-row value (shingles, hashes,
+  * signature, band key, `portable`) with the same expressions
+  * ([[signed]]), so they return identical rows.
   */
 object Dedup {
+
+  /** Corpus rows the driver route takes (see the route rule above). At
+    * 50,000 documents of 50 words (`local[4]`, 4 vCPUs) the driver route
+    * still ran each operator 1.5–4× faster than the Spark route.
+    */
+  private final val DriverMaxDocs = 50000
+
+  /** Band-sharing row pairs (Σ k(k−1)/2 over the bucket groups, before
+    * the distinct) the driver route enumerates; past it the call takes
+    * the Spark route. Timed on the same box: at 200,000 (224 identical
+    * documents) the driver route still won every operator; at 1,000,000
+    * it ran 2× slower, as the per-pair expressions evaluate
+    * interpreted on one thread.
+    */
+  private final val DriverMaxPairs = 200000L
 
   /** Intermediates persisted by the near-dup builders (bucket/block/posting
     * relations referenced by both sides of a self-join). They must outlive
@@ -138,84 +174,199 @@ object Dedup {
   def minhashCandidates(docs: DataFrame, textCol: String = "text",
                         shingleSize: Int = 3, numHashes: Int = 32,
                         bands: Int = 8,
-                        portable: Boolean = false): DataFrame = {
+                        portable: Boolean = false): DataFrame =
+    Trace.span("dedup.minhash") { h =>
+      val sg = signed(docs, textCol, shingleSize, numHashes, bands,
+        portable, withShingles = false)
+      driverBandPairs(sg, Seq("sig"), h) match {
+        case Some(b) =>
+          local(withEstimate(b.frame(b.pairs, Seq("sig")), numHashes, Nil),
+            distinct = true)
+        case None =>
+          withEstimate(bandJoin(sg, Seq("sig")), numHashes, Nil).distinct()
+      }
+    }
+
+  /** The per-document rows both routes band: `doc_id`, the shingle-set
+    * size `sz`, the MinHash signature `sig`, one bucket key per band
+    * (`keys`) and, for the exact verify, the shingles `sh`. Every
+    * per-row rule (shingling, hashing, signature, band key, `portable`)
+    * has this one definition. The shingle array is its own column, so
+    * the signature fold walks a materialized array (CollapseProject
+    * keeps multi-referenced non-cheap expressions staged).
+    */
+  private def signed(docs: DataFrame, textCol: String, shingleSize: Int,
+                     numHashes: Int, bands: Int, portable: Boolean,
+                     withShingles: Boolean): DataFrame = {
     val rows = numHashes / bands
-    // stage shingle hashes as their own column so the signature fold walks
-    // a materialized array (CollapseProject keeps multi-referenced
-    // non-cheap expressions staged)
     val shingleHash: Column => Column =
       if (portable) portableTokenHash else xxhash64(_)
     val coeffs =
       if (portable) portableMinhashCoeffs(numHashes)
       else minhashCoeffs(numHashes)
-    val sig = docs
-      .select(col("doc_id"),
-        transform(shingles(col(textCol), shingleSize),
-          s => shingleHash(s)).as("_sh"))
-      .select(col("doc_id"),
-        graft.functions.VectorFunctions.minhash_signature(col("_sh"),
-          coeffs, MinhashPrime).as("sig"))
-    // materialize once (registered for releaseCaches): both self-join sides
-    // would otherwise re-evaluate the whole shingle→minhash expression tree
-    val bucketOf: Column => Column =
-      if (portable) b => concat_ws("_",
-        slice(col("sig"), b * rows + 1, lit(rows)))
-      else b => xxhash64(concat_ws("_",
-        slice(col("sig"), b * rows + 1, lit(rows))))
-    val buckets = stageCached(sig.select(col("doc_id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), bucketOf)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"))
-    val a = buckets.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-    val b = buckets.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => x === y), b => b)).cast("double") /
-          lit(numHashes.toDouble)).as("est_jaccard"))
-      .distinct()
+    val bucketOf: Column => Column = { b =>
+      val band = concat_ws("_", slice(col("sig"), b * rows + 1, lit(rows)))
+      if (portable) band else xxhash64(band)
+    }
+    docs.select(col("doc_id"), shingles(col(textCol), shingleSize).as("sh"))
+      .select(col("doc_id"), col("sh"), size(col("sh")).as("sz"),
+        graft.functions.VectorFunctions.minhash_signature(
+          transform(col("sh"), s => shingleHash(s)), coeffs,
+          MinhashPrime).as("sig"))
+      .select(Seq(col("doc_id"), col("sz"), col("sig"),
+        transform(sequence(lit(0), lit(bands - 1)), bucketOf).as("keys")) ++
+        (if (withShingles) Seq(col("sh")) else Nil): _*)
   }
 
-  /** [[minhashCandidates]]'s default (seeded xxhash) construction over a
-    * PRECOMPUTED `(doc_id, sh)` shingle frame — the LSH verify path
-    * shares one staged shingle pass between banding and exact verify
-    * (identical signatures/buckets/pairs to calling minhashCandidates on
-    * the raw docs; only the shingle computation is shared).
+  /** The Spark route's band join: rows sharing a `(band, bucket)` key
+    * meet in one equi-join (shuffle O(n·bands)), `doc_a < doc_b`, with
+    * each `carry` column suffixed `_a`/`_b`. The exploded buckets are
+    * materialized once (registered for releaseCaches): both self-join
+    * sides would otherwise re-evaluate the shingle→minhash tree.
     */
-  private def minhashCandidatesFromShingles(withSh: DataFrame,
-      numHashes: Int, bands: Int): DataFrame = {
-    val rows = numHashes / bands
-    val sig = withSh
-      .select(col("doc_id"), col("sz"),
-        graft.functions.VectorFunctions.minhash_signature(
-          transform(col("sh"), s => xxhash64(s)),
-          minhashCoeffs(numHashes), MinhashPrime).as("sig"))
-    // `sz` (shingle-set size) rides along so the LSH verify stage can
-    // size-ratio-prefilter candidate pairs BEFORE re-attaching the heavy
-    // shingle arrays (r17, guide §3.2: reduce the join input). sz is a
-    // function of doc_id, so carrying it through the pair distinct cannot
-    // change which (doc_a, doc_b) pairs come out.
-    val buckets = stageCached(sig.select(col("doc_id"), col("sz"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat_ws("_",
-          slice(col("sig"), b * rows + 1, lit(rows)))))))
+  private def bandJoin(sg: DataFrame, carry: Seq[String]): DataFrame = {
+    val buckets = stageCached(sg.select(Seq(col("doc_id")) ++
+        carry.map(col) :+ posexplode(col("keys")): _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"))
-    val a = buckets.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-      col("sz").as("sz_a"))
-    val b = buckets.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-      col("sz").as("sz_b"))
-    a.join(b, Seq("band", "bucket"))
+    def side(s: String) = buckets.select(Seq(col("band"), col("bucket"),
+      col("doc_id").as(s"doc_$s")) ++ carry.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), Seq("band", "bucket"))
       .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("sz_a"), col("sz_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => x === y), b => b)).cast("double") /
-          lit(numHashes.toDouble)).as("est_jaccard"))
-      .distinct()
   }
+
+  /** Doc pairs with their estimated Jaccard (fraction of equal minhashes)
+    * and the `carry` columns of both sides.
+    */
+  private def withEstimate(pairs: DataFrame, numHashes: Int,
+                           carry: Seq[String]): DataFrame =
+    pairs.select(Seq(col("doc_a"), col("doc_b")) ++
+      carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))) :+
+      (size(filter(zip_with(col("sig_a"), col("sig_b"),
+        (x, y) => x === y), b => b)).cast("double") /
+        lit(numHashes.toDouble)).as("est_jaccard"): _*)
+
+  /** The driver route's first step, shared by the three LSH operators:
+    * the bounded collect of `doc_id`, `carry` and `keys` from `sg`, then
+    * the band join on the driver. `None` = take the Spark route (see the
+    * route rule); sets the span's `route`, `docs` and `pairs`.
+    */
+  private def driverBandPairs(sg: DataFrame, carry: Seq[String],
+      h: Trace.Handle): Option[Banded] = {
+    val integral = sg.schema("doc_id").dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    val picked =
+      if (!integral) None
+      else {
+        val sel = sg.select((Seq("doc_id") ++ carry :+ "keys").map(col): _*)
+        val rows = sel.limit(DriverMaxDocs + 1).collect()
+        h.set("docs", rows.length.toLong)
+        if (rows.length > DriverMaxDocs) None
+        else bandPairsDriver(rows, carry.size + 1, h)
+          .map(Banded(sg.sparkSession, rows, sel.schema, _))
+      }
+    h.set("route", if (picked.isDefined) "driver" else "spark")
+    picked
+  }
+
+  /** Band join over collected rows: row-index pairs `(i, j)` sharing a
+    * `(band, bucket)` key with `doc(i) < doc(j)`, each once. `None` when
+    * the bucket groups share more than `DriverMaxPairs` row pairs.
+    */
+  private def bandPairsDriver(rows: Array[Row], keysAt: Int,
+                              h: Trace.Handle): Option[Array[(Int, Int)]] = {
+    val groups = scala.collection.mutable.HashMap[(Int, Any),
+      scala.collection.mutable.ArrayBuffer[Int]]()
+    rows.indices.foreach { i =>
+      // a null doc_id or key never meets the join/filter of the Spark route
+      if (!rows(i).isNullAt(0) && !rows(i).isNullAt(keysAt))
+        rows(i).getSeq[Any](keysAt).iterator.zipWithIndex.foreach {
+          case (k, band) if k != null =>
+            groups.getOrElseUpdate((band, k),
+              scala.collection.mutable.ArrayBuffer[Int]()) += i
+          case _ =>
+        }
+    }
+    val shared = groups.valuesIterator.map(g => g.size.toLong *
+      (g.size - 1) / 2).sum
+    h.set("pairs", shared)
+    if (shared > DriverMaxPairs) return None
+    val id = rows.map(r =>
+      if (r.isNullAt(0)) 0L else r.getAs[Number](0).longValue)
+    val seen = scala.collection.mutable.HashSet[Long]()
+    val out = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
+    for (g <- groups.valuesIterator; x <- g.indices; y <- x + 1 until g.size) {
+      val (i, j) = (g(x), g(y))
+      if (id(i) != id(j)) {
+        val (lo, hi) = if (id(i) < id(j)) (i, j) else (j, i)
+        if (seen.add(lo.toLong << 32 | hi)) out += ((lo, hi))
+      }
+    }
+    Some(out.toArray)
+  }
+
+  /** The driver route's collected rows (`doc_id`, carried columns,
+    * `keys`) and their band-sharing row-index pairs.
+    */
+  private final case class Banded(spark: SparkSession, rows: Array[Row],
+                                  schema: StructType,
+                                  pairs: Array[(Int, Int)]) {
+    /** Row pairs as a local relation named like the Spark band join's
+      * output: `doc_a`, `doc_b`, then each `carry` column suffixed `_a`,
+      * then `_b`. Column expressions over it run on the driver (Spark
+      * folds projections and filters of a local relation without a job).
+      */
+    def frame(of: Iterable[(Int, Int)], carry: Seq[String]): DataFrame = {
+      val at = carry.map(schema.fieldIndex)
+      val fields = Seq(schema("doc_id").copy(name = "doc_a"),
+        schema("doc_id").copy(name = "doc_b")) ++ Seq("a", "b").flatMap(s =>
+          carry.map(c => schema(c).copy(name = s"${c}_$s")))
+      val out = of.iterator.map { case (i, j) =>
+        Row.fromSeq(Seq(rows(i).get(0), rows(j).get(0)) ++
+          at.map(rows(i).get) ++ at.map(rows(j).get))
+      }.toSeq
+      spark.createDataFrame(out.asJava, StructType(fields))
+    }
+  }
+
+  /** Evaluate `df` over a local relation (no Spark job) into a local
+    * DataFrame, dropping duplicate rows when `distinct` (as the Spark
+    * route's `distinct` does).
+    */
+  private def local(df: DataFrame, distinct: Boolean = false): DataFrame = {
+    val rows = df.collect()
+    df.sparkSession.createDataFrame(
+      (if (distinct) rows.distinct else rows).toSeq.asJava, df.schema)
+  }
+
+  /** Exact Jaccard of two distinct shingle arrays given their sizes, with
+    * ONE `array_intersect`: the intersection size is bound to a lambda
+    * variable, so a filter on this column compares the very value a row
+    * reports. (The cross-multiplied form `c·(1+t) ≥ t·(|A|+|B|)` it
+    * replaces is a different double: it dropped pairs reporting exactly
+    * t for t = 0.2, 0.4, 0.8 and 0.9 — 9 of 10 shingles shared at
+    * t = 0.9 gave 17.099999999999998 < 17.1.)
+    */
+  private def jaccard(shA: Column, shB: Column, szA: Column,
+                      szB: Column): Column =
+    element_at(transform(array(size(array_intersect(shA, shB))),
+      c => c.cast("double") / (szA + szB - c).cast("double")), 1)
+
+  /** Size-ratio necessary condition: jaccard(A,B) ≤ min(|A|,|B|) /
+    * max(|A|,|B|) (|A∩B| ≤ min, |A∪B| ≥ max), so a pair with
+    * min < threshold·max can never verify. The ≥ keeps every boundary
+    * pair, so cutting here never changes the output.
+    */
+  private def sizeRatioOk(threshold: Double): Column =
+    least(col("sz_a"), col("sz_b")).cast("double") >=
+      lit(threshold) * greatest(col("sz_a"), col("sz_b"))
+
+  /** The exact verify of candidate pairs carrying `sh`/`sz` per side. */
+  private def verified(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("doc_a"), col("doc_b"), jaccard(col("sh_a"),
+        col("sh_b"), col("sz_a"), col("sz_b")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
 
   /** Engine-portable 64-bit token hash: two 32-bit FNV-1a folds over
     * code points packed (hi << 32) | lo — plain integer arithmetic any
@@ -305,13 +456,10 @@ object Dedup {
     a.join(b, Seq("block", "g"))
       .filter(col("doc_a") < col("doc_b"))
       // size-ratio necessary condition (r17, guide §3, same cut as the
-      // LSH verify): jaccard ≤ min(|A|,|B|)/max(|A|,|B|), so pairs with
-      // min < threshold·max can never pass the final jaccard filter —
-      // dropping their posting-match rows HERE (Catalyst pushes this
-      // into the join condition) shrinks the pair aggregation's input;
-      // the ≥ keeps every boundary pair, so the output is bit-identical
-      .filter(least(col("sz_a"), col("sz_b")).cast("double") >=
-        lit(threshold) * greatest(col("sz_a"), col("sz_b")).cast("double"))
+      // LSH verify): dropping hopeless posting-match rows HERE (Catalyst
+      // pushes this into the join condition) shrinks the pair
+      // aggregation's input without changing the output
+      .filter(sizeRatioOk(threshold))
       .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
       .agg(count(lit(1)).as("common"))
       .select(col("doc_a"), col("doc_b"),
@@ -429,43 +577,37 @@ object Dedup {
     */
   def ngramJaccardPairsLsh(docs: DataFrame, textCol: String = "text",
                            n: Int = 3, threshold: Double = 0.5,
-                           numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    // ONE shingle pass feeds both the banding (via hashed signatures) and
-    // the exact-Jaccard verify sides (r16: the shingler ran 3× per call —
-    // once inside minhashCandidates, once per verify join side)
-    val withSh = stageCached(docs.select(col("doc_id"),
-        shingles(col(textCol), n).as("sh"))
-      .withColumn("sz", size(col("sh"))))
-    // size-ratio prefilter (r17, guide §3): jaccard(A,B) ≤ min/max of the
-    // set sizes (|A∩B| ≤ min, |A∪B| ≥ max), so any pair with
-    // min < threshold·max fails the final jaccard ≥ threshold filter —
-    // dropping it HERE is a pure necessary-condition cut that shrinks the
-    // verify join's input before either shingle array is shipped. The ≥
-    // keeps every boundary pair, so the output is bit-identical.
-    val candidates = minhashCandidatesFromShingles(withSh, numHashes, bands)
-      .filter(least(col("sz_a"), col("sz_b")).cast("double") >=
-        lit(threshold) * greatest(col("sz_a"), col("sz_b")))
-      .select("doc_a", "doc_b")
-    val a = withSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
-      col("sz").as("sz_a"))
-    val b = withSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
-      col("sz").as("sz_b"))
-    // stage the intersection size once — it is the dominant per-pair cost
-    // of the verify stage. The threshold filter is the single-reference
-    // form c·(1+t) ≥ t·(|A|+|B|) (⇔ c/(|A|+|B|−c) ≥ t, exact for t with
-    // a short binary expansion like 0.5): a jaccard-form filter would be
-    // pushed into the join condition with `common` re-expanded, costing a
-    // SECOND array_intersect per candidate pair.
-    candidates.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-      .withColumn("common",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .filter(col("common") * lit(1.0 + threshold) >=
-        lit(threshold) * (col("sz_a") + col("sz_b")))
-      .select(col("doc_a"), col("doc_b"),
-        (col("common") /
-          (col("sz_a") + col("sz_b") - col("common")).cast("double"))
-          .as("jaccard"))
-  }
+                           numHashes: Int = 32, bands: Int = 8): DataFrame =
+    Trace.span("dedup.lsh_verify") { h =>
+      // ONE shingle pass feeds both the banding (via hashed signatures)
+      // and the exact-Jaccard verify sides. `sz` rides along so the
+      // size-ratio cut drops candidate pairs BEFORE the heavy shingle
+      // arrays are re-attached.
+      val sg = signed(docs, textCol, n, numHashes, bands, portable = false,
+        withShingles = true)
+      driverBandPairs(sg, Seq("sz", "sig", "sh"), h) match {
+        case Some(b) =>
+          val candidates = withEstimate(b.frame(b.pairs, Seq("sz", "sig")),
+            numHashes, Seq("sz")).filter(sizeRatioOk(threshold))
+            .collect().distinct
+          // the verify joins each candidate back to EVERY row of its two
+          // doc_ids, as the Spark route's joins on doc_id do
+          val rowsOf = b.rows.indices.groupBy(i => b.rows(i).get(0))
+          local(verified(b.frame(candidates.toSeq.flatMap(c =>
+            for (i <- rowsOf(c.get(0)); j <- rowsOf(c.get(1))) yield (i, j)),
+            Seq("sh", "sz")), threshold))
+        case None =>
+          val staged = stageCached(sg)
+          val candidates = withEstimate(bandJoin(staged, Seq("sz", "sig")),
+              numHashes, Seq("sz")).distinct()
+            .filter(sizeRatioOk(threshold))
+            .select("doc_a", "doc_b")
+          def side(s: String) = staged.select(col("doc_id").as(s"doc_$s"),
+            col("sh").as(s"sh_$s"), col("sz").as(s"sz_$s"))
+          verified(candidates.join(side("a"), Seq("doc_a"))
+            .join(side("b"), Seq("doc_b")), threshold)
+      }
+    }
 
   /** Near-duplicate *clusters*: MinHash-LSH candidate pairs (filtered by
     * estimated Jaccard) collapsed into connected components, so that
@@ -473,21 +615,39 @@ object Dedup {
     * never a candidate pair. Returns one row per input doc:
     * `(doc_id, cluster_id)` with `cluster_id` = min doc_id of the
     * component (singletons label themselves). Survivors of the dedup are
-    * `doc_id == cluster_id`.
+    * `doc_id == cluster_id`. On the driver route the components are
+    * solved by [[ConnectedComponents.unionFind]].
     */
   def nearDupClusters(docs: DataFrame, textCol: String = "text",
                       shingleSize: Int = 3, numHashes: Int = 32,
                       bands: Int = 8,
-                      minEstJaccard: Double = 0.5): DataFrame = {
-    val pairs = minhashCandidates(docs, textCol, shingleSize, numHashes,
-      bands).filter(col("est_jaccard") >= minEstJaccard)
-    val labels = ConnectedComponents.run(pairs)
-      .withColumnRenamed("id", "doc_id")
-    docs.select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
+                      minEstJaccard: Double = 0.5): DataFrame =
+    Trace.span("dedup.clusters") { h =>
+      val sg = signed(docs, textCol, shingleSize, numHashes, bands,
+        portable = false, withShingles = false)
+      def labelled(withLabels: DataFrame) = withLabels.select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-  }
+      driverBandPairs(sg, Seq("sig"), h) match {
+        case Some(b) =>
+          def id(r: Row, i: Int) = r.getAs[Number](i).longValue
+          val label = ConnectedComponents.unionFind(
+            withEstimate(b.frame(b.pairs, Seq("sig")), numHashes, Nil)
+              .filter(col("est_jaccard") >= minEstJaccard)
+              .collect().iterator.map(r => (id(r, 0), id(r, 1))))
+          val rows = b.rows.toSeq.map(r => Row(r.get(0),
+            if (r.isNullAt(0)) null
+            else label.get(id(r, 0)).map(java.lang.Long.valueOf).orNull))
+          local(labelled(docs.sparkSession.createDataFrame(rows.asJava,
+            StructType(Seq(b.schema("doc_id"),
+              StructField("cluster_id", LongType))))))
+        case None =>
+          val pairs = withEstimate(bandJoin(sg, Seq("sig")), numHashes, Nil)
+            .distinct().filter(col("est_jaccard") >= minEstJaccard)
+          labelled(docs.select(col("doc_id")).join(
+            ConnectedComponents.run(pairs).withColumnRenamed("id", "doc_id"),
+            Seq("doc_id"), "left"))
+      }
+    }
 
   /** Embedding-cosine near-duplicates: exact all-pairs with cosine ≥
     * threshold, as a '''block-matrix similarity join''' — never a row-pair
@@ -586,17 +746,13 @@ object Dedup {
       .join(vs, Seq("band", "bucket"))
       .filter(col("doc_a") =!= col("doc_b"))
       // same size-ratio necessary-condition cut as ngramJaccardPairsLsh
-      // (r17): pairs with min-size < threshold·max-size cannot pass the
-      // jaccard filter below — drop them before the array-carrying
-      // distinct and the intersect
-      .filter(least(col("sz_a"), col("sz_b")).cast("double") >=
-        lit(threshold) * greatest(col("sz_a"), col("sz_b")))
+      // (r17): drop hopeless pairs before the array-carrying distinct and
+      // the intersect
+      .filter(sizeRatioOk(threshold))
       .select("doc_a", "doc_b", "sh_a", "sh_b", "sz_a", "sz_b")
       .distinct()
-      .withColumn("common",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .filter(col("common") * lit(1.0 + threshold) >=
-        lit(threshold) * (col("sz_a") + col("sz_b")))
+      .filter(jaccard(col("sh_a"), col("sh_b"), col("sz_a"), col("sz_b")) >=
+        threshold)
     // a new doc is a dup of the smallest matched id; batch-internal
     // matches only count against SMALLER new ids (min-first survival)
     val newIds = newDocs.select(col("doc_id").as("doc_a"))

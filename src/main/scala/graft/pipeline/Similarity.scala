@@ -222,13 +222,20 @@ object Similarity {
 
   /** Codegen'd argmin over centroids: `argmin_i ‖v−cᵢ‖² =
     * argmin_i (‖cᵢ‖² − 2·v·cᵢ)` as an `array_min` over `(dist, i)`
-    * structs — distributed assignment with the centroid table inlined
-    * as literals (the broadcast degenerate case: nlist ≤ a few K).
+    * structs — distributed assignment with the centroid table as
+    * literals (the broadcast degenerate case: nlist ≤ a few K).
+    *
+    * Each distance is ONE dot product of the augmented vectors `(v, 1)`
+    * and `(−2cᵢ, ‖cᵢ‖²)`: the same double as `‖cᵢ‖² − 2·(v·cᵢ)` (scaling
+    * by −2 is exact), with every centroid value inside an array literal.
+    * Generated code references array literals but inlines scalar ones,
+    * so a rebuilt index (new centroids) reuses the compiled assignment.
     */
   def nearestCentroid(vec: Column, centers: Array[Array[Double]]): Column = {
+    val augmented = concat(vec, array(lit(1.0)))
     val scored = centers.zipWithIndex.map { case (c, i) =>
       val cn2 = c.map(x => x * x).sum
-      struct((lit(cn2) - lit(2.0) * dot(vec, typedLit(c.toSeq))).as("d"),
+      struct(dot(augmented, typedLit(c.map(-2.0 * _).toSeq :+ cn2)).as("d"),
         lit(i).as("i"))
     }
     array_min(array(scored: _*)).getField("i")
@@ -248,12 +255,25 @@ object Similarity {
       val cn = math.sqrt(c.map(x => x * x).sum)
       i -> (if (cn == 0) -1.0 else dot / (cn * qn))
     }.sortBy(-_._2).take(nprobe).map(_._1)
-    indexed.filter(col("list_id").isin(probes.toSeq: _*))
+    // the probe set as an array literal, not `isin`: generated code
+    // inlines `isin` values, so every probe set would compile anew
+    indexed.filter(array_contains(typedLit(probes.toSeq), col("list_id")))
       .select(col(idCol),
-        round(cosine(col(vecCol).cast("array<double>"),
-          typedLit(q.toSeq)), 6).as("cos"))
+        round(cosineToQuery(col(vecCol).cast("array<double>"), q.toSeq), 6)
+          .as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
+  }
+
+  /** `cosine(vec, typedLit(q))` for a per-call query `q`, as the same
+    * double. Spark would fold ‖q‖ into a scalar literal, which generated
+    * code inlines, so every query would compile anew; here ‖q‖ stays in
+    * an array literal, multiplied in as the one-term dot product
+    * `(‖vec‖)·(‖q‖)` (0.0 + x·y: exact).
+    */
+  private def cosineToQuery(vec: Column, q: Seq[Double]): Column = {
+    val qn = math.sqrt(q.foldLeft(0.0)((acc, x) => acc + x * x))
+    dot(vec, typedLit(q)) / dot(array(norm(vec)), typedLit(Seq(qn)))
   }
 
   /** Product-quantization model: `m` subspaces × `k` centroids each,

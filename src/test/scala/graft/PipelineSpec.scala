@@ -99,6 +99,43 @@ class PipelineSpec extends SparkTestBase {
       again.select("vec_id", "list_id")).isEmpty)
   }
 
+  test("IVF: a rebuilt index and a new query compile no new code") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val vecs = emb.select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    def assigned(seed: Long) = {
+      val (ix, centers) = Similarity.ivfIndex(emb, nlist = 16, seed = seed)
+      val lists = ix.select("vec_id", "list_id").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      (ix, centers, lists)
+    }
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val (ix1, c1, lists1) = assigned(42L)
+    Similarity.ivfTopK(ix1, c1, vecs(0L), 10, nprobe = 4).collect()
+    val warm = compiles
+    val (ix2, c2, lists2) = assigned(7L)
+    Similarity.ivfTopK(ix2, c2, vecs(1L), 10, nprobe = 6).collect()
+    assert(compiles == warm, "a rebuilt index or a new probe set recompiled")
+    assert(c1.map(_.toSeq).toSeq != c2.map(_.toSeq).toSeq)
+    // probing every list, IVF ranks exactly like brute force (same cos)
+    assert(Similarity.ivfTopK(ix2, c2, vecs(1L), 10, nprobe = 16).collect()
+      .toSeq == Similarity.bruteForceTopK(emb, vecs(1L), 10).collect().toSeq)
+    // the assignment is argmin ‖c‖² − 2·(v·c), sequential dot, lowest
+    // index on ties
+    Seq((c1, lists1), (c2, lists2)).foreach { case (centers, lists) =>
+      lists.foreach { case (id, list) =>
+        val v = vecs(id).map(_.toDouble)
+        val d = centers.map { c =>
+          var dot = 0.0
+          v.indices.foreach(i => dot += v(i) * c(i))
+          c.map(x => x * x).sum - 2.0 * dot
+        }
+        assert(list == d.indices.minBy(i => (d(i), i)), s"vec $id")
+      }
+    }
+  }
+
   test("block-matrix embedding near-dups equal the naive all-pairs result") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(200)
     val fast = Dedup.embeddingNearDups(emb, threshold = 0.35)

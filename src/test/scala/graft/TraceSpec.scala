@@ -142,6 +142,7 @@ class TraceSpec extends SparkTestBase {
     val documented = Set("commit", "flush", "merge", "push", "gc",
       "expire", "compact", "scan.plan", "scan.spj.error",
       "rechunk", "downsample", "slice", "fsck", "zarr.list", "zarr.getsize",
+      "dedup.minhash", "dedup.lsh_verify", "dedup.clusters",
       // flush-phase breakdown spans (r16 optimization round)
       "flush.splits", "flush.finalize", "manifest.write")
     val srcDir = java.nio.file.Paths.get("src/main/scala")

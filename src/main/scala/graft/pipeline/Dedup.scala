@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Trace
@@ -13,39 +14,55 @@ import graft.core.Trace
   * shuffle volume is O(n · bands), never O(n²).
   *
   * '''Route rule''' of [[minhashCandidates]], [[ngramJaccardPairsLsh]] and
-  * [[nearDupClusters]]: each call first collects, under a bound, the
-  * per-document rows its band join needs (`doc_id`, shingle-set size,
-  * signature, band bucket keys, plus the shingles for the verify) with
-  * `limit(DriverMaxDocs + 1)`, when the call is made. A corpus of at
-  * most `DriverMaxDocs` (50,000) rows with an integral `doc_id`, whose
-  * band buckets share at most `DriverMaxPairs` (200,000) row pairs,
-  * takes the DRIVER route: the band join, the distinct and the
-  * component solve run on the driver, while the per-pair rules
-  * (estimated Jaccard, size-ratio cut, exact verify) stay the Spark
-  * route's own column expressions, evaluated over a local relation. The
-  * result is a local DataFrame; the call runs one or two Spark jobs (the
-  * collect) and its result none. Any other corpus takes the SPARK route
-  * (bucket self-join over [[stageCached]] intermediates, lazy as
-  * before). Both routes build every per-row value (shingles, hashes,
-  * signature, band key, `portable`) with the same expressions
-  * ([[signed]]), so they return identical rows.
+  * [[nearDupClusters]]: each call collects the `doc_id`, shingle-set
+  * size, MinHash signature and band bucket keys of its per-document rows
+  * ([[signed]]) — never the shingles — with `limit(DriverMaxDocs + 1)`,
+  * when the call is made. A corpus of at most `DriverMaxDocs` (50,000)
+  * rows with an integral `doc_id`, whose band buckets yield at most
+  * `DriverMaxPairs` (10,000) distinct candidate pairs, takes the DRIVER
+  * route: the band join, the distinct and the component solve run on
+  * the driver, while the per-pair rules (estimated Jaccard, size-ratio
+  * cut, exact verify) stay the Spark route's own column expressions,
+  * evaluated over a local relation. The verify of
+  * [[ngramJaccardPairsLsh]] then fetches, in a second Spark job, the
+  * shingles of only the documents in size-ratio-surviving candidates,
+  * if its pairs carry at most `DriverMaxShingles` (1,000,000) shingles
+  * in all. The result is a local DataFrame; its own use runs no Spark
+  * job. Any other corpus takes the SPARK route (bucket self-join over
+  * [[stageCached]] intermediates, lazy as before), which computes the
+  * per-document rows once more: the collect's pass is not reused. Both
+  * routes build every per-row value (shingles, hashes, signature, band
+  * key, `portable`) with the same expressions ([[signed]]), so they
+  * return identical rows.
   */
 object Dedup {
 
   /** Corpus rows the driver route takes (see the route rule above). At
     * 50,000 documents of 50 words (`local[4]`, 4 vCPUs) the driver route
-    * still ran each operator 1.5–4× faster than the Spark route.
+    * still ran each operator 1.6–4× faster than the Spark route.
     */
   private final val DriverMaxDocs = 50000
 
-  /** Band-sharing row pairs (Σ k(k−1)/2 over the bucket groups, before
-    * the distinct) the driver route enumerates; past it the call takes
-    * the Spark route. Timed on the same box: at 200,000 (224 identical
-    * documents) the driver route still won every operator; at 1,000,000
-    * it ran 2× slower, as the per-pair expressions evaluate
-    * interpreted on one thread.
+  /** Distinct candidate pairs (`doc_a < doc_b` sharing a band bucket)
+    * the driver route takes; past it the call takes the Spark route. The
+    * per-pair expressions evaluate interpreted on one thread (about
+    * 25 µs a pair for the estimate), while the Spark join pays a few µs.
+    * Timed on the same box over 2,000 documents: at 10,000 pairs the
+    * driver route still won every operator, both for pairs of identical
+    * documents and for pairs sharing few bands (Jaccard ≈ 0.4); at
+    * 50,000 identical-document pairs `minhashCandidates` lost.
     */
-  private final val DriverMaxPairs = 200000L
+  private final val DriverMaxPairs = 10000
+
+  /** Shingles the driver verify holds: Σ |A| + |B| over the candidate
+    * row pairs it checks, as each pair row carries both shingle arrays.
+    * Past it [[ngramJaccardPairsLsh]] takes the Spark route after the
+    * driver band join, before any shingle leaves the executors. At
+    * 1,000,000 the driver verify still won, both for 300 pairs of
+    * 1,650-word documents and for 10,000 pairs of 50-word documents; at
+    * 2,000,000 it tied over 20,000 short pairs.
+    */
+  private final val DriverMaxShingles = 1000000L
 
   /** Intermediates persisted by the near-dup builders (bucket/block/posting
     * relations referenced by both sides of a self-join). They must outlive
@@ -178,12 +195,11 @@ object Dedup {
     Trace.span("dedup.minhash") { h =>
       val sg = signed(docs, textCol, shingleSize, numHashes, bands,
         portable, withShingles = false)
-      driverBandPairs(sg, Seq("sig"), h) match {
-        case Some(b) =>
-          local(withEstimate(b.frame(b.pairs, Seq("sig")), numHashes, Nil),
-            distinct = true)
-        case None =>
-          withEstimate(bandJoin(sg, Seq("sig")), numHashes, Nil).distinct()
+      routed(sg, Seq("sig"), h) { b =>
+        Some(local(withEstimate(b.frame(b.pairs, Seq("sig")), numHashes,
+          Nil), distinct = true))
+      } {
+        withEstimate(bandJoin(sg, Seq("sig")), numHashes, Nil).distinct()
       }
     }
 
@@ -245,34 +261,39 @@ object Dedup {
         (x, y) => x === y), b => b)).cast("double") /
         lit(numHashes.toDouble)).as("est_jaccard"): _*)
 
-  /** The driver route's first step, shared by the three LSH operators:
-    * the bounded collect of `doc_id`, `carry` and `keys` from `sg`, then
-    * the band join on the driver. `None` = take the Spark route (see the
-    * route rule); sets the span's `route`, `docs` and `pairs`.
+  /** The route choice shared by the three LSH operators (see the route
+    * rule): collect `doc_id`, `carry` and `keys` of `sg` under the
+    * document bound and band them on the driver under the pair budget.
+    * `driver` finishes the driver route from there, or gives `None` to
+    * take the Spark route partway; `viaSpark` builds the Spark route.
+    * Sets the span's `route`, `docs` and `pairs`.
     */
-  private def driverBandPairs(sg: DataFrame, carry: Seq[String],
-      h: Trace.Handle): Option[Banded] = {
+  private def routed(sg: DataFrame, carry: Seq[String], h: Trace.Handle)(
+      driver: Banded => Option[DataFrame])(
+      viaSpark: => DataFrame): DataFrame = {
     val integral = sg.schema("doc_id").dataType match {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    val picked =
+    val out =
       if (!integral) None
       else {
-        val sel = sg.select((Seq("doc_id") ++ carry :+ "keys").map(col): _*)
+        val sel = sg.select(("doc_id" +: carry :+ "keys").map(col): _*)
         val rows = sel.limit(DriverMaxDocs + 1).collect()
         h.set("docs", rows.length.toLong)
         if (rows.length > DriverMaxDocs) None
         else bandPairsDriver(rows, carry.size + 1, h)
-          .map(Banded(sg.sparkSession, rows, sel.schema, _))
+          .flatMap(p => driver(Banded(sg.sparkSession, rows, sel.schema, p)))
       }
-    h.set("route", if (picked.isDefined) "driver" else "spark")
-    picked
+    h.set("route", if (out.isDefined) "driver" else "spark")
+    out.getOrElse(viaSpark)
   }
 
   /** Band join over collected rows: row-index pairs `(i, j)` sharing a
-    * `(band, bucket)` key with `doc(i) < doc(j)`, each once. `None` when
-    * the bucket groups share more than `DriverMaxPairs` row pairs.
+    * `(band, bucket)` key with `doc(i) < doc(j)`, each once. `None` past
+    * `DriverMaxPairs` of them, counted as they are found, so a crowded
+    * bucket stops the enumeration early; the span's `pairs` is the count
+    * (`DriverMaxPairs + 1` when over).
     */
   private def bandPairsDriver(rows: Array[Row], keysAt: Int,
                               h: Trace.Handle): Option[Array[(Int, Int)]] = {
@@ -288,26 +309,26 @@ object Dedup {
           case _ =>
         }
     }
-    val shared = groups.valuesIterator.map(g => g.size.toLong *
-      (g.size - 1) / 2).sum
-    h.set("pairs", shared)
-    if (shared > DriverMaxPairs) return None
     val id = rows.map(r =>
       if (r.isNullAt(0)) 0L else r.getAs[Number](0).longValue)
     val seen = scala.collection.mutable.HashSet[Long]()
     val out = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-    for (g <- groups.valuesIterator; x <- g.indices; y <- x + 1 until g.size) {
+    def open = out.size <= DriverMaxPairs
+    for (g <- groups.valuesIterator.takeWhile(_ => open);
+         x <- g.indices.iterator.takeWhile(_ => open);
+         y <- (x + 1 until g.size).iterator.takeWhile(_ => open)) {
       val (i, j) = (g(x), g(y))
       if (id(i) != id(j)) {
         val (lo, hi) = if (id(i) < id(j)) (i, j) else (j, i)
         if (seen.add(lo.toLong << 32 | hi)) out += ((lo, hi))
       }
     }
-    Some(out.toArray)
+    h.set("pairs", out.size.toLong)
+    if (open) Some(out.toArray) else None
   }
 
-  /** The driver route's collected rows (`doc_id`, carried columns,
-    * `keys`) and their band-sharing row-index pairs.
+  /** Collected rows (`doc_id` first, then the columns `schema` names)
+    * and pairs of their indices.
     */
   private final case class Banded(spark: SparkSession, rows: Array[Row],
                                   schema: StructType,
@@ -585,29 +606,57 @@ object Dedup {
       // arrays are re-attached.
       val sg = signed(docs, textCol, n, numHashes, bands, portable = false,
         withShingles = true)
-      driverBandPairs(sg, Seq("sz", "sig", "sh"), h) match {
-        case Some(b) =>
-          val candidates = withEstimate(b.frame(b.pairs, Seq("sz", "sig")),
-            numHashes, Seq("sz")).filter(sizeRatioOk(threshold))
-            .collect().distinct
-          // the verify joins each candidate back to EVERY row of its two
-          // doc_ids, as the Spark route's joins on doc_id do
-          val rowsOf = b.rows.indices.groupBy(i => b.rows(i).get(0))
-          local(verified(b.frame(candidates.toSeq.flatMap(c =>
-            for (i <- rowsOf(c.get(0)); j <- rowsOf(c.get(1))) yield (i, j)),
-            Seq("sh", "sz")), threshold))
-        case None =>
-          val staged = stageCached(sg)
-          val candidates = withEstimate(bandJoin(staged, Seq("sz", "sig")),
-              numHashes, Seq("sz")).distinct()
-            .filter(sizeRatioOk(threshold))
-            .select("doc_a", "doc_b")
-          def side(s: String) = staged.select(col("doc_id").as(s"doc_$s"),
-            col("sh").as(s"sh_$s"), col("sz").as(s"sz_$s"))
-          verified(candidates.join(side("a"), Seq("doc_a"))
-            .join(side("b"), Seq("doc_b")), threshold)
+      routed(sg, Seq("sz", "sig"), h) { b =>
+        val candidates = withEstimate(b.frame(b.pairs, Seq("sz", "sig")),
+          numHashes, Seq("sz")).filter(sizeRatioOk(threshold))
+          .collect().distinct
+        // the verify joins each candidate to EVERY row of its two doc_ids,
+        // as the Spark route's joins on doc_id do
+        val sizes = b.rows.groupBy(_.get(0)).map { case (d, rs) =>
+          d -> rs.map(r => if (r.isNullAt(1)) 0L else r.getAs[Number](1)
+            .longValue) }
+        val held = candidates.iterator.map { c =>
+          val (a, z) = (sizes(c.get(0)), sizes(c.get(1)))
+          a.sum * z.length + z.sum * a.length
+        }.sum
+        h.set("shingles", held)
+        if (held > DriverMaxShingles) None
+        else Some {
+          // the filter on doc_id runs below the shingling, so only these
+          // documents are shingled again
+          val fetch = sg.select("doc_id", "sh", "sz")
+          val ids = candidates.iterator.flatMap(c => Seq(c.get(0), c.get(1)))
+            .toSet[Any]
+          val rows =
+            if (ids.isEmpty) Array.empty[Row]
+            else fetch.filter(inSet(col("doc_id"), ids)).collect()
+          val rowsOf = rows.indices.groupBy(i => rows(i).get(0))
+          val pairs = candidates.toSeq.flatMap(c =>
+            for (i <- rowsOf(c.get(0)); j <- rowsOf(c.get(1))) yield (i, j))
+          local(verified(Banded(b.spark, rows, fetch.schema, pairs.toArray)
+            .frame(pairs, Seq("sh", "sz")), threshold))
+        }
+      } {
+        val staged = stageCached(sg)
+        val candidates = withEstimate(bandJoin(staged, Seq("sz", "sig")),
+            numHashes, Seq("sz")).distinct()
+          .filter(sizeRatioOk(threshold))
+          .select("doc_a", "doc_b")
+        def side(s: String) = staged.select(col("doc_id").as(s"doc_$s"),
+          col("sh").as(s"sh_$s"), col("sz").as(s"sz_$s"))
+        verified(candidates.join(side("a"), Seq("doc_a"))
+          .join(side("b"), Seq("doc_b")), threshold)
       }
     }
+
+  /** `c IN ids`, built as Spark's own `InSet`: for a `long` column the
+    * set is a reference in the generated code, so a new id set compiles
+    * nothing (an `isin` of literals writes every value into the code).
+    */
+  private def inSet(c: Column, ids: Set[Any]): Column =
+    GraftColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        GraftColumnBridge.expression(c), ids))
 
   /** Near-duplicate *clusters*: MinHash-LSH candidate pairs (filtered by
     * estimated Jaccard) collapsed into connected components, so that
@@ -625,27 +674,27 @@ object Dedup {
     Trace.span("dedup.clusters") { h =>
       val sg = signed(docs, textCol, shingleSize, numHashes, bands,
         portable = false, withShingles = false)
-      def labelled(withLabels: DataFrame) = withLabels.select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      driverBandPairs(sg, Seq("sig"), h) match {
-        case Some(b) =>
-          def id(r: Row, i: Int) = r.getAs[Number](i).longValue
-          val label = ConnectedComponents.unionFind(
-            withEstimate(b.frame(b.pairs, Seq("sig")), numHashes, Nil)
-              .filter(col("est_jaccard") >= minEstJaccard)
-              .collect().iterator.map(r => (id(r, 0), id(r, 1))))
-          val rows = b.rows.toSeq.map(r => Row(r.get(0),
-            if (r.isNullAt(0)) null
-            else label.get(id(r, 0)).map(java.lang.Long.valueOf).orNull))
-          local(labelled(docs.sparkSession.createDataFrame(rows.asJava,
-            StructType(Seq(b.schema("doc_id"),
-              StructField("cluster_id", LongType))))))
-        case None =>
-          val pairs = withEstimate(bandJoin(sg, Seq("sig")), numHashes, Nil)
-            .distinct().filter(col("est_jaccard") >= minEstJaccard)
-          labelled(docs.select(col("doc_id")).join(
+      routed(sg, Seq("sig"), h) { b =>
+        def id(r: Row, i: Int) = r.getAs[Number](i).longValue
+        val label = ConnectedComponents.unionFind(
+          withEstimate(b.frame(b.pairs, Seq("sig")), numHashes, Nil)
+            .filter(col("est_jaccard") >= minEstJaccard)
+            .collect().iterator.map(r => (id(r, 0), id(r, 1))))
+        val rows = b.rows.toSeq.map(r =>
+          if (r.isNullAt(0)) Row(null, null)
+          else Row(r.get(0), label.getOrElse(id(r, 0), id(r, 0))))
+        val docId = b.schema("doc_id")
+        Some(b.spark.createDataFrame(rows.asJava,
+          StructType(Seq(docId,
+            StructField("cluster_id", LongType, docId.nullable)))))
+      } {
+        val pairs = withEstimate(bandJoin(sg, Seq("sig")), numHashes, Nil)
+          .distinct().filter(col("est_jaccard") >= minEstJaccard)
+        docs.select(col("doc_id")).join(
             ConnectedComponents.run(pairs).withColumnRenamed("id", "doc_id"),
-            Seq("doc_id"), "left"))
+            Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       }
     }
 

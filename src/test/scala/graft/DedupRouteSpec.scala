@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import graft.core.Trace
 import graft.pipeline.Dedup
@@ -9,13 +11,15 @@ import graft.pipeline.Dedup
   * `ngramJaccardPairsLsh`, `nearDupClusters`; `dedupPipeline` through
   * its verify). A driver-sized corpus is banded, joined and clustered on
   * the driver after one bounded collect; a corpus over the document bound
-  * (50,000) or the band-sharing pair budget (200,000) takes the Spark
-  * bucket self-join. The Spark route is reached here through real
-  * inputs: filler documents with ids from `FillerBase` up are added to
-  * each input, either 230 documents with one shingle set (8 bands ×
-  * C(230, 2) = 210,680 band-sharing pairs) or 50,001 single-shingle
-  * documents from `spark.range`. The filler never pairs with the input,
-  * so the input's rows of both routes must be identical.
+  * (50,000), the distinct candidate pair budget (10,000) or, for the
+  * verify, the shingle bound (1,000,000) takes the Spark bucket
+  * self-join. The Spark route is reached here through real inputs:
+  * filler documents with ids from `FillerBase` up are added to each
+  * input, either 150 documents with one shingle set (C(150, 2) = 11,175
+  * candidate pairs), 40 copies of one 6,000-word document (780 pairs
+  * holding 9.4M shingles) or 50,001 single-shingle documents from
+  * `spark.range`. The filler never pairs with the input, so the input's
+  * rows of both routes must be identical.
   */
 class DedupRouteSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.01"
@@ -45,13 +49,22 @@ class DedupRouteSpec extends SparkTestBase {
 
   private def empty: DataFrame = edge.filter(lit(false))
 
-  /** One shingle set in 230 documents of distinct bytes (trailing
+  /** One shingle set in 150 documents of distinct bytes (trailing
     * spaces, so the exact pass keeps them all): over the pair budget.
     */
-  private def crowd: DataFrame = spark.range(230).select(
+  private def crowd: DataFrame = spark.range(150).select(
     (col("id") + FillerBase).as("doc_id"),
     concat(lit("crowd of identical words"),
       expr("repeat(' ', cast(id as int))")).as("text"))
+
+  /** One 6,000-word document in 40 copies of distinct bytes: within the
+    * pair budget, over the verify's shingle bound.
+    */
+  private def longDocs: DataFrame = spark.range(40).select(
+    (col("id") + FillerBase).as("doc_id"),
+    concat(expr("concat_ws(' ', transform(sequence(1, 6000), " +
+      "i -> concat('w', i)))"), expr("repeat(' ', cast(id as int))"))
+      .as("text"))
 
   /** 50,001 single-shingle documents: one row over the document bound. */
   private def overBound: DataFrame = spark.range(50001).select(
@@ -98,9 +111,9 @@ class DedupRouteSpec extends SparkTestBase {
     mine
   }
 
-  private def assertParity(input: String, x: DataFrame,
-                           filler: DataFrame): Unit =
-    ops.foreach { case (name, span, op, idCols) =>
+  private def assertParity(input: String, x: DataFrame, filler: DataFrame,
+                           only: String => Boolean = _ => true): Unit =
+    ops.filter(o => only(o._1)).foreach { case (name, span, op, idCols) =>
       val (driver, dAttrs) = routed(span)(op(x))
       val (viaSpark, sAttrs) = routed(span)(op(x.unionByName(filler)))
       assert(dAttrs.map(_("route")) == Seq("driver"), s"$input / $name")
@@ -116,8 +129,60 @@ class DedupRouteSpec extends SparkTestBase {
     }
     val (_, attrs) = routed("dedup.clusters")(
       Dedup.nearDupClusters(edge.unionByName(crowd)))
-    assert(attrs.head("docs") == "244")
-    assert(attrs.head("pairs").toLong > 200000L)
+    assert(attrs.head("docs") == "164")
+    assert(attrs.head("pairs") == "10001")
+  }
+
+  test("shingle bound: a verify holding too many shingles takes the " +
+      "Spark route with the same rows") {
+    val verifies = (name: String) =>
+      name.startsWith("lsh verify") || name == "pipeline"
+    Seq("documents fixture" -> fixture, "edge cases" -> edge,
+        "empty corpus" -> empty).foreach { case (input, x) =>
+      assertParity(input, x, longDocs, verifies)
+    }
+    val (_, attrs) = routed("dedup.lsh_verify")(
+      Dedup.ngramJaccardPairsLsh(edge.unionByName(longDocs)))
+    assert(attrs.head("pairs").toLong < 10000L)
+    assert(attrs.head("shingles").toLong > 780L * 2 * 5998)
+  }
+
+  /** Output columns of every query `f` collects to the driver. */
+  private def collected(f: => Unit): Seq[Seq[String]] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = {
+        seen.add(qe.analyzed.output.map(_.name)); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      spark.range(1).select(lit(1).as("END_MARKER")).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.toArray.exists(_ == Seq("END_MARKER")) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      seen.toArray(Array.empty[Seq[String]]).toSeq
+        .filterNot(_ == Seq("END_MARKER"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("shingles reach the driver only for a verify within every bound") {
+    def verify(x: DataFrame) = collected {
+      routed("dedup.lsh_verify")(Dedup.ngramJaccardPairsLsh(x))
+    }
+    def withShingles(qs: Seq[Seq[String]]) = qs.count(_.contains("sh"))
+    // within the bounds: the collect carries no shingles; one fetch does
+    val within = verify(fixture)
+    assert(within.exists(_ == Seq("doc_id", "sz", "sig", "keys")))
+    assert(within.filter(_.contains("sh")) == Seq(Seq("doc_id", "sh", "sz")))
+    // over the document bound, the pair budget or the shingle bound: none
+    Seq(overBound, crowd, longDocs).foreach { filler =>
+      assert(withShingles(verify(edge.unionByName(filler))) == 0)
+    }
   }
 
   test("document bound: a 50,001-document corpus takes the Spark route " +

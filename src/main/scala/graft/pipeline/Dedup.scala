@@ -193,45 +193,54 @@ object Dedup {
                         bands: Int = 8,
                         portable: Boolean = false): DataFrame =
     Trace.span("dedup.minhash") { h =>
-      val sg = signed(docs, textCol, shingleSize, numHashes, bands,
-        portable, withShingles = false)
-      routed(sg, Seq("sig"), h) { b =>
+      val sg = signed(docs, textCol, shingleSize, numHashes, portable,
+        withShingles = false)
+      val keys = bandKeys(numHashes, bands, portable)
+      routed(sg, keys, Seq("sig"), h) { b =>
         Some(local(withEstimate(b.frame(b.pairs, Seq("sig")), numHashes,
           Nil), distinct = true))
       } {
-        withEstimate(bandJoin(sg, Seq("sig")), numHashes, Nil).distinct()
+        withEstimate(bandJoin(sg, keys, Seq("sig")), numHashes, Nil)
+          .distinct()
       }
     }
 
   /** The per-document rows both routes band: `doc_id`, the shingle-set
-    * size `sz`, the MinHash signature `sig`, one bucket key per band
-    * (`keys`) and, for the exact verify, the shingles `sh`. Every
-    * per-row rule (shingling, hashing, signature, band key, `portable`)
-    * has this one definition. The shingle array is its own column, so
-    * the signature fold walks a materialized array (CollapseProject
-    * keeps multi-referenced non-cheap expressions staged).
+    * size `sz`, the MinHash signature `sig` and, for the exact verify,
+    * the shingles `sh`. With [[bandKeys]], every per-row rule
+    * (shingling, hashing, signature, band key, `portable`) has this one
+    * definition. The shingle array is its own column, so the signature
+    * fold walks a materialized array (CollapseProject keeps
+    * multi-referenced non-cheap expressions staged).
     */
   private def signed(docs: DataFrame, textCol: String, shingleSize: Int,
-                     numHashes: Int, bands: Int, portable: Boolean,
+                     numHashes: Int, portable: Boolean,
                      withShingles: Boolean): DataFrame = {
-    val rows = numHashes / bands
     val shingleHash: Column => Column =
       if (portable) portableTokenHash else xxhash64(_)
     val coeffs =
       if (portable) portableMinhashCoeffs(numHashes)
       else minhashCoeffs(numHashes)
-    val bucketOf: Column => Column = { b =>
-      val band = concat_ws("_", slice(col("sig"), b * rows + 1, lit(rows)))
-      if (portable) band else xxhash64(band)
-    }
     docs.select(col("doc_id"), shingles(col(textCol), shingleSize).as("sh"))
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("sz"),
+      .select(Seq(col("doc_id"), size(col("sh")).as("sz"),
         graft.functions.VectorFunctions.minhash_signature(
           transform(col("sh"), s => shingleHash(s)), coeffs,
-          MinhashPrime).as("sig"))
-      .select(Seq(col("doc_id"), col("sz"), col("sig"),
-        transform(sequence(lit(0), lit(bands - 1)), bucketOf).as("keys")) ++
+          MinhashPrime).as("sig")) ++
         (if (withShingles) Seq(col("sh")) else Nil): _*)
+  }
+
+  /** One bucket key per band of the `sig` column. Kept an expression,
+    * never a column the Spark route explodes: Spark infers a
+    * `size(keys) > 0` filter for an exploded column and pushes it below
+    * the projection, where it re-evaluates the signature once per band.
+    */
+  private def bandKeys(numHashes: Int, bands: Int,
+                       portable: Boolean): Column = {
+    val rows = numHashes / bands
+    transform(sequence(lit(0), lit(bands - 1)), { b =>
+      val band = concat_ws("_", slice(col("sig"), b * rows + 1, lit(rows)))
+      if (portable) band else xxhash64(band)
+    })
   }
 
   /** The Spark route's band join: rows sharing a `(band, bucket)` key
@@ -240,9 +249,10 @@ object Dedup {
     * materialized once (registered for releaseCaches): both self-join
     * sides would otherwise re-evaluate the shingle→minhash tree.
     */
-  private def bandJoin(sg: DataFrame, carry: Seq[String]): DataFrame = {
+  private def bandJoin(sg: DataFrame, keys: Column,
+                       carry: Seq[String]): DataFrame = {
     val buckets = stageCached(sg.select(Seq(col("doc_id")) ++
-        carry.map(col) :+ posexplode(col("keys")): _*)
+        carry.map(col) :+ posexplode(keys): _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"))
     def side(s: String) = buckets.select(Seq(col("band"), col("bucket"),
       col("doc_id").as(s"doc_$s")) ++ carry.map(c => col(c).as(s"${c}_$s")): _*)
@@ -262,13 +272,14 @@ object Dedup {
         lit(numHashes.toDouble)).as("est_jaccard"): _*)
 
   /** The route choice shared by the three LSH operators (see the route
-    * rule): collect `doc_id`, `carry` and `keys` of `sg` under the
-    * document bound and band them on the driver under the pair budget.
+    * rule): collect `doc_id`, `carry` and the band `keys` of `sg` under
+    * the document bound and band them on the driver under the pair budget.
     * `driver` finishes the driver route from there, or gives `None` to
     * take the Spark route partway; `viaSpark` builds the Spark route.
     * Sets the span's `route`, `docs` and `pairs`.
     */
-  private def routed(sg: DataFrame, carry: Seq[String], h: Trace.Handle)(
+  private def routed(sg: DataFrame, keys: Column, carry: Seq[String],
+                     h: Trace.Handle)(
       driver: Banded => Option[DataFrame])(
       viaSpark: => DataFrame): DataFrame = {
     val integral = sg.schema("doc_id").dataType match {
@@ -278,7 +289,7 @@ object Dedup {
     val out =
       if (!integral) None
       else {
-        val sel = sg.select(("doc_id" +: carry :+ "keys").map(col): _*)
+        val sel = sg.select(("doc_id" +: carry).map(col) :+ keys.as("keys"): _*)
         val rows = sel.limit(DriverMaxDocs + 1).collect()
         h.set("docs", rows.length.toLong)
         if (rows.length > DriverMaxDocs) None
@@ -604,9 +615,10 @@ object Dedup {
       // and the exact-Jaccard verify sides. `sz` rides along so the
       // size-ratio cut drops candidate pairs BEFORE the heavy shingle
       // arrays are re-attached.
-      val sg = signed(docs, textCol, n, numHashes, bands, portable = false,
+      val sg = signed(docs, textCol, n, numHashes, portable = false,
         withShingles = true)
-      routed(sg, Seq("sz", "sig"), h) { b =>
+      val keys = bandKeys(numHashes, bands, portable = false)
+      routed(sg, keys, Seq("sz", "sig"), h) { b =>
         val candidates = withEstimate(b.frame(b.pairs, Seq("sz", "sig")),
           numHashes, Seq("sz")).filter(sizeRatioOk(threshold))
           .collect().distinct
@@ -638,8 +650,9 @@ object Dedup {
         }
       } {
         val staged = stageCached(sg)
-        val candidates = withEstimate(bandJoin(staged, Seq("sz", "sig")),
-            numHashes, Seq("sz")).distinct()
+        val candidates = withEstimate(
+            bandJoin(staged, keys, Seq("sz", "sig")), numHashes, Seq("sz"))
+          .distinct()
           .filter(sizeRatioOk(threshold))
           .select("doc_a", "doc_b")
         def side(s: String) = staged.select(col("doc_id").as(s"doc_$s"),
@@ -672,9 +685,10 @@ object Dedup {
                       bands: Int = 8,
                       minEstJaccard: Double = 0.5): DataFrame =
     Trace.span("dedup.clusters") { h =>
-      val sg = signed(docs, textCol, shingleSize, numHashes, bands,
+      val sg = signed(docs, textCol, shingleSize, numHashes,
         portable = false, withShingles = false)
-      routed(sg, Seq("sig"), h) { b =>
+      val keys = bandKeys(numHashes, bands, portable = false)
+      routed(sg, keys, Seq("sig"), h) { b =>
         def id(r: Row, i: Int) = r.getAs[Number](i).longValue
         val label = ConnectedComponents.unionFind(
           withEstimate(b.frame(b.pairs, Seq("sig")), numHashes, Nil)
@@ -688,7 +702,8 @@ object Dedup {
           StructType(Seq(docId,
             StructField("cluster_id", LongType, docId.nullable)))))
       } {
-        val pairs = withEstimate(bandJoin(sg, Seq("sig")), numHashes, Nil)
+        val pairs = withEstimate(bandJoin(sg, keys, Seq("sig")), numHashes,
+          Nil)
           .distinct().filter(col("est_jaccard") >= minEstJaccard)
         docs.select(col("doc_id")).join(
             ConnectedComponents.run(pairs).withColumnRenamed("id", "doc_id"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.repo._
 import graft.storage.Store
@@ -272,13 +271,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.LocalSpark.session(cpus.toInt, "WARN",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     // warm up the JVM/codegen/filesystem paths so the first measured query
     // doesn't absorb session startup
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -375,7 +369,8 @@ object Bench {
     // (benchmarks/datasets.py:392-414: 500 M elements / 1000-element chunks)
     val refCount = sys.env.getOrElse("SPARK_GRAFT_BENCH_REFS", "500000").toInt
     val cube = sys.env.getOrElse("SPARK_GRAFT_BENCH_CUBE", "512").toInt
-    // 5 passes, not 3: WBench A/B runs show a multi-second stall that
+    // 5 passes, not 3: isolated A/B runs of the two values-write routes
+    // (provider-clustered vs catalog INSERT) show a multi-second stall that
     // lands on ONE heavy write entry per pass at random (JIT/IO weather,
     // identical plans — both routes spike in different passes). A median
     // of 3 lets a single stall through; a median of 5 tolerates two.
@@ -884,7 +879,8 @@ object Bench {
     // query section above warms the read machinery, but the values-write
     // stack (writer codegen, parquet-mr, commit) otherwise compiles
     // inside pass 1 and skews its median entry by 3-5×. The warmup cube
-    // is 128³ (2.1 M rows), not a toy: WBench order-swap experiments show
+    // is 128³ (2.1 M rows), not a toy: order-swapped runs of the two
+    // values-write routes show
     // the FIRST large write in the JVM pays a 3-5× premium whichever
     // route runs first (provider 16.8 s → 3.0 s warm; catalog-first
     // flips it), and a 32³ warmup was too small to trigger the same

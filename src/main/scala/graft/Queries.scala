@@ -598,7 +598,8 @@ object Queries {
     *     margins (0.45 query-probe / 0.6 all-pairs) sit well above the
     *     observed miss ceiling of the seeded indexes on the gate
     *     fixtures (worst missed cosine 0.370 / 0.513 across sf0.001 and
-    *     sf0.01 — AnnAuditProbe measures this), so the bit only flips
+    *     sf0.01, from an exact-vs-approximate top-20 diff of each
+    *     index), so the bit only flips
     *     when the index regresses into missing STRONG neighbors, never
     *     on the probabilistic tail it is allowed to miss.
     *
@@ -618,8 +619,8 @@ object Queries {
     // missing `_acos` (the approximate path returned FEWER rows than the
     // exact top-k) counts as NOT sound: the single-query paths (sign-LSH
     // multi-probe, IVF nprobe, PQ re-scoring) deterministically fill k
-    // on the gate fixtures (AnnAuditProbe: n_approx=20 at sf0.001 and
-    // sf0.01 for all three), so a short result is a regression, not an
+    // on the gate fixtures (20 approximate rows at sf0.001 and sf0.01
+    // for all three, measured), so a short result is a regression, not an
     // unlucky sample — a coalesce-to-true here would let a truncated
     // approximate relation pass rank-domination vacuously.
     exactR.join(approxR, Seq("rank"), "left")

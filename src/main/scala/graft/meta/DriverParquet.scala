@@ -2,8 +2,7 @@ package graft.meta
 
 import java.nio.file.Files
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
@@ -70,63 +69,34 @@ object DriverParquet {
       |  optional binary to_path (UTF8);
       |}""".stripMargin)
 
-  private def withWriter(schema: MessageType)(fill: (SimpleGroupFactory,
-      Group => Unit) => Unit): Array[Byte] = {
-    val tmp = Files.createTempFile("graft-driver", ".parquet")
-    Files.delete(tmp) // writer refuses to overwrite
-    try {
-      val w = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
-        .withType(schema)
-        .withCompressionCodec(CompressionCodecName.ZSTD)
-        .withConf(new org.apache.hadoop.conf.Configuration(false))
-        .build()
-      try fill(new SimpleGroupFactory(schema), w.write)
-      finally w.close()
-      Files.readAllBytes(tmp)
-    } finally Files.deleteIfExists(tmp)
-  }
-
-  private def addCoord(g: Group, coord: Seq[Int]): Unit =
-    if (coord != null) {
-      val list = g.addGroup("coord")
-      coord.foreach(c => list.addGroup("list").append("element", c))
-    }
-
-  private def addStr(g: Group, field: String, v: String): Unit =
-    if (v != null) g.append(field, Binary.fromString(v))
-
   /** One manifest shard's rows as Parquet bytes (caller sorts by c0..c3
     * for tight row-group stats, mirroring the Spark writer's
     * sortWithinPartitions).
     */
   def writeChunkRefs(refs: Seq[ChunkRef]): Array[Byte] =
-    withWriter(manifestType) { (f, write) =>
-      refs.foreach { r =>
-        val g = f.newGroup()
-        addCoord(g, r.coord)
-        g.append("c0", r.c0).append("c1", r.c1)
-          .append("c2", r.c2).append("c3", r.c3)
-        addStr(g, "kind", r.kind)
-        if (r.inline != null)
-          g.append("inline", Binary.fromConstantByteArray(r.inline))
-        addStr(g, "chunk_id", r.chunk_id)
-        addStr(g, "location", r.location)
-        g.append("offset", r.offset).append("length", r.length)
-        addStr(g, "etag", r.etag)
-        g.append("last_modified", r.last_modified)
-        write(g)
-      }
-    }
+    writeAll(new ChunkRefShardWriter)(w => refs.foreach(r =>
+      w.append(r.coord, r.c0, r.c1, r.c2, r.c3, r.kind, r.inline,
+        r.chunk_id, r.location, r.offset, r.length, r.etag,
+        r.last_modified)))
+
+  /** One commit's tx-log rows as Parquet bytes. */
+  def writeEditRows(rows: Seq[EditRow]): Array[Byte] =
+    writeAll(new EditRowShardWriter)(w => rows.foreach(r =>
+      w.append(r.edit, r.node_id, r.path, r.coord, r.to_path)))
+
+  private def writeAll[W <: StreamingShardWriter](w: W)(
+      fill: W => Unit): Array[Byte] =
+    try { fill(w); w.closeBytes() }
+    catch { case t: Throwable => w.abort(); throw t }
 
   /** Pending-row streaming writer base (r17): fields write straight to
     * parquet-mr's [[RecordConsumer]] — no per-row Group / per-field
-    * wrapper allocation (the SimpleGroup path's object churn was the
+    * wrapper allocation (a SimpleGroup writer's object churn was the
     * dominant per-row cost of the fused 500 k-row write). `emit()` is
     * called by parquet-mr inside `ParquetWriter.write`, between its own
     * startMessage/endMessage bookkeeping — subclasses write the pending
-    * row's fields there. File layout (schema, codec, row-group
-    * accounting) is identical to the Example-writer path, so files stay
-    * byte-compatible with every reader.
+    * row's fields there. It is the one writer of both file kinds, on the
+    * driver and on executors.
     */
   private[meta] abstract class StreamingShardWriter(schema: MessageType) {
     import org.apache.parquet.io.api.RecordConsumer
@@ -285,20 +255,6 @@ object DriverParquet {
       addStrRc("to_path", 4, pToPath)
     }
   }
-
-  /** One commit's tx-log rows as Parquet bytes. */
-  def writeEditRows(rows: Seq[EditRow]): Array[Byte] =
-    withWriter(txType) { (f, write) =>
-      rows.foreach { r =>
-        val g = f.newGroup()
-        addStr(g, "edit", r.edit)
-        addStr(g, "node_id", r.node_id)
-        addStr(g, "path", r.path)
-        addCoord(g, r.coord)
-        addStr(g, "to_path", r.to_path)
-        write(g)
-      }
-    }
 
   /** Read one manifest data file (either writer's output) back into
     * [[ChunkRef]]s — the zero-job read side of the fast path. `node_id`

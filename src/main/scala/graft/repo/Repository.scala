@@ -403,7 +403,8 @@ final class Repository private (
     var theirLog: Option[DataFrame] = None
     // persisted on demand (Spark route only): consumed by the editRows
     // collect AND the chunk coords filter — each re-scan re-reads the
-    // tx-log chain (MergeTimeProbe: ≈ 0.3-1 s per redundant scan)
+    // tx-log chain (≈ 0.3-1 s per redundant scan, measured on the
+    // 500 k-ref engine_merge_branch shape)
     def editsDf(): DataFrame = editsSpark.getOrElse {
       val e = diff(VersionRef.SnapshotVer(base), srcRef).persist()
       editsSpark = Some(e)
@@ -573,7 +574,8 @@ final class Repository private (
         // consumer of the changeset (conflict doubles join, node-id
         // distinct, the flush merge itself) re-runs the full src manifest
         // scan + semi-join; the relation is delta-sized, the scan is not
-        // (MergeTimeProbe: ~2 s per redundant evaluation at 500 k refs)
+        // (~2 s per redundant evaluation at 500 k refs, measured on the
+        // engine_merge_branch shape)
         val staged = present.unionByName(dels, allowMissingColumns = true)
           .persist()
         session.stageChunkRefsBatch(stagePaths, staged)

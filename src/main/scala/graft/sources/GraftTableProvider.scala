@@ -23,7 +23,8 @@ import graft.functions.SliceGeom
 import graft.repo.{Repository, VersionRef}
 import graft.storage.{Store, StoreConf}
 
-/** DataSource V2 connector (`format("graft-v2")`).
+/** DataSource V2 connector (`format("graft-v2")`, or its short name
+  * `format("graft")` through [[GraftSource]]).
   *
   * '''Read''', two modes:
   *  - `mode=refs` (default): the chunk-ref relation. One `InputPartition`
@@ -61,6 +62,11 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
     val opts = properties.asScala.toMap
     new GraftTable(opts, schema)
   }
+}
+
+/** `format("graft")`: the same connector under its short name. */
+class GraftSource extends GraftTableProvider {
+  override def shortName(): String = "graft"
 }
 
 object GraftTableProvider {

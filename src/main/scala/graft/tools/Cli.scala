@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.repo._
 import graft.storage.Store
 
@@ -47,10 +46,7 @@ object Cli {
     val dir = args(0)
     val cmd = args(1)
     val rest = args.drop(2).toList
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(4, "ERROR")
     var failed = false
     try {
       if (cmd == "init") {

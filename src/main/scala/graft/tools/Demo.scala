@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.repo._
 import graft.storage.Store
 
@@ -11,13 +10,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(4, "ERROR", "spark.app.name" -> "graft-demo")
 
     val repo = Repository.openOrCreate(Store.local(dir), spark)
     println(s"[demo] repo at $dir branches=${repo.listBranches()}")

@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.repo.{Repository, VersionRef, GraftConfig}
 import graft.storage.Store
 
-/** I/O-vs-compute probe for whole-array reads (sibling of MergeTimeProbe /
-  * AnnAuditProbe): writes an int64 cube once, then times refs-scan,
+/** I/O-vs-compute probe for whole-array reads: writes an int64 cube
+  * once, then times refs-scan,
   * fetch-only (bytes moved, no decode), full arrayStats, and a
   * single-threaded raw read of the chunk files. Separates "the decode
   * kernel is slow" from "the box's disk is the wall" — the round-12 scale
@@ -19,12 +18,7 @@ object DiagCube {
   def main(args: Array[String]): Unit = {
     val cube = args.headOption.map(_.toInt).getOrElse(1024)
     val dir = if (args.length > 1) args(1) else s"/tmp/diag-cube-$cube"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(32, "WARN")
 
     def t[A](name: String)(body: => A): A = {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.repo.{Repository, GraftConfig}
 import graft.storage.Store
 
@@ -29,12 +28,7 @@ object DiagHistory {
       else java.nio.file.Files.createTempDirectory("diag-history").toString
     val pruneEvery = if (args.length > 2) args(2).toInt else 0
     val latencyMs = if (args.length > 3) args(3).toLong else 0L
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(4, "WARN")
 
     val repo = Repository.create(Store.local(dir), spark, GraftConfig())
     locally {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.repo._
 import graft.storage.Store
@@ -30,12 +29,8 @@ object Era5Probe {
   def main(args: Array[String]): Unit = {
     val perArray = args.headOption.map(_.toInt).getOrElse(43800)
     val latencyMs = if (args.length > 1) args(1).toLong else 0L
-    val spark = SparkSession.builder()
-      .appName("graft-era5-probe").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(8, "WARN",
+      "spark.app.name" -> "graft-era5-probe")
     val dir = java.nio.file.Files.createTempDirectory("era5-probe").toString
 
     // ---- build: 4 data arrays, chunks time=1 (the weatherbench write

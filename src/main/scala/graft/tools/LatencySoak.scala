@@ -46,12 +46,8 @@ object LatencySoak {
 
   def main(args: Array[String]): Unit = {
     val rtts = if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(0L, 50L, 150L)
-    val spark = SparkSession.builder()
-      .appName("graft-latency-soak").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(8, "WARN",
+      "spark.app.name" -> "graft-latency-soak")
     try rtts.foreach(rtt => soakOnce(spark, rtt))
     finally spark.stop()
   }

@@ -30,11 +30,8 @@ object MakeGoldenFixture {
       case d :: Nil if !d.startsWith("--") => (false, d)
       case _ => sys.error("usage: MakeGoldenFixture <dir> | --s3 <dumpDir>")
     }
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-golden")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = LocalSpark.session(4, "INFO",
+      "spark.app.name" -> "graft-golden", "spark.sql.shuffle.partitions" -> 8)
     if (s3Mode) buildS3Dump(spark, outDir) else build(spark, outDir)
     println(s"[golden] fixture written to $outDir")
     spark.stop()

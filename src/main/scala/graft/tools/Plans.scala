@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Regenerates PLANS.md: formatted physical plans of the headline queries
@@ -10,12 +10,8 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(4, "ERROR",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     val d = "/root/testdata/sf0.001"
 
     def fmt(df: DataFrame): String =

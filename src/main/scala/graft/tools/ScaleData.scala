@@ -36,12 +36,7 @@ object ScaleData {
     val dst = if (args.length > 1) args(1) else "target/scale/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus.toInt, "WARN")
     scale(spark, src, dst, factor)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.ChunkCodec
 import graft.ops.{Compaction, GC, Stats}
@@ -16,12 +15,7 @@ object Tour {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-tour").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-tour")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(4, "ERROR", "spark.app.name" -> "graft-tour")
 
     // the whole tour runs over a fault-injected store behind the retry
     // decorator: every ~7th metadata op fails transiently and is retried

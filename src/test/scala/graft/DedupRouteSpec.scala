@@ -220,38 +220,6 @@ class DedupRouteSpec extends SparkTestBase {
       Seq((5L, false, 4L)))
   }
 
-  /** The Spark jobs `f` starts, counted between two marker jobs. */
-  private def jobsDuring(f: => Unit): Int = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        seen.add((js.jobId, Option(js.properties)
-          .map(_.getProperty("spark.job.description", "")).getOrElse("")))
-        ()
-      }
-    }
-    def marker(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      spark.range(1).count()
-      spark.sparkContext.setJobDescription(null)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("START")
-      f
-      marker("END")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def idsOf(name: String) = seen.toArray(Array.empty[(Int, String)])
-        .filter(_._2 == name).map(_._1)
-      while (idsOf("END").isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      val (start, end) = (idsOf("START").max, idsOf("END").min)
-      seen.toArray(Array.empty[(Int, String)])
-        .count { case (id, _) => id > start && id < end }
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a driver-sized call runs at most 2 Spark jobs, its result none") {
     val corpus = fixture.repartition(4).cache()
     try {

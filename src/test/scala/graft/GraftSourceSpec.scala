@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import graft.functions.ChunkCodec
 import graft.repo._
@@ -80,7 +81,7 @@ class GraftSourceSpec extends SparkTestBase {
       .option("path", dir).option("array", "/w")
       .option("mode", "values").option("dtype", "float64")
       .option("message", "connector write")
-      .save()
+      .mode("append").save()
 
     val back = spark.read.format("graft")
       .option("path", dir).option("array", "/w")
@@ -90,5 +91,26 @@ class GraftSourceSpec extends SparkTestBase {
       (0 until 50).map(_ * 3.0).sum)
     assert(repo.ancestry(VersionRef.Branch("main"))
       .head.message == "connector write")
+  }
+
+  test("format(graft) is the DSv2 connector: pushed bounds, same rows") {
+    val (_, dir) = setup()
+    def read(format: String) = spark.read.format(format)
+      .option("path", dir).option("array", "/t").load()
+      .filter(col("c0") >= 6)
+    val alias = read("graft")
+    val scans = alias.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan.description()
+    }
+    assert(scans.size == 1 && scans.head.contains("d0 in [6,"),
+      scans.mkString(" | "))
+    assert(alias.queryExecution.sparkPlan.collect {
+      case b: BatchScanExec => b }.size == 1)
+    val v2 = read("graft-v2")
+    assert(alias.columns.toSeq == v2.columns.toSeq)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().sortBy(_.getAs[Int]("c0")).toSeq
+    assert(rows(alias).map(_.getAs[Int]("c0")) == Seq(6, 7))
+    assert(rows(alias) == rows(v2))
   }
 }

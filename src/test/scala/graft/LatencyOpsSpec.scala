@@ -276,26 +276,6 @@ class LatencyOpsSpec extends SparkTestBase {
       s"warm wave re-read ${st.bytesRead.get()} B: ${st.counts}")
   }
 
-  private def countJobs[A](body: => A): (A, Long) = {
-    val jobs = new java.util.concurrent.atomic.AtomicLong()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      // listener delivery is async — wait for the count to go stable
-      var last = -1L; var cur = jobs.get(); var spins = 0
-      while (cur != last && spins < 40) {
-        last = cur; Thread.sleep(150); cur = jobs.get(); spins += 1
-      }
-      (r, cur)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("batched lookups on a dirty session probe the changeset ONCE: " +
       "zero Spark jobs for point-only edits, one bounded probe for " +
       "staged batches (VERDICT r14)") {
@@ -317,7 +297,8 @@ class LatencyOpsSpec extends SparkTestBase {
     // warm the split caches first so only the changeset probe could
     // possibly schedule work
     w.getChunkRefsBatch(reqs)
-    val (refs, jobs) = countJobs(w.getChunkRefsBatch(reqs))
+    var refs = Seq.empty[Option[graft.meta.ChunkRef]]
+    val jobs = jobsDuring { refs = w.getChunkRefsBatch(reqs) }
     assert(refs.flatten.size == 16)
     assert(refs(2).get.inline.head == 99 && refs(5).get.inline.head == 98)
     assert(refs(3).get.inline.head == 3, "committed ref lost under overlay")
@@ -331,7 +312,8 @@ class LatencyOpsSpec extends SparkTestBase {
       .toDF("coord", "kind")
       .withColumn("inline", typedLit(Array[Byte](42)))
     w.stageChunkRefs("/a", stagedDf)
-    val (refs2, jobs2) = countJobs(w.getChunkRefsBatch(reqs))
+    var refs2 = Seq.empty[Option[graft.meta.ChunkRef]]
+    val jobs2 = jobsDuring { refs2 = w.getChunkRefsBatch(reqs) }
     assert(refs2.flatten.size == 16)
     assert(refs2(7).get.inline.head == 42 && refs2(9).get.inline.head == 42)
     assert(refs2(2).get.inline.head == 99, "point edit lost under batch")

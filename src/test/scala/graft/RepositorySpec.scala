@@ -742,43 +742,15 @@ class RepositorySpec extends SparkTestBase {
       lit(0L).as("offset"), lit(10L).as("length")))
     s0.commit("bulk 30k")
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val jobDescs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        jobDescs.add(Option(js.properties)
-          .map(_.getProperty("spark.job.description", "?")).getOrElse("?") +
-          " :: " + js.stageInfos.map(_.name).mkString("; "))
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobDescription("OPEN")
+    // no Spark job between the markers: not the open, the point writes
+    // or the commit (nor any future the flush might spawn)
+    val leaked = jobsDuring {
       val s1 = repo.writableSession("main")
       for (i <- Seq(3, 14159, 29999))
         s1.writeChunk("/a", Seq(i), Array[Byte](7, 7))
-      spark.sparkContext.setJobDescription("COMMIT")
       s1.commit("interactive points")
-      // the listener bus is async: run one sentinel job and wait until
-      // its start event lands — every event from the commit precedes it
-      spark.sparkContext.setJobDescription("SENTINEL")
-      spark.range(1).count()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      // the sentinel may submit >1 job itself (AQE stage materialization)
-      // — what must be empty is the set of jobs ATTRIBUTED to the open or
-      // the commit (the description is thread-local and propagates into
-      // any future the flush might spawn)
-      val leaked = jobDescs.toArray(Array.empty[String])
-        .filterNot(_.startsWith("SENTINEL"))
-      assert(jobs.get() >= 1 && leaked.isEmpty,
-        s"fast path leaked Spark job(s): ${leaked.mkString(" | ")}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(leaked == 0, s"fast path leaked $leaked Spark job(s)")
 
     val ro = repo.readonlySession(VersionRef.Branch("main"))
     assert(ro.refs("/a").count() == 30000)

@@ -220,31 +220,12 @@ class SliceRouteSpec extends SparkTestBase {
     TensorPlane.writeValues(s, "/c", cells("int64", 8, 64), "int64")
     s.commit("one chunk")
     val ro = repo.readonlySession(VersionRef.Branch("main"))
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.add(Option(js.properties)
-          .map(_.getProperty("spark.job.description", "?")).getOrElse("?"))
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobDescription("SLICE")
-      val r = TensorPlane.sliceStats(ro, "/c", "int64",
+    var r = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsDuring {
+      r = TensorPlane.sliceStats(ro, "/c", "int64",
         Seq((2L, 5L), (10L, 20L))).collect()
-      assert(r.length == 1 && r(0).getAs[Long]("n") == 30)
-      spark.sparkContext.setJobDescription("SENTINEL")
-      spark.range(1).count()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.toArray(Array.empty[String]).contains("SENTINEL") &&
-          System.nanoTime() < deadline)
-        Thread.sleep(10)
-      val seen = jobs.toArray(Array.empty[String])
-      assert(seen.contains("SENTINEL"))
-      assert(!seen.contains("SLICE"), seen.mkString(" | "))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(r.length == 1 && r(0).getAs[Long]("n") == 30)
+    assert(jobs == 0, s"$jobs Spark jobs")
   }
 }

@@ -460,29 +460,17 @@ final class AssetManager(val store: Store, spark: SparkSession) {
   // ---- manifests (Parquet, written sorted for stats-based pruning) ----
   def manifestUri(id: String): String = store.uri(Layout.manifestPrefix(id))
 
-  /** FUSED manifest write for the bulk (Spark-path) flush (r17, guide
-    * §2.4): ONE exchange + ONE sort + ONE job where the window-based
-    * flush paid the precedence window's exchange+sort, the anti-join, the
-    * writer's second sort, AND a full extents-readback job.
-    *
-    * `rows` is the RAW merge relation — committed rows stamped
-    * `_batch = -1` unioned with the raw changeset rows (their staging
-    * `_batch` stamps) — bucketed with `split`. After the repartition to
-    * (node_id, split), every (node_id, coord) group is wholly inside one
-    * partition (split is a function of the coord), so sorting by
-    * (node_id, split, c0..c3, _batch desc) makes each key's rows adjacent
-    * with the precedence winner FIRST: last-write-wins dedup, the
-    * tombstone drop, and the shape-bounds filter all run as one streaming
-    * pass inside the write task. The task writes each shard with the
-    * SAME parquet writer as the driver fast path (proven byte-compatible
-    * with every reader) and RETURNS the shard stats — extents, ref count,
-    * byte sum — as its output, so the extents never need a readback scan
-    * (guide §6/§5: don't recompute what the write already knows).
-    *
-    * Equivalence with the window path is pinned by FusedFlushSpec:
-    * duplicate coords across/within batches, point-over-staged
-    * precedence, exclusion precedence, tombstone suppression,
-    * out-of-bounds winners, and extents equality.
+  /** The flush kernel on the Spark route (r17, guide §2.4): ONE exchange
+    * + ONE sort + ONE job. `rows` is the RAW merge relation — committed
+    * rows stamped `_batch = -1` unioned with the raw changeset rows (their
+    * staging `_batch` stamps) — bucketed with `split`. After the
+    * repartition to (node_id, split), every (node_id, coord) group is
+    * wholly inside one partition (split is a function of the coord), and
+    * the sort into [[AssetManager.FlushOrder]] hands each task the stream
+    * [[AssetManager.flushKernel]] consumes. The task writes each shard
+    * and RETURNS the shard stats as its output, so the extents never need
+    * a readback scan (guide §6/§5: don't recompute what the write already
+    * knows). FusedFlushSpec pins the rules the kernel applies.
     */
   def writeManifestFused(id: String, rows: DataFrame,
       gridOf: Map[String, Seq[Int]],
@@ -492,59 +480,52 @@ final class AssetManager(val store: Store, spark: SparkSession) {
     val grids = gridOf.map { case (k, v) => k -> v.toArray }
     val sorted = rows
       .repartition(col("node_id"), col("split"))
-      .sortWithinPartitions(col("node_id"), col("split"),
-        col("c0"), col("c1"), col("c2"), col("c3"), col("_batch").desc)
-    val sch = sorted.schema
-    val ix = AssetManager.FusedCols(
-      sch.fieldIndex("node_id"), sch.fieldIndex("coord"),
-      sch.fieldIndex("c0"), sch.fieldIndex("c1"), sch.fieldIndex("c2"),
-      sch.fieldIndex("c3"), sch.fieldIndex("kind"),
-      sch.fieldIndex("inline"), sch.fieldIndex("chunk_id"),
-      sch.fieldIndex("location"), sch.fieldIndex("offset"),
-      sch.fieldIndex("length"), sch.fieldIndex("etag"),
-      sch.fieldIndex("last_modified"), sch.fieldIndex("split"),
-      sch.fieldIndex("_batch"))
-    val stats = graft.core.Trace.span("manifest.write", "id" -> id) { _ =>
+      .sortWithinPartitions(AssetManager.FlushSortCols: _*)
+      .select(struct(AssetManager.RefCols.map(col): _*).as("ref"),
+        col("split"), col("_batch").as("batch"))
+      .as(org.apache.spark.sql.Encoders.product[AssetManager.FlushRow])
+    val stats = graft.core.Trace.span("manifest.write", "id" -> id,
+        "route" -> "spark") { _ =>
       sorted.mapPartitions(
-        AssetManager.fusedWritePartition(id, conf, grids, ix, txFusion))(
+        AssetManager.fusedWritePartition(id, conf, grids, txFusion))(
         org.apache.spark.sql.Encoders.product[FusedShardStat])
         .collect()
     }
-    stats.groupBy(_.node_id).map { case (node, rs) =>
-      node -> rs.toSeq.map(s =>
-        ManifestRef(id, s.split, s.emin, s.emax, s.nrefs, s.bytes))
-    }
+    AssetManager.manifestRefs(id, stats.toSeq)
   }
 
-  /** Write manifest shards DRIVER-side (no Spark job) — the small-commit
-    * fast path. Each (node, split) shard lands at the same partition-dir
-    * key Spark's writer would use, sorted by c0..c3 with row-group stats,
-    * so every reader (explicit-schema scan, DSv2, split cache) treats the
-    * two writers' files identically. Extents come from the in-memory rows;
-    * the split cache is warmed so the NEXT small commit reads its
-    * predecessor shard without any job at all.
+  /** The flush kernel on the driver (no Spark job) — the small-commit
+    * route. Each (node, split) group's rows sort locally into
+    * [[AssetManager.FlushOrder]] and the groups run through the kernel
+    * concurrently, each writing its shard through [[store]] (shard PUTs
+    * are independent write-once objects: a 10-shard commit at 150 ms RTT
+    * costs ~1 RTT of wall, not 10; round-13 latency soak). The split
+    * cache is warmed with each shard's winners, so the NEXT small commit
+    * reads its predecessor shard without any job at all. Returns the new
+    * shards and the changed keys (node_id, coord) the kernel logged.
     */
-  def writeManifestShardsDriver(id: String,
-      shards: Map[(String, Int), Seq[ChunkRef]]): Map[String, Seq[ManifestRef]] =
-    // shard PUTs are independent write-once objects — upload them
-    // concurrently (a 10-shard commit at 150 ms RTT costs ~1 RTT of
-    // wall, not 10; round-13 latency soak)
-    graft.storage.Store.parallelIO(shards.toSeq) { case ((node, split), refs0) =>
-      val refs = refs0.sorted(AssetManager.CoordOrder)
-      store.putBytes(
-        s"${Layout.manifestPrefix(id)}/node_id=$node/split=$split/" +
-          "part-00000-driver.zstd.parquet",
-        DriverParquet.writeChunkRefs(refs))
-      val nd = refs.iterator.map(_.coord.size).max
-      val mins = (0 until nd).map(i => refs.iterator.map(_.coord(i)).min)
-      val maxs = (0 until nd).map(i => refs.iterator.map(_.coord(i)).max)
-      val mref = ManifestRef(id, split, mins, maxs, refs.size.toLong,
-        refs.iterator.map(_.length).sum)
-      if (refs.size <= MaxCachedRefsPerSplit)
-        splitCachePut((id, node, split),
-          refs.map(r => (r.coord: Seq[Int]) -> r).toMap)
-      node -> mref
-    }.groupBy(_._1).map { case (n, rs) => n -> rs.map(_._2) }
+  def writeManifestDriver(id: String, rows: Seq[AssetManager.FlushRow],
+      gridOf: Map[String, Seq[Int]])
+      : (Map[String, Seq[ManifestRef]], Seq[(String, Seq[Int])]) =
+    graft.core.Trace.span("manifest.write", "id" -> id,
+        "route" -> "driver") { _ =>
+      val grids = gridOf.map { case (k, v) => k -> v.toArray }
+      val groups = rows.groupBy(r => (r.ref.node_id, r.split)).values.toSeq
+      val done = graft.storage.Store.parallelIO(groups) { g =>
+        val keys = scala.collection.mutable.ArrayBuffer[(String, Seq[Int])]()
+        val shards = AssetManager.flushKernel(id, grids, keepWinners = true,
+          store.putBytes, (node, coord) => keys += (node -> coord))(
+          g.sorted(AssetManager.FlushOrder).iterator)
+        (shards, keys.toSeq)
+      }
+      val shards = done.flatMap(_._1)
+      shards.foreach { case (s, refs) =>
+        if (refs.size <= MaxCachedRefsPerSplit)
+          splitCachePut((id, s.node_id, s.split),
+            refs.iterator.map(r => (r.coord: Seq[Int]) -> r).toMap)
+      }
+      (AssetManager.manifestRefs(id, shards.map(_._1)), done.flatMap(_._2))
+    }
 
   /** Read one shard's refs entirely driver-side: split cache when warm,
     * otherwise fetch the partition dir's data files through the Store and
@@ -612,8 +593,8 @@ final class AssetManager(val store: Store, spark: SparkSession) {
     }
   }
 
-  /** Tx-log write without a Spark job (point-only commits: every row is
-    * driver-known).
+  /** One commit's driver-known tx-log rows (node edits, and the chunk
+    * keys the kernel logged on the driver route) as one file.
     */
   def writeTxLogDriver(snapshotId: String, rows: Seq[EditRow]): Unit =
     store.putBytes(
@@ -862,9 +843,20 @@ final class AssetManager(val store: Store, spark: SparkSession) {
   }
 
   // ---- transaction logs ----
-  def writeTxLog(snapshotId: String, edits: DataFrame): Unit =
-    edits.write.option("compression", "zstd")
-      .parquet(store.uri(Layout.txLogPrefix(snapshotId)))
+  /** An amend's log absorbs the replaced tip's: each of its files is
+    * copied into `to`'s log under a new name. Keys the two logs share
+    * appear twice; every reader dedupes them (diff, merge, both conflict
+    * detectors).
+    */
+  def copyTxLog(from: String, to: String): Unit = {
+    val src = Layout.txLogPrefix(from) + "/"
+    graft.storage.Store.parallelIO(
+      store.list(src).filter(_.key.endsWith(".parquet"))) { o =>
+      store.copy(o.key,
+        s"${Layout.txLogPrefix(to)}/amend-$from-${o.key.stripPrefix(src)}")
+    }
+    ()
+  }
 
   def readTxLog(snapshotId: String): DataFrame =
     spark.read.parquet(store.uri(Layout.txLogPrefix(snapshotId)))
@@ -892,8 +884,8 @@ final class AssetManager(val store: Store, spark: SparkSession) {
     val files = store.list(Layout.txLogPrefix(snapshotId) + "/")
       .filter(_.key.endsWith(".parquet"))
     if (files.isEmpty || files.map(_.size).sum > maxBytes) None
-    else Some(files.flatMap(f =>
-      DriverParquet.readEditRows(store.getBytes(f.key))))
+    else Some(graft.storage.Store.parallelIO(files)(f =>
+      DriverParquet.readEditRows(store.getBytes(f.key))).flatten)
   }
 
   def txLogExists(snapshotId: String): Boolean =
@@ -927,126 +919,220 @@ final case class FusedShardStat(node_id: String, split: Int,
     emin: Seq[Int], emax: Seq[Int], nrefs: Long, bytes: Long)
 
 object AssetManager {
-  /** Row order inside a manifest shard: c0..c3, as the Spark writers sort. */
-  private[meta] val CoordOrder: Ordering[ChunkRef] = (a, b) => {
-    var c = Integer.compare(a.c0, b.c0)
+  /** One input row of the flush kernel: a chunk ref, the manifest split it
+    * buckets into, and its precedence stamp — committed rows ride at −1,
+    * strictly below every changeset stamp.
+    */
+  final case class FlushRow(ref: ChunkRef, split: Int, batch: Double)
+
+  /** [[ChunkRef]]'s columns, in declaration order. */
+  private[graft] val RefCols: Seq[String] = Seq("node_id", "coord", "c0",
+    "c1", "c2", "c3", "kind", "inline", "chunk_id", "location", "offset",
+    "length", "etag", "last_modified")
+
+  /** Precedence among the rows of one (node_id, coord): `_batch desc`,
+    * then every payload column. The payload tail makes the order total,
+    * so duplicate coords within ONE staged batch pick the same winner on
+    * every route, every task attempt and every read of the session.
+    */
+  val PrecedenceCols: Seq[org.apache.spark.sql.Column] =
+    col("_batch").desc +: RefCols.drop(6).map(col)
+
+  /** The flush kernel's input order, as Spark sort columns: (node_id,
+    * split, c0..c3, coord), then [[PrecedenceCols]]. [[FlushOrder]] is
+    * the same order on the driver.
+    */
+  val FlushSortCols: Seq[org.apache.spark.sql.Column] =
+    Seq("node_id", "split", "c0", "c1", "c2", "c3", "coord").map(col) ++
+      PrecedenceCols
+
+  // Spark's ascending orders: nulls first; strings and binaries compare
+  // as unsigned bytes (UTF-8 byte order is code-point order)
+  private def cmpStr(a: String, b: String): Int =
+    if (a eq b) 0 else if (a == null) -1 else if (b == null) 1
+    else {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+      if (i == n) Integer.compare(a.length, b.length)
+      else {
+        val (x, y) = (a.charAt(i), b.charAt(i))
+        // a surrogate encodes a code point above every non-surrogate char
+        if (Character.isSurrogate(x) == Character.isSurrogate(y))
+          Integer.compare(x, y)
+        else if (Character.isSurrogate(x)) 1 else -1
+      }
+    }
+
+  private def cmpBytes(a: Array[Byte], b: Array[Byte]): Int =
+    if (a eq b) 0 else if (a == null) -1 else if (b == null) 1
+    else java.util.Arrays.compareUnsigned(a, b)
+
+  private def cmpCoord(a: Seq[Int], b: Seq[Int]): Int =
+    if (a eq b) 0 else if (a == null) -1 else if (b == null) 1
+    else {
+      val n = math.min(a.size, b.size)
+      var i = 0
+      var c = 0
+      while (c == 0 && i < n) { c = Integer.compare(a(i), b(i)); i += 1 }
+      if (c != 0) c else Integer.compare(a.size, b.size)
+    }
+
+  /** [[FlushSortCols]] on the driver. */
+  val FlushOrder: Ordering[FlushRow] = (x, y) => {
+    val (a, b) = (x.ref, y.ref)
+    var c = cmpStr(a.node_id, b.node_id)
+    if (c == 0) c = Integer.compare(x.split, y.split)
+    if (c == 0) c = Integer.compare(a.c0, b.c0)
     if (c == 0) c = Integer.compare(a.c1, b.c1)
     if (c == 0) c = Integer.compare(a.c2, b.c2)
     if (c == 0) c = Integer.compare(a.c3, b.c3)
+    if (c == 0) c = cmpCoord(a.coord, b.coord)
+    if (c == 0) c = java.lang.Double.compare(y.batch, x.batch) // desc
+    if (c == 0) c = cmpStr(a.kind, b.kind)
+    if (c == 0) c = cmpBytes(a.inline, b.inline)
+    if (c == 0) c = cmpStr(a.chunk_id, b.chunk_id)
+    if (c == 0) c = cmpStr(a.location, b.location)
+    if (c == 0) c = java.lang.Long.compare(a.offset, b.offset)
+    if (c == 0) c = java.lang.Long.compare(a.length, b.length)
+    if (c == 0) c = cmpStr(a.etag, b.etag)
+    if (c == 0) c = Integer.compare(a.last_modified, b.last_modified)
     c
   }
 
-  /** Column indices of the fused-write input, resolved driver-side once. */
-  final case class FusedCols(node: Int, coord: Int, c0: Int, c1: Int,
-      c2: Int, c3: Int, kind: Int, inline: Int, chunkId: Int,
-      location: Int, offset: Int, length: Int, etag: Int,
-      lastModified: Int, split: Int, batch: Int)
+  /** Last-writer-wins precedence over a stream in [[FlushOrder]]: the
+    * rows of one (node_id, coord) are adjacent with the highest stamp
+    * first, so the first row of each run is the winner and the rest are
+    * dropped — the window's row_number() = 1, inlined.
+    */
+  def precedence(rows: Iterator[FlushRow]): Iterator[FlushRow] = {
+    var last: ChunkRef = null
+    rows.filter { r =>
+      val win = last == null || r.ref.node_id != last.node_id ||
+        r.ref.coord != last.coord
+      last = r.ref
+      win
+    }
+  }
 
-  /** Fused transaction-log write (r17): when set, each fused-write task
-    * ALSO writes its partition's distinct changed keys — one
-    * `EditRow.chunk(node, path, coord)` per (node_id, coord) whose
-    * precedence winner is a CHANGESET row (`_batch >= 0`; committed rows
-    * ride at −1) — as a tx-log parquet shard under `prefix`
-    * (`part-<partition>-fused.zstd.parquet`). This is exactly the key set
-    * the separate log job produced (`chunkChangesRaw.distinct` on
-    * (node_id, coord)): a key has a `_batch >= 0` row iff the changeset
-    * edited it, and the winner of an edited key always stamps ≥ 0 since
-    * −1 sorts below every changeset batch. Riding the manifest write's
-    * exchange, the log costs zero extra jobs — the flush's only
-    * remaining Spark work is the ONE fused job.
+  /** Where the Spark route's tasks write the keys the flush kernel logs:
+    * one `EditRow.chunk(node, path, coord)` per (node_id, coord) whose
+    * precedence winner is a CHANGESET row (`batch >= 0`), as tx-log
+    * shards under `prefix`. A key has a changeset row iff the changeset
+    * edited it, and then its winner stamps ≥ 0, since −1 sorts below
+    * every changeset stamp — so the log holds exactly the distinct
+    * changed keys, tombstones and keys of nodes without a grid included,
+    * at zero extra jobs.
     */
   final case class FusedTxSpec(prefix: String, pathOf: Map[String, String])
 
-  /** The fused write's per-partition task (executor-side; everything it
-    * captures is serializable). Input rows arrive sorted by
-    * (node_id, split, c0..c3, _batch desc); the pass streams them with
-    * O(1) state per open shard:
-    *
-    *  - (node_id, split) group change ⇒ finish the previous shard's file
-    *    (one store PUT at the exact partition-dir key every reader
-    *    expects) and emit its [[FusedShardStat]];
-    *  - within a group, rows sharing (c0..c3) form an adjacency run;
-    *    the FIRST row of each distinct exact coord in the run is the
-    *    precedence winner (sort put max `_batch` first), later rows of
-    *    the same coord are dropped — the window's row_number()=1, inlined;
-    *  - a winner with `kind = delete` suppresses the key (tombstone);
-    *  - a winner outside the node's chunk grid (wrong arity or any
-    *    per-dim index outside [0, n)) is dropped — the flush bounds
-    *    filter, applied AFTER precedence exactly like the window path
-    *    (an out-of-bounds winner removes the key; an older in-bounds row
-    *    must NOT resurface).
-    *
-    * Rows for nodes absent from `grids` are dropped, mirroring the old
-    * path's inner join against the changed-node grid relation.
+  private[meta] def manifestRefs(id: String, stats: Seq[FusedShardStat])
+      : Map[String, Seq[ManifestRef]] =
+    stats.groupBy(_.node_id).map { case (node, rs) =>
+      node -> rs.map(s =>
+        ManifestRef(id, s.split, s.emin, s.emax, s.nrefs, s.bytes))
+    }
+
+  /** The Spark route's task (executor-side; everything it captures is
+    * serializable): the kernel over the task's sorted partition, writing
+    * through the executor's cached store, its logged keys streamed into
+    * one tx-log shard per task (`part-<partition>-fused.zstd.parquet`
+    * under `txFusion.prefix`).
     */
   private[meta] def fusedWritePartition(id: String,
       conf: graft.storage.StoreConf,
       grids: Map[String, Array[Int]],
-      ix: FusedCols,
-      txFusion: Option[FusedTxSpec] = None)(
-      rows: Iterator[org.apache.spark.sql.Row])
-      : Iterator[FusedShardStat] = {
+      txFusion: Option[FusedTxSpec])(
+      rows: Iterator[FlushRow]): Iterator[FusedShardStat] = {
     val store = graft.storage.StoreConf.cached(conf)
-    val out = scala.collection.mutable.ArrayBuffer[FusedShardStat]()
     var txWriter: DriverParquet.EditRowShardWriter = null
+    try {
+      val shards = flushKernel(id, grids, keepWinners = false,
+        store.putBytes, (node, coord) => txFusion.foreach { tx =>
+          if (txWriter == null) txWriter = new DriverParquet.EditRowShardWriter
+          txWriter.append(EditRow.Chunk, node, tx.pathOf.getOrElse(node, null),
+            coord, null)
+        })(rows)
+      txFusion.foreach { tx =>
+        if (txWriter != null) {
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val bytes = txWriter.closeBytes()
+          txWriter = null
+          store.putBytes(f"${tx.prefix}/part-$pid%05d-fused.zstd.parquet",
+            bytes)
+        }
+      }
+      shards.iterator.map(_._1)
+    } catch {
+      case t: Throwable =>
+        if (txWriter != null) txWriter.abort()
+        throw t
+    }
+  }
+
+  /** The flush kernel, shared by the driver and Spark routes. Input rows
+    * arrive in [[FlushOrder]]; the pass streams the [[precedence]]
+    * winners with O(1) state per open shard:
+    *
+    *  - (node_id, split) group change ⇒ finish the previous shard's file
+    *    (`put` at the exact partition-dir key every reader expects) and
+    *    emit its [[FusedShardStat]] — extents, ref count, byte sum — plus,
+    *    when `keepWinners`, the refs it holds;
+    *  - every winner of a changeset row logs its key (`logKey`);
+    *  - a winner with `kind = delete` suppresses the key (tombstone);
+    *  - a winner outside the node's chunk grid (wrong arity or any
+    *    per-dim index outside [0, n)) is dropped — the flush bounds
+    *    filter, applied AFTER precedence (an out-of-bounds winner removes
+    *    the key; an older in-bounds row must NOT resurface).
+    *
+    * Nodes absent from `grids` (edited, but no longer arrays) are logged
+    * and write no shard.
+    */
+  private[meta] def flushKernel(id: String,
+      grids: Map[String, Array[Int]],
+      keepWinners: Boolean,
+      put: (String, Array[Byte]) => Unit,
+      logKey: (String, Seq[Int]) => Unit)(
+      rows: Iterator[FlushRow]): Seq[(FusedShardStat, Seq[ChunkRef])] = {
+    val out = scala.collection.mutable.ArrayBuffer[(FusedShardStat, Seq[ChunkRef])]()
     var curNode: String = null
     var curSplit = 0
     var grpOpen = false
     var grid: Array[Int] = null
     var writer: DriverParquet.ChunkRefShardWriter = null
+    val winners = scala.collection.mutable.ArrayBuffer[ChunkRef]()
     var mins: Array[Int] = null
     var maxs: Array[Int] = null
     var count = 0L
     var sumBytes = 0L
-    // adjacency-run dedup state (rows sharing c0..c3)
-    var runOpen = false
-    var rc0 = 0; var rc1 = 0; var rc2 = 0; var rc3 = 0
-    val runSeen = scala.collection.mutable.HashSet[Seq[Int]]()
     def flushGroup(): Unit = {
       if (writer != null) {
         val bytes = writer.closeBytes()
         writer = null
-        store.putBytes(
-          s"${Layout.manifestPrefix(id)}/node_id=$curNode" +
-            s"/split=$curSplit/part-00000-fused.zstd.parquet", bytes)
-        out += FusedShardStat(curNode, curSplit,
-          mins.toSeq, maxs.toSeq, count, sumBytes)
+        put(s"${Layout.manifestPrefix(id)}/node_id=$curNode" +
+          s"/split=$curSplit/part-00000-fused.zstd.parquet", bytes)
+        out += (FusedShardStat(curNode, curSplit,
+          mins.toSeq, maxs.toSeq, count, sumBytes) -> winners.toSeq)
+        winners.clear()
       }
       grpOpen = false
-      runOpen = false
     }
     try {
-      rows.foreach { r =>
-        val node = r.getString(ix.node)
-        val split = r.getInt(ix.split)
-        if (!grpOpen || node != curNode || split != curSplit) {
+      precedence(rows).foreach { fr =>
+        val r = fr.ref
+        if (!grpOpen || r.node_id != curNode || fr.split != curSplit) {
           flushGroup()
-          curNode = node; curSplit = split; grpOpen = true
-          grid = grids.getOrElse(node, null)
+          curNode = r.node_id; curSplit = fr.split; grpOpen = true
+          grid = grids.getOrElse(curNode, null)
           val nd = if (grid == null) 0 else grid.length
           mins = Array.fill(nd)(Int.MaxValue)
           maxs = Array.fill(nd)(Int.MinValue)
           count = 0L; sumBytes = 0L
         }
-        val c0 = r.getInt(ix.c0); val c1 = r.getInt(ix.c1)
-        val c2 = r.getInt(ix.c2); val c3 = r.getInt(ix.c3)
-        if (!runOpen || c0 != rc0 || c1 != rc1 || c2 != rc2 || c3 != rc3) {
-          runSeen.clear()
-          rc0 = c0; rc1 = c1; rc2 = c2; rc3 = c3; runOpen = true
-        }
-        val coord: Seq[Int] =
-          if (r.isNullAt(ix.coord)) null else r.getSeq[Int](ix.coord)
-        if (coord != null && runSeen.add(coord)) { // first row = winner
-          txFusion.foreach { tx =>
-            if (r.getDouble(ix.batch) >= 0) { // changeset key → log it
-              if (txWriter == null)
-                txWriter = new DriverParquet.EditRowShardWriter
-              txWriter.append(EditRow.Chunk, node,
-                tx.pathOf.getOrElse(node, null), coord, null)
-            }
-          }
-          val kind = r.getString(ix.kind)
-          if (kind != ChunkRef.KindDelete && grid != null &&
+        val coord = r.coord
+        if (coord != null) {
+          if (fr.batch >= 0) logKey(curNode, coord) // a changeset key
+          if (r.kind != ChunkRef.KindDelete && grid != null &&
               coord.size == grid.length) {
             var i = 0; var ok = true
             while (ok && i < grid.length) {
@@ -1057,15 +1143,10 @@ object AssetManager {
             if (ok) {
               if (writer == null)
                 writer = new DriverParquet.ChunkRefShardWriter
-              val len = if (r.isNullAt(ix.length)) 0L else r.getLong(ix.length)
-              writer.append(coord, c0, c1, c2, c3, kind,
-                if (r.isNullAt(ix.inline)) null
-                else r.getAs[Array[Byte]](ix.inline),
-                r.getString(ix.chunkId), r.getString(ix.location),
-                if (r.isNullAt(ix.offset)) 0L else r.getLong(ix.offset),
-                len, r.getString(ix.etag),
-                if (r.isNullAt(ix.lastModified)) 0
-                else r.getInt(ix.lastModified))
+              writer.append(coord, r.c0, r.c1, r.c2, r.c3, r.kind, r.inline,
+                r.chunk_id, r.location, r.offset, r.length, r.etag,
+                r.last_modified)
+              if (keepWinners) winners += r
               var d = 0
               while (d < grid.length) {
                 val c = coord(d)
@@ -1074,27 +1155,17 @@ object AssetManager {
                 d += 1
               }
               count += 1L
-              sumBytes += len
+              sumBytes += r.length
             }
           }
         }
       }
       flushGroup()
-      txFusion.foreach { tx =>
-        if (txWriter != null) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val bytes = txWriter.closeBytes()
-          txWriter = null
-          store.putBytes(
-            f"${tx.prefix}/part-$pid%05d-fused.zstd.parquet", bytes)
-        }
-      }
     } catch {
       case t: Throwable =>
         if (writer != null) writer.abort()
-        if (txWriter != null) txWriter.abort()
         throw t
     }
-    out.iterator
+    out.toSeq
   }
 }

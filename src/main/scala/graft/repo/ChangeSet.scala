@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.meta.{ChunkRef, NodeSpec}
+import graft.meta.{AssetManager, ChunkRef, NodeSpec}
 import graft.meta.GraftEncoders._
 
 /** Uncommitted edits of a session (change_set.rs:48-68).
@@ -12,7 +12,7 @@ import graft.meta.GraftEncoders._
   * Node-level edits are driver-held (hierarchies are small); chunk-level
   * edits are a sequence of staged DataFrame batches plus a driver-side
   * buffer for point writes. Precedence is last-write-wins per (node, coord),
-  * resolved lazily with a window over the batch sequence number — the
+  * resolved lazily by the batch sequence number — the
   * changeset itself never materializes on the driver (the reference caps a
   * commit at 50 M refs, change_set.rs:36; we stream them through Spark).
   */
@@ -156,7 +156,8 @@ final class ChangeSet {
   /** The RAW chunk-edit relation: every staged/point row with its `_batch`
     * precedence stamp, exclusions anti-joined, NO precedence window (r17).
     * Duplicate (node_id, coord) keys may appear — the winner is the row
-    * with the highest `_batch`. Consumers either apply the window
+    * first in [[AssetManager.PrecedenceCols]] (highest `_batch`, ties
+    * broken by payload). Consumers either apply the window
     * ([[chunkChanges]]), dedup driver-side ([[resolvedDriver]]), or dedup
     * inside an exchange they already pay for (the fused flush write).
     *
@@ -193,7 +194,8 @@ final class ChangeSet {
     */
   def chunkChanges(spark: SparkSession): DataFrame = {
     if (pointOnly) return chunkChangesRaw(spark).drop("_batch")
-    val w = Window.partitionBy("node_id", "coord").orderBy(col("_batch").desc)
+    val w = Window.partitionBy("node_id", "coord")
+      .orderBy(AssetManager.PrecedenceCols: _*)
     chunkChangesRaw(spark)
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn", "_batch")
@@ -258,40 +260,22 @@ final class ChangeSet {
 object ChangeSet {
   /** Bounded collect of a RAW changes relation ([[ChangeSet
     * .chunkChangesRaw]] output, possibly persisted by the caller) with
-    * driver-side precedence resolution: Some(resolved) when the raw rows
-    * fit `maxRows`, None when the changeset is too large for the driver.
+    * precedence resolved driver-side by the flush kernel's own step
+    * ([[graft.meta.AssetManager.precedence]] over the rows sorted into
+    * its order), so ties resolve exactly as the fused write resolves
+    * them: Some(resolved) when the raw rows fit `maxRows`, None when the
+    * changeset is too large for the driver.
     */
   private[graft] def collectRawHead(raw: DataFrame,
       maxRows: Int): Option[Seq[ChunkRef]] = {
     val head = raw
       .limit(maxRows + 1)
-      .select(struct(col("node_id"), col("coord"), col("c0"), col("c1"),
-        col("c2"), col("c3"), col("kind"), col("inline"), col("chunk_id"),
-        col("location"), col("offset"), col("length"), col("etag"),
-        col("last_modified")).as("_1"),
-        col("_batch").as("_2"))
-      .as(org.apache.spark.sql.Encoders.product[(ChunkRef, Double)])
+      .select(struct(AssetManager.RefCols.map(col): _*).as("ref"),
+        lit(0).as("split"), col("_batch").as("batch"))
+      .as(org.apache.spark.sql.Encoders.product[AssetManager.FlushRow])
       .collect()
-    if (head.length <= maxRows) Some(dedupDriver(head.toSeq)) else None
-  }
-
-  /** Driver-side last-write-wins precedence over raw (ref, _batch) rows —
-    * the in-memory equivalent of [[ChangeSet.chunkChanges]]'s window
-    * (row_number over _batch desc per (node_id, coord)). Ties (duplicate
-    * coords within ONE staged batch) resolve arbitrarily in both forms;
-    * here the later-collected row wins. Insertion order is preserved so
-    * repeated resolutions are stable.
-    */
-  private[graft] def dedupDriver(
-      rows: Seq[(ChunkRef, Double)]): Seq[ChunkRef] = {
-    val m = mutable.LinkedHashMap[(String, Seq[Int]), (ChunkRef, Double)]()
-    rows.foreach { case (r, b) =>
-      val k = (r.node_id, r.coord: Seq[Int])
-      m.get(k) match {
-        case Some((_, ob)) if ob > b => ()
-        case _ => m.put(k, (r, b))
-      }
-    }
-    m.valuesIterator.map(_._1).toSeq
+    if (head.length > maxRows) None
+    else Some(AssetManager.precedence(
+      head.sorted(AssetManager.FlushOrder).iterator).map(_.ref).toVector)
   }
 }

@@ -1081,9 +1081,9 @@ final class Session private[repo] (
 
     var newRefs: Map[String, Seq[ManifestRef]] = Map.empty
     var touchedSplits: Map[String, Set[Int]] = Map.empty
-    // set when the fused manifest write also wrote the chunk tx-log
-    // shards (under snapId's prefix) — finalize then skips the log job
-    var fusedTx: Option[graft.meta.AssetManager.FusedTxSpec] = None
+    // the chunk keys the kernel logged on the driver route; the Spark
+    // route's tasks write theirs as tx-log shards
+    var loggedKeys: Seq[EditRow] = Nil
     // Spark-path flush cache (resolved changeset); released in the
     // enclosing finally so a throw ANYWHERE after the persist (collect,
     // manifest write, snapshot write) cannot leak blocks into the CAS
@@ -1094,9 +1094,9 @@ final class Session private[repo] (
     // Resolve a small NON-point changeset driver-side FIRST (r16): the
     // resolved rows answer BOTH the changed-node-id set (otherwise its
     // own distinct+collect job in chunkEditNodeIds) and the driver
-    // fast-path flush below. r17: the collect runs over the RAW
-    // (window-free) changes relation and resolves precedence driver-side
-    // (ChangeSet.dedupDriver) — no precedence-window exchange+sort is
+    // route below. r17: the collect runs over the RAW (window-free)
+    // changes relation and resolves precedence driver-side
+    // (ChangeSet.collectRawHead) — no precedence-window exchange+sort is
     // planned anywhere in the flush anymore. The raw frame is persisted
     // so the Spark fallback of an over-bound changeset reuses the same
     // staging-scan materialization; the memo shares the resolution with
@@ -1125,37 +1125,48 @@ final class Session private[repo] (
     val fullRewrite: Set[String] =
       (changeSet.rewrittenNodes.toSet ++ shrunkIds)
         .filter(changedIds.contains)
-
-    // ---- small-commit fast path: point-only changesets merge + write
-    // entirely DRIVER-side (no Spark job anywhere in the flush) — the
-    // reference's sub-second interactive commit (benches/manifest.rs:329).
-    // Eligible when every edit is a driver-held point edit, no shape
-    // shrink/reindex forces a full rewrite, and each previous shard to
-    // merge is small enough to hold in memory (Session.SmallCommitMaxShardRefs;
-    // see its scaladoc for the cost model). Rewritten nodes qualify when
-    // the driver holds their rows (a point-only changeset — compaction's
-    // driver route): no committed shard merges into them, and their rows
-    // are committed refs the caller already read under that bound, so
-    // neither the staged-collect bound (SmallCommitMaxRefs) nor the
-    // per-shard bound applies to them. Everything else falls through to
-    // the Spark path.
-    val splitRuleOf = scala.collection.mutable.HashMap[String, (Int, Int)]()
-    def splitOfRef(r: ChunkRef): Int = {
-      val (axis, sz) =
-        splitRuleOf.getOrElseUpdate(r.node_id, cfg.splitFor(byId(r.node_id)))
-      (if (axis < r.coord.size) r.coord(axis) else 0) / sz
+    // both routes run the one flush kernel: it writes the changed shards
+    // and logs every edited key — of arrays, and of nodes edited but no
+    // longer arrays (logged with no manifest)
+    val manifestId = Ids.toBase32(Ids.newObjectId())
+    val grids = changedIds.iterator.map(id =>
+      id -> (byId(id).numChunksPerDim: Seq[Int])).toMap
+    val pathOf = {
+      val all = (effective ++ baseSnapshot.nodes).map(n => n.id -> n.path).toMap
+      editNodeIdsAll.iterator.map(id => id -> all.getOrElse(id, null)).toMap
     }
+
+    // ---- small-commit fast path: changesets whose resolved edits the
+    // driver holds merge + write entirely DRIVER-side (no Spark job
+    // anywhere in the flush) — the reference's sub-second interactive
+    // commit (benches/manifest.rs:329). Eligible when no shape
+    // shrink/reindex forces a full rewrite, and each previous shard to
+    // merge is small enough to hold in memory
+    // (Session.SmallCommitMaxShardRefs; see its scaladoc for the cost
+    // model). Rewritten nodes qualify when the driver holds their rows (a
+    // point-only changeset — compaction's driver route): no committed
+    // shard merges into them, and their rows are committed refs the
+    // caller already read under that bound, so neither the staged-collect
+    // bound (SmallCommitMaxRefs) nor the per-shard bound applies to them.
+    // Everything else falls through to the Spark path.
+    val splitRuleOf = scala.collection.mutable.HashMap[String, (Int, Int)]()
+    def splitOfRef(r: ChunkRef): Int =
+      if (!changedIds.contains(r.node_id)) 0
+      else {
+        val (axis, sz) = splitRuleOf.getOrElseUpdate(r.node_id,
+          cfg.splitFor(byId(r.node_id)))
+        (if (axis < r.coord.size) r.coord(axis) else 0) / sz
+      }
     val heldRewrite: Set[String] =
       if (changeSet.pointOnly) fullRewrite else Set.empty
-    lazy val pointRefs = (
-      if (changeSet.pointOnly) changeSet.resolvedPointEdits
-      else collectedRefs.getOrElse(Nil))
+    val driverEdits =
+      if (changeSet.pointOnly) Some(changeSet.resolvedPointEdits)
+      else collectedRefs
+    lazy val pointRefs = driverEdits.getOrElse(Nil)
       .filter(r => changedIds.contains(r.node_id))
     lazy val mergedRefs = pointRefs.filterNot(r => heldRewrite(r.node_id))
-    val fastEligible = changedIds.nonEmpty &&
-      (changeSet.pointOnly || collectedRefs.isDefined) &&
+    val onDriver = driverEdits.isDefined &&
       shrunkIds.isEmpty && changeSet.rewrittenNodes.forall(heldRewrite) &&
-      (pointRefs.nonEmpty || heldRewrite.nonEmpty) &&
       mergedRefs.size <= Session.SmallCommitMaxRefs &&
       mergedRefs.groupBy(_.node_id).forall { case (id, refs) =>
         val touched = refs.map(splitOfRef).toSet
@@ -1163,88 +1174,60 @@ final class Session private[repo] (
           .filter(m => touched.contains(m.split))
           .forall(_.numRefs <= Session.SmallCommitMaxShardRefs)
       }
-    if (fastEligible) {
-      val byShard = pointRefs.groupBy(r => (r.node_id, splitOfRef(r)))
-      touchedSplits = byShard.keys.toSeq.groupBy(_._1)
-        .map { case (n, ks) => n -> ks.map(_._2).toSet }
-      // bounded-concurrency prefetch of the previous shards (#2274,
-      // `max_concurrent_manifest_fetches_during_commit`): each shard is
-      // one ranged GET on a real object store, and the merge loop below
-      // then reads them from the warmed split cache. Default 1 keeps the
-      // reference's serial behavior.
-      val prevShards = byShard.keys.toSeq.flatMap { case (node, split) =>
+    if (onDriver) {
+      touchedSplits = pointRefs.groupBy(_.node_id)
+        .map { case (n, rs) => n -> rs.map(splitOfRef).toSet }
+      // the previous shards the edits merge into, at precedence −1
+      val prevShards = touchedSplits.toSeq.flatMap { case (node, splits) =>
         if (heldRewrite.contains(node)) Nil
         else baseSnapshot.manifests.getOrElse(node, Nil)
-          .filter(_.split == split).map(m => (m, node))
-      }.distinct
-      if (cfg.manifestFetchConcurrency > 1 && prevShards.size > 1) {
-        import scala.jdk.CollectionConverters._
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(cfg.manifestFetchConcurrency, prevShards.size))
-        try pool.invokeAll(prevShards.map { case (m, node) =>
-          (() => { assets.shardRefsDriver(m, node); () }):
-            java.util.concurrent.Callable[Unit]
-        }.asJava).asScala.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e) }
-        } finally pool.shutdown()
+          .filter(m => splits.contains(m.split)).map(m => (m, node))
       }
-      val shards = byShard.flatMap { case (key @ (node, split), edits) =>
-        val editedCoords = edits.map(r => (r.coord: Seq[Int])).toSet
-        val prev = (if (heldRewrite.contains(node)) Nil
-          else baseSnapshot.manifests.getOrElse(node, Nil))
-          .filter(_.split == split)
-          .flatMap(m => assets.shardRefsDriver(m, node))
-          .filterNot(r => editedCoords.contains(r.coord))
-        val grid = byId(node).numChunksPerDim
-        val merged = (prev ++ edits)
-          .filter(_.kind != ChunkRef.KindDelete)
-          .filter(r => r.coord.size == grid.size &&
-            r.coord.zip(grid).forall { case (c, n) => c >= 0 && c < n })
-        if (merged.isEmpty) None else Some(key -> merged)
+      // bounded-concurrency read of the previous shards (#2274,
+      // `max_concurrent_manifest_fetches_during_commit`): each shard is
+      // one ranged GET on a real object store. Default 1 keeps the
+      // reference's serial behavior.
+      val rows = graft.storage.Store.parallelIO(prevShards,
+          math.max(1, cfg.manifestFetchConcurrency)) { case (m, node) =>
+        assets.shardRefsDriver(m, node)
+          .map(r => graft.meta.AssetManager.FlushRow(r, m.split, -1.0))
+      }.flatten ++ driverEdits.get.map(r =>
+        graft.meta.AssetManager.FlushRow(r, splitOfRef(r), 0.0))
+      if (rows.nonEmpty) {
+        val (refs, keys) = assets.writeManifestDriver(manifestId, rows, grids)
+        newRefs = refs
+        loggedKeys = keys.map { case (n, c) =>
+          EditRow.chunk(n, pathOf.getOrElse(n, null), c) }
       }
-      if (shards.nonEmpty) {
-        val manifestId = Ids.toBase32(Ids.newObjectId())
-        newRefs = assets.writeManifestShardsDriver(manifestId, shards)
-      }
-    } else if (changedIds.nonEmpty) {
+    } else if (changedIds.nonEmpty || changeSet.hasChunkChanges) {
       // persist the RAW changeset for the flush's duration: the staging
-      // scans otherwise re-run for the touched-splits collect, the fused
-      // manifest write, AND the tx log (released before flushInternal
-      // returns). The small-changeset probe above may already hold the
-      // persisted handle — reuse it so the scan materializes exactly
-      // once. No precedence window runs here at all (r17): last-write-
-      // wins resolves INSIDE the fused write's one exchange+sort.
+      // scans otherwise re-run for the touched-splits collect and the
+      // fused manifest write (released before flushInternal returns).
+      // The small-changeset probe above may already hold the persisted
+      // handle — reuse it so the scan materializes exactly once. No
+      // precedence window runs here at all (r17): last-write-wins
+      // resolves INSIDE the fused write's one exchange+sort.
       val changesAll = flushCached.getOrElse {
         val c = changeSet.chunkChangesRaw(spark)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         flushCached = Some(c)
         c
       }
-      val changes = changesAll
-        .filter(col("node_id").isin(changedIds.toSeq: _*))
-      // manifest split bucketing (config DSL — config.rs:168-263)
+      // manifest split bucketing (config DSL — config.rs:168-263); rows
+      // of nodes without a split rule (no longer arrays) bucket to 0
       val splitSpecs = changedIds.toSeq.map { id =>
         val (axis, sz) = cfg.splitFor(byId(id))
         (id, axis, sz)
       }
-      val splitDf = spark.createDataFrame(splitSpecs.map(t =>
-        org.apache.spark.sql.Row(t._1, t._2, t._3)).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node_id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("axis",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("splitsz",
-            org.apache.spark.sql.types.IntegerType))))
+      val splitDf =
+        spark.createDataFrame(splitSpecs).toDF("node_id", "axis", "splitsz")
       def bucket(df: org.apache.spark.sql.DataFrame) =
-        df.join(broadcast(splitDf), Seq("node_id"))
-          .withColumn("split",
+        df.join(broadcast(splitDf), Seq("node_id"), "left")
+          .withColumn("split", coalesce(
             coalesce(try_element_at(col("coord"), col("axis") + 1), lit(0))
-              .divide(col("splitsz")).cast("int"))
+              .divide(col("splitsz")).cast("int"), lit(0)))
           .drop("axis", "splitsz")
-      val changesWithSplit = bucket(changes)
+      val changesWithSplit = bucket(changesAll)
 
       // which (node, split) shards does this flush touch? Only those are
       // rewritten — an append rewrites ONE shard, the core write-
@@ -1263,13 +1246,8 @@ final class Session private[repo] (
         baseSnapshot.manifests.getOrElse(n, Nil).nonEmpty)
       touchedSplits =
         if (changeSet.pointOnly)
-          changeSet.resolvedPointEdits
-            .filter(r => changedIds.contains(r.node_id))
-            .groupBy(_.node_id).map { case (id, refs) =>
-              val (axis, sz) = cfg.splitFor(byId(id))
-              id -> refs.map(r =>
-                (if (axis < r.coord.size) r.coord(axis) else 0) / sz).toSet
-            }
+          pointRefs.groupBy(_.node_id)
+            .map { case (n, rs) => n -> rs.map(splitOfRef).toSet }
         else if (nodesWithPrev.isEmpty) Map.empty
         else graft.core.Trace.span("flush.splits") { _ =>
           changesWithSplit
@@ -1293,36 +1271,16 @@ final class Session private[repo] (
         .drop("split")
       // changeset-over-snapshot merge (session.rs:2587-2635), expressed
       // as pure precedence (r17): committed rows ride with _batch = -1 —
-      // strictly below every staged/point stamp — so the fused write's
-      // last-write-wins dedup IS the old anti-join+union, and the
-      // tombstone drop + shape-bounds filter apply to each key's winner
-      // inside the same streaming pass. One exchange (the write
-      // repartition), one sort, one job, extents as task output.
+      // strictly below every staged/point stamp — so the kernel's
+      // last-write-wins step IS the old anti-join+union. One exchange
+      // (the write repartition), one sort, one job, extents and the
+      // chunk tx-log shards as task output.
       val prev = bucket(prevTouched.unionByName(prevFull))
         .withColumn("_batch", lit(-1.0))
-      val manifestId = Ids.toBase32(Ids.newObjectId())
-      // fuse the tx log into the same job (r17): eligible when the log's
-      // key set equals the fused input's changeset keys — every edited
-      // node survived into changedIds (a node staged then deleted/
-      // retyped would need its keys logged yet has no manifest rows) —
-      // and this isn't an amend absorbing an existing log (that path
-      // unions + distincts the replaced log, Spark-side).
-      fusedTx =
-        if (mergeTxLogOf.exists(assets.txLogExists) ||
-            editNodeIdsAll.exists(id => !changedIds.contains(id))) None
-        else {
-          val pathOf = (effective ++ baseSnapshot.nodes)
-            .map(n => n.id -> n.path).toMap
-          Some(graft.meta.AssetManager.FusedTxSpec(
-            graft.meta.Layout.txLogPrefix(snapId),
-            changedIds.iterator.map(id =>
-              id -> pathOf.getOrElse(id, null)).toMap))
-        }
       newRefs = assets.writeManifestFused(manifestId,
-        changesWithSplit.unionByName(prev),
-        changedIds.iterator.map(id =>
-          id -> (byId(id).numChunksPerDim: Seq[Int])).toMap,
-        fusedTx)
+        changesWithSplit.unionByName(prev), grids,
+        Some(graft.meta.AssetManager.FusedTxSpec(
+          graft.meta.Layout.txLogPrefix(snapId), pathOf)))
     }
 
     // manifest assembly: unchanged arrays carry everything; merged arrays
@@ -1353,32 +1311,26 @@ final class Session private[repo] (
     // write-once objects — upload them concurrently (one RTT instead of
     // two on the interactive-commit path; the CAS that publishes them
     // happens strictly after both land, so partial visibility is
-    // impossible). Spark-path tx logs run a job on the second thread,
-    // which is safe (jobs may be submitted from any thread).
+    // impossible)
     graft.core.Trace.span("flush.finalize") { _ =>
       graft.storage.Store.parallelIO[() => Unit, Unit](Seq(
         () => assets.writeSnapshot(snapshot),
-        () => writeTxLog(snapshot, changedIds, mergeTxLogOf, flushCached,
-          driverRefs =
-            if (fastEligible && !changeSet.pointOnly) collectedRefs
-            else None,
-          chunksFused = fusedTx.isDefined)))(
-        f => f())
+        () => writeTxLog(snapshot, loggedKeys, mergeTxLogOf)))(f => f())
     }
     snapshot
 
     } finally flushCached.foreach(_.unpersist(false))
   }
 
-  /** Transaction log for this flush (transaction_log.rs): node edits are
-    * driver-known; chunk edit coords stream from the changeset DataFrame.
+  /** Transaction log for this flush (transaction_log.rs): the node edits
+    * and the chunk keys the kernel logged on the driver route land as one
+    * file (the Spark route's tasks already wrote theirs), and an amend
+    * copies the replaced tip's log in, so `diff` across the amend still
+    * reports the full edit set (the reference keeps the amended log
+    * addressable; SURVEY §8).
     */
-  private def writeTxLog(snapshot: Snapshot, changedIds: Set[String],
-                         mergeTxLogOf: Option[String] = None,
-                         cachedChanges: Option[DataFrame] = None,
-                         driverRefs: Option[Seq[ChunkRef]] = None,
-                         chunksFused: Boolean = false): Unit = {
-    val pathOf = (nodes ++ baseSnapshot.nodes).map(n => n.id -> n.path).toMap
+  private def writeTxLog(snapshot: Snapshot, chunkKeys: Seq[EditRow],
+                         mergeTxLogOf: Option[String]): Unit = {
     val nodeEdits =
       changeSet.newNodes.values.map(n => EditRow.node(
         if (n.isArray) EditRow.NewArray else EditRow.NewGroup, n.id, n.path)) ++
@@ -1390,58 +1342,8 @@ final class Session private[repo] (
           else EditRow.DeleteGroup,
           baseSnapshot.nodes.find(_.path == p).map(_.id).getOrElse(""), p) } ++
       changeSet.moves.map { case (id, f, t) => EditRow.move(id, f, t) }
-    // point-only changesets know every row driver-side — write the log
-    // without a Spark job (pairs with the small-commit manifest fast
-    // path); small staged changesets already collected by the flush's
-    // fast path take the same route (r16: the tx log was the last Spark
-    // job of a driver-side flush)
-    // fused bulk path (r17): the chunk rows are already on disk as tx-log
-    // shards written inside the manifest job — only the (driver-known)
-    // node edits remain, landing as a sibling driver file in the same
-    // log dir (fusion is disabled for amends, so no combine runs here)
-    if (chunksFused) {
-      assets.writeTxLogDriver(snapshot.id, nodeEdits.toSeq)
-      return
-    }
-    if ((changeSet.pointOnly || driverRefs.isDefined) &&
-        mergeTxLogOf.filter(assets.txLogExists).isEmpty) {
-      val chunkRows =
-        if (!changeSet.hasChunkChanges) Nil
-        else driverRefs.getOrElse(changeSet.resolvedPointEdits).map(r =>
-          EditRow.chunk(r.node_id, pathOf.getOrElse(r.node_id, null), r.coord))
-      assets.writeTxLogDriver(snapshot.id, nodeEdits.toSeq ++ chunkRows)
-      return
-    }
-    val nodeDf = spark.createDataset(nodeEdits.toSeq)(editRowEnc).toDF()
-    val chunkDf =
-      if (!changeSet.hasChunkChanges) spark.emptyDataset(editRowEnc).toDF()
-      else if (changeSet.pointOnly)
-        // driver-known coords: build the rows directly, no path join
-        spark.createDataset(changeSet.resolvedPointEdits.toVector.map(r =>
-          EditRow.chunk(r.node_id, pathOf.getOrElse(r.node_id, null),
-            r.coord)))(editRowEnc).toDF()
-      else {
-        val pathDf = spark.createDataset(pathOf.toSeq)(strPairEnc).toDF("node_id", "path")
-        // reuse the flush's persisted RAW changeset when available; the
-        // log records each edited KEY once, so the raw rows distinct on
-        // (node_id, coord) — exactly the window path's key set (the
-        // window kept one row per key and the log never read payloads)
-        cachedChanges.getOrElse(changeSet.chunkChangesRaw(spark))
-          .select("node_id", "coord").distinct()
-          .join(broadcast(pathDf), Seq("node_id"), "left")
-          .select(lit(EditRow.Chunk).as("edit"), col("node_id"), col("path"),
-            col("coord"), lit(null).cast("string").as("to_path"))
-      }
-    val own = nodeDf.unionByName(chunkDf)
-    // amended-log bookkeeping: the snapshot REPLACING a tip absorbs the
-    // replaced commit's transaction log, so `diff` across the amend still
-    // reports the full edit set (the reference keeps the amended log
-    // addressable; SURVEY §8)
-    val combined = mergeTxLogOf
-      .filter(assets.txLogExists)
-      .map(id => own.unionByName(assets.readTxLog(id)).distinct())
-      .getOrElse(own)
-    assets.writeTxLog(snapshot.id, combined)
+    assets.writeTxLogDriver(snapshot.id, nodeEdits.toSeq ++ chunkKeys)
+    mergeTxLogOf.foreach(assets.copyTxLog(_, snapshot.id))
   }
 
   /** Commit: optimistic CAS loop with rebase-on-conflict

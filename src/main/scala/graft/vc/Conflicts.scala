@@ -36,8 +36,9 @@ object ConflictDetector {
   def detect(session: Session, theirLog: DataFrame): Seq[Conflict] = {
     val cs = session.changeSet
     val spark = theirLog.sparkSession
+    // distinct: an amended log may list a node edit twice
     val theirNodeEdits = theirLog.filter(col("edit") =!= EditRow.Chunk)
-      .select("edit", "node_id", "path", "to_path").collect()
+      .select("edit", "node_id", "path", "to_path").distinct().collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3)))
     val out = nodeConflicts(session, theirNodeEdits)
@@ -89,7 +90,7 @@ object ConflictDetector {
                   ourRefs: Seq[graft.meta.ChunkRef]): Seq[Conflict] = {
     val cs = session.changeSet
     val theirNodeEdits = theirRows.filter(_.edit != EditRow.Chunk)
-      .map(r => (r.edit, r.node_id, r.path, r.to_path)).toArray
+      .map(r => (r.edit, r.node_id, r.path, r.to_path)).distinct.toArray
     val out = nodeConflicts(session, theirNodeEdits)
     if (cs.hasChunkChanges) {
       val theirUpdated = theirNodeEdits.collect {

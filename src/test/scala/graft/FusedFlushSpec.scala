@@ -109,6 +109,52 @@ class FusedFlushSpec extends SparkTestBase {
     snap.nodes.find(_.path == "/a").get.id
   }
 
+  /** Run `f`: the spans it emitted and the start time of each Spark job
+    * it ran.
+    */
+  private def traced(f: => Unit): (Seq[graft.core.Trace.Span], Seq[Long]) = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        starts.add(js.time); ()
+      }
+    }
+    val mem = graft.core.Trace.toMemory()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // returns once the listener bus delivered every job start of `f`
+      jobsDuring(f)
+      (mem.spans, starts.toArray.toSeq.map(_.asInstanceOf[Long]))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.core.Trace.disable()
+    }
+  }
+
+  private def routesOf(spans: Seq[graft.core.Trace.Span]): Seq[String] =
+    spans.filter(_.name == "manifest.write")
+      .map(_.attrs.getOrElse("route", "?"))
+
+  /** The `route` of every `manifest.write` span `f` emitted. */
+  private def flushRoutes(f: => Unit): Seq[String] = routesOf(traced(f)._1)
+
+  /** Spark jobs started inside a `flush.finalize` span, where a tx-log
+    * writer job would run.
+    */
+  private def finalizeJobs(spans: Seq[graft.core.Trace.Span],
+                           starts: Seq[Long]): Int =
+    starts.count(t => spans.exists(s => s.name == "flush.finalize" &&
+      t >= s.startMillis && t <= s.startMillis + s.durMicros / 1000 + 1))
+
+  /** `n` rows over 10 coords from `c0`, payloads differing in `length`. */
+  private def stageDups(s: Session, n: Int, c0: Int): Unit =
+    s.stageChunkRefs("/a", spark.range(0, n).select(
+      (pmod(col("id"), lit(10)) + c0).cast("int").as("c"), col("id"))
+      .select(array(col("c")).as("coord"), lit("virtual").as("kind"),
+        concat(lit("file:///D/"), col("c")).as("location"),
+        lit(0L).as("offset"), col("id").as("length")))
+
   test("duplicate coords within ONE staged batch collapse to a single row") {
     val repo = Repository.create(Store.local(tmpDir("fused3")), spark,
       GraftConfig(splits = Seq(SplitRule(".*", 0, 1000))))
@@ -116,20 +162,30 @@ class FusedFlushSpec extends SparkTestBase {
     s0.addArray("/a", Seq(100), Seq(1))
     s0.commit("init")
     val s1 = repo.writableSession("main")
-    // the same coord staged twice in one batch (identical payloads, since
-    // within-batch ties are arbitrary in both the window and fused forms)
-    s1.stageChunkRefs("/a", spark.range(0, 20000).select(
-      (pmod(col("id"), lit(10))).cast("int").as("c"))
-      .select(array(col("c")).as("coord"), lit("virtual").as("kind"),
-        concat(lit("file:///D/"), col("c")).as("location"),
-        lit(0L).as("offset"), lit(5L).as("length")))
-    s1.commit("dups")
+    // the same coord staged 2000 times in one batch, the payloads
+    // differing only in length: the total tie order (payload columns past
+    // _batch) makes the smallest length win, on every route and attempt
+    stageDups(s1, 20000, 0)
+    assert(flushRoutes(s1.commit("dups")) == Seq("spark"))
     val ro = repo.readonlySession(VersionRef.Branch("main"))
-    val rows = ro.refs("/a").select("coord", "location").collect()
+    val rows = ro.refs("/a").select("coord", "location", "length").collect()
     assert(rows.length == 10, s"got ${rows.length}")
     rows.foreach { r =>
-      assert(r.getString(1) == s"file:///D/${r.getSeq[Int](0).head}")
+      val c = r.getSeq[Int](0).head
+      assert(r.getString(1) == s"file:///D/$c")
+      assert(r.getLong(2) == c, s"Spark-route winner at $c") // min id ≡ c
     }
+    // under the staged-collect bound the driver route resolves the same
+    // ties to the same winners
+    val s2 = repo.writableSession("main")
+    stageDups(s2, 2000, 10)
+    assert(flushRoutes(s2.commit("dups on the driver")) == Seq("driver"))
+    val got = repo.readonlySession(VersionRef.Branch("main")).refs("/a")
+      .select("coord", "length").collect()
+      .map(r => r.getSeq[Int](0).head -> r.getLong(1)).toMap
+    assert(got.size == 20, s"got ${got.size}")
+    (10 until 20).foreach(c =>
+      assert(got(c) == c - 10, s"driver-route winner at $c: ${got(c)}"))
   }
 
   test("merge past the driver-route delta bound takes the Spark staging " +
@@ -232,5 +288,54 @@ class FusedFlushSpec extends SparkTestBase {
     val d = repo.diff(VersionRef.SnapshotVer(base),
       VersionRef.SnapshotVer(tip))
     assert(d.filter(col("edit") === "chunk").count() == 12000)
+  }
+
+  test("bulk amend and keys of a deleted node: the one fused job logs " +
+      "every key, no tx-log job runs") {
+    val repo = Repository.create(Store.local(tmpDir("fusedamend")), spark,
+      GraftConfig(splits = Seq(SplitRule(".*", 0, 4000))))
+    val s0 = repo.writableSession("main")
+    s0.addArray("/a", Seq(30000), Seq(1))
+    s0.addArray("/gone", Seq(30000), Seq(1))
+    stageRange(s0, "/a", 0, 12000, "C")
+    s0.commit("base")
+    def chunkKeys(id: String) = repo.assets.readTxLog(id)
+      .filter(col("edit") === "chunk").select("path", "coord").collect()
+      .map(r => (r.getString(0), r.getSeq[Int](1).head))
+    val s1 = repo.writableSession("main")
+    stageRange(s1, "/a", 0, 12000, "A")
+    s1.commit("draft")
+    // a bulk amend: the replaced log's files are copied in, no job reads
+    // or rewrites them
+    val s2 = repo.writableSession("main")
+    stageRange(s2, "/a", 6000, 18000, "B")
+    var amended = ""
+    val (amendSpans, amendStarts) = traced {
+      amended = s2.commit("amended", amend = true)
+    }
+    assert(routesOf(amendSpans) == Seq("spark"))
+    assert(finalizeJobs(amendSpans, amendStarts) == 0)
+    val keys = chunkKeys(amended)
+    assert(keys.length == 24000) // both edit sets, shared keys twice
+    assert(keys.map(_._2).toSet == (0 until 18000).toSet)
+    // keys of a node deleted in the session that staged them (a forked
+    // writer's batch merged after the delete): logged with no manifest
+    val s3 = repo.writableSession("main")
+    val f = s3.fork()
+    stageRange(f, "/gone", 0, 12000, "G")
+    s3.deleteNode("/gone")
+    s3.merge(f)
+    stageRange(s3, "/a", 0, 12000, "D")
+    var tip = ""
+    val (spans, starts) = traced { tip = s3.commit("delete /gone") }
+    assert(routesOf(spans) == Seq("spark"))
+    assert(finalizeJobs(spans, starts) == 0)
+    val logged = chunkKeys(tip)
+    assert(logged.count(_._1 == "/gone") == 12000)
+    assert(logged.count(_._1 == "/a") == 12000)
+    val snap = repo.assets.readSnapshot(tip)
+    assert(snap.nodes.forall(_.path != "/gone"))
+    assert(repo.readonlySession(VersionRef.SnapshotVer(tip)).refs("/a")
+      .filter(col("location").startsWith("file:///D/")).count() == 12000)
   }
 }

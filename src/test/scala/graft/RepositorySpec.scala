@@ -770,10 +770,12 @@ class RepositorySpec extends SparkTestBase {
     def refs(n: Int, tag: Int) = (0 until n).map(i =>
       graft.meta.ChunkRef.virtualRef("node", Seq(tag, i),
         s"file:///x/$tag/$i", 0L, 8L))
+    import graft.meta.AssetManager.FlushRow
+    val grid = Map("node" -> Seq(100, 250001))
     // 30 shards x 60k refs = 1.8M refs pushed through the cache
     val mrefs = (0 until 30).map { t =>
-      am.writeManifestShardsDriver(f"m$t%04d",
-        Map(("node", t) -> refs(60000, t)))("node").head
+      am.writeManifestDriver(f"m$t%04d",
+        refs(60000, t).map(FlushRow(_, t, 0.0)), grid)._1("node").head
     }
     val (entries, total) = am.splitCacheStats
     assert(total <= 1000000L, s"total cached refs $total over the bound")
@@ -785,8 +787,8 @@ class RepositorySpec extends SparkTestBase {
     assert(total2 <= 1000000L, s"reload broke the bound: $total2")
     // an OVERSIZED split (> per-split cap) is never cached but resolves
     // through the stats-pruned scan path
-    val big = am.writeManifestShardsDriver("mbig",
-      Map(("node", 99) -> refs(250001, 99)))("node").head
+    val big = am.writeManifestDriver("mbig",
+      refs(250001, 99).map(FlushRow(_, 99, 0.0)), grid)._1("node").head
     val statsBefore = am.splitCacheStats
     val rb = am.lookupRef(big, "node", Seq(99, 250000))
     assert(rb.exists(_.location == "file:///x/99/250000"))

@@ -580,7 +580,7 @@ class S3RepositorySpec extends SparkTestBase {
     } finally server.stop()
   }
 
-  test("connectors open an S3 repo via s3.* options (V1 and DSv2)") {
+  test("connectors open an S3 repo via s3.* options (both DSv2 short names)") {
     val (server, repo) = freshRepo()
     try {
       val s = repo.writableSession("main")

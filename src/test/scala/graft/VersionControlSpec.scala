@@ -51,13 +51,56 @@ class VersionControlSpec extends SparkTestBase {
     s2.commit("draft") // edits chunk 0
     val s3 = repo.writableSession("main")
     s3.writeChunk("/a", Seq(1), Array[Byte](2))
-    s3.commit("final", amend = true) // edits chunk 1, replaces draft
+    var tip = ""
+    // a point-only amend copies the replaced log's files: no Spark job
+    val amendJobs = jobsDuring {
+      tip = s3.commit("final", amend = true) // edits chunk 1, replaces draft
+    }
+    assert(amendJobs == 0, s"point-only amend ran $amendJobs Spark jobs")
+    // the amended log itself holds both edit sets
+    val logged = repo.assets.readTxLogRowsDriver(tip).get
+      .filter(_.edit == graft.meta.EditRow.Chunk).map(_.coord).toSet
+    assert(logged == Set(Seq(0), Seq(1)), s"amended log: $logged")
     // diff from the surviving parent must report BOTH chunk edits
     val d = repo.diff(VersionRef.SnapshotVer(c1), VersionRef.Branch("main"))
     val chunkCoords = d.filter(org.apache.spark.sql.functions.col("edit") ===
         graft.meta.EditRow.Chunk)
       .select("coord").collect().map(_.getSeq[Int](0)).toSet
     assert(chunkCoords == Set(Seq(0), Seq(1)))
+  }
+
+  test("rebase over an amended commit reports a node edit both of its " +
+      "logs share once") {
+    val repo = freshRepo()
+    val s = repo.writableSession("main")
+    s.addArray("/a", Seq(10), Seq(1))
+    s.commit("c1")
+    val ours = repo.writableSession("main") // opened before the amend
+    val d1 = repo.writableSession("main")
+    d1.updateArray("/a", Seq(10), Seq(1), userData = "draft")
+    d1.commit("draft")
+    val d2 = repo.writableSession("main")
+    d2.updateArray("/a", Seq(10), Seq(1), userData = "final")
+    val amended = d2.commit("final", amend = true)
+    // the amended log lists the same update_array edit twice
+    val theirRows = repo.assets.readTxLogRowsDriver(amended).get
+    assert(theirRows.count(_.edit == graft.meta.EditRow.UpdateArray) == 2)
+    ours.updateArray("/a", Seq(10), Seq(1), userData = "ours")
+    ours.writeChunk("/a", Seq(3), Array[Byte](3))
+    val expected = Seq(Conflict.ChunksUpdatedInUpdatedArray,
+      Conflict.ZarrMetadataDoubleUpdate)
+    // the Spark detector over the amended log: each conflict once
+    val viaSpark = ConflictDetector.detect(ours, repo.assets.readTxLog(amended))
+    assert(viaSpark.map(_.kind).sorted == expected, s"detect: $viaSpark")
+    // the rebase takes the driver detector; it sees each conflict once too
+    val seen = scala.collection.mutable.ArrayBuffer[Seq[Conflict]]()
+    val recorder = new ConflictSolver {
+      def solve(session: Session, theirLog: org.apache.spark.sql.DataFrame,
+                conflicts: Seq[Conflict]): Unit = seen += conflicts
+    }
+    ours.commit("ours", solver = recorder)
+    assert(seen.size == 1 && seen.head.map(_.kind).sorted == expected,
+      s"rebase saw $seen")
   }
 
   test("detached commit registers a snapshot without moving the branch") {

@@ -139,12 +139,11 @@ object ChunkCodec {
 case class DecodeChunkExpr(child: Expression, dtype: String,
                            compression: String)
     extends UnaryExpression with CodegenFallback {
+  ChunkCodec.dtypeWidth(dtype) // refuse at plan time, not in a task
   override def dataType: DataType =
     if (ChunkCodec.IntDtypes.contains(dtype))
       ArrayType(LongType, containsNull = false)
-    else if (ChunkCodec.FloatDtypes.contains(dtype))
-      ArrayType(DoubleType, containsNull = false)
-    else throw new IllegalArgumentException(s"unknown dtype $dtype")
+    else ArrayType(DoubleType, containsNull = false)
 
   override def nullSafeEval(input: Any): Any = {
     val raw = ChunkCodec.decompress(input.asInstanceOf[Array[Byte]],
@@ -179,43 +178,23 @@ case class DecodeChunkExpr(child: Expression, dtype: String,
 
 /** Per-chunk reduction without exploding to rows: decode + one tight loop
   * → struct(count, sum, min, max). 1 GiB of int64 reduces in ~1 s where
-  * the row-explode path pays per-element generator overhead — THE pattern
-  * for whole-array statistics at 100 TB (decode cost scales with data,
-  * row machinery cost is zero).
+  * the row-explode path pays per-element generator overhead. The loop is
+  * [[SliceGeom.Stats]], run once over the whole buffer (padding cells of
+  * partial edge chunks included).
   */
 case class ChunkStatsExpr(child: Expression, dtype: String,
                           compression: String)
     extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType), StructField("sum", DoubleType),
-    StructField("min", DoubleType), StructField("max", DoubleType)))
+  private val width = ChunkCodec.dtypeWidth(dtype) // refuse at plan time
+  override def dataType: DataType = SliceGeom.StatsType
 
   override def nullSafeEval(input: Any): Any = {
     val raw = ChunkCodec.decompress(input.asInstanceOf[Array[Byte]],
       compression)
-    val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    var n = 0L; var sum = 0.0
-    var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-    @inline def acc(v: Double): Unit = {
-      n += 1; sum += v
-      if (v < mn) mn = v
-      if (v > mx) mx = v
-    }
-    dtype match {
-      case "int8" => var i = 0; while (i < raw.length) { acc(bb.get(i)); i += 1 }
-      case "int16" => var i = 0
-        while (i < raw.length / 2) { acc(bb.getShort(i * 2)); i += 1 }
-      case "int32" => var i = 0
-        while (i < raw.length / 4) { acc(bb.getInt(i * 4)); i += 1 }
-      case "int64" => var i = 0
-        while (i < raw.length / 8) { acc(bb.getLong(i * 8).toDouble); i += 1 }
-      case "float32" => var i = 0
-        while (i < raw.length / 4) { acc(bb.getFloat(i * 4)); i += 1 }
-      case "float64" => var i = 0
-        while (i < raw.length / 8) { acc(bb.getDouble(i * 8)); i += 1 }
-    }
-    org.apache.spark.sql.catalyst.InternalRow(n, sum,
-      if (n == 0) null else mn, if (n == 0) null else mx)
+    val st = new SliceGeom.Stats
+    st.addRun(ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN), dtype, 0,
+      raw.length / width)
+    st.row
   }
 
   override protected def withNewChildInternal(c: Expression): ChunkStatsExpr =
@@ -227,8 +206,8 @@ case class ChunkStatsExpr(child: Expression, dtype: String,
   * (`[underflow, bin_0..bin_{nbins-1}, overflow]` over `[lo, hi)`).
   * The rollup over chunks is an elementwise sum of tiny arrays — the
   * whole distribution sketch of a 100 TB array moves
-  * `chunks × (nbins+2)` longs, never cells. Same padding caveat as
-  * [[ChunkStatsExpr]]: partial edge chunks contribute their fill cells.
+  * `chunks × (nbins+2)` longs, never cells. Partial edge chunks
+  * contribute their fill cells.
   */
 case class ChunkHistogramExpr(child: Expression, dtype: String,
                               compression: String, lo: Double, hi: Double,
@@ -236,9 +215,7 @@ case class ChunkHistogramExpr(child: Expression, dtype: String,
     extends UnaryExpression with CodegenFallback {
   require(nbins > 0 && nbins <= (1 << 20), s"bad nbins $nbins")
   require(hi > lo, s"bad histogram range [$lo, $hi)")
-  require(ChunkCodec.IntDtypes.contains(dtype) ||
-    ChunkCodec.FloatDtypes.contains(dtype),
-    s"unknown dtype $dtype") // refuse at plan time, not per-row in a task
+  ChunkCodec.dtypeWidth(dtype) // refuse at plan time, not in a task
   override def dataType: DataType = ArrayType(LongType,
     containsNull = false)
 
@@ -528,8 +505,8 @@ private[graft] object SliceGeom {
   /** Grid-dispatching form: regular grids go through [[block]]; a
     * non-empty `rectSizes` (per-dim chunk-length tables) resolves this
     * chunk's start/extent from the tables (O(coord) prefix sum per
-    * chunk — chunks are MB-sized, the sum is noise). Out-of-grid coords
-    * return null (no overlap).
+    * chunk, on any `Seq` — chunks are MB-sized, the sum is noise).
+    * Out-of-grid coords return null (no overlap).
     */
   def blockOf(coord: Array[Int], chunkShape: Array[Long],
               rectSizes: Seq[Seq[Long]], lo: Array[Long],
@@ -541,13 +518,12 @@ private[graft] object SliceGeom {
       val ex = new Array[Long](nd)
       var i = 0
       while (i < nd) {
-        val sizes = rectSizes(i)
-        if (coord(i) < 0 || coord(i) >= sizes.size) return null
-        var st = 0L
+        val sizes = rectSizes(i).iterator
+        if (coord(i) < 0 || rectSizes(i).lengthCompare(coord(i)) <= 0)
+          return null
         var j = 0
-        while (j < coord(i)) { st += sizes(j); j += 1 }
-        start(i) = st
-        ex(i) = sizes(coord(i))
+        while (j < coord(i)) { start(i) += sizes.next(); j += 1 }
+        ex(i) = sizes.next()
         i += 1
       }
       blockAt(start, ex, lo, hi)
@@ -556,7 +532,8 @@ private[graft] object SliceGeom {
   /** Generalized form for grids whose chunk extents vary per coordinate
     * (rectilinear, store.rs:1158-1241): the caller supplies THIS chunk's
     * global start and per-dim extent; strides come from the actual
-    * extents, so in-chunk position arithmetic is grid-agnostic.
+    * extents, so in-chunk position arithmetic is grid-agnostic. Rank 0
+    * is one cell at position 0.
     */
   def blockAt(start: Array[Long], extent: Array[Long], lo: Array[Long],
               hi: Array[Long]): Block = {
@@ -571,52 +548,71 @@ private[graft] object SliceGeom {
       i += 1
     }
     val strides = new Array[Long](nd)
-    strides(nd - 1) = 1L
+    if (nd > 0) strides(nd - 1) = 1L
     var d = nd - 2
     while (d >= 0) { strides(d) = strides(d + 1) * extent(d + 1); d -= 1 }
     Block(from, until, strides, start, extent.clone())
   }
 
-  /** One chunk's (count, sum, min, max) over its cells inside `[lo, hi)`.
-    * `min`/`max` are meaningless when `n == 0` (no overlap).
+  /** Running count, sum, min and max of a chunk's cells: the one
+    * double-valued stats loop of the value plane. `sum` adds `v.toDouble`
+    * in cell order; `min`/`max` are meaningless while `n == 0`.
     */
-  final case class Stats(n: Long, sum: Double, min: Double, max: Double)
+  final class Stats {
+    var n = 0L
+    var sum = 0.0
+    var min = Double.PositiveInfinity
+    var max = Double.NegativeInfinity
+
+    /** Fold in the `len` cells of `bb` starting at cell `base`. */
+    def addRun(bb: ByteBuffer, dtype: String, base: Int, len: Int): Unit = {
+      val end = base + len
+      var p = base
+      dtype match {
+        case "int8" => while (p < end) { add(bb.get(p)); p += 1 }
+        case "int16" => while (p < end) { add(bb.getShort(p * 2)); p += 1 }
+        case "int32" => while (p < end) { add(bb.getInt(p * 4)); p += 1 }
+        case "int64" =>
+          while (p < end) { add(bb.getLong(p * 8).toDouble); p += 1 }
+        case "float32" => while (p < end) { add(bb.getFloat(p * 4)); p += 1 }
+        case "float64" => while (p < end) { add(bb.getDouble(p * 8)); p += 1 }
+      }
+      n += len
+    }
+
+    @inline private def add(v: Double): Unit = {
+      sum += v
+      if (v < min) min = v
+      if (v > max) max = v
+    }
+
+    /** `struct(n, sum, min, max)`, min/max null over zero cells. */
+    def row: org.apache.spark.sql.catalyst.InternalRow =
+      org.apache.spark.sql.catalyst.InternalRow(n, sum,
+        if (n == 0) null else min, if (n == 0) null else max)
+  }
+
+  /** `struct(n, sum, min, max)` of the stats kernels. */
+  val StatsType: StructType = StructType(Seq(
+    StructField("n", LongType), StructField("sum", DoubleType),
+    StructField("min", DoubleType), StructField("max", DoubleType)))
 
   /** The per-chunk rule of a slice-statistics read, shared by
     * [[ChunkSliceStatsExpr]] (the Spark route) and the driver route of
     * `TensorPlane.sliceStats`: decode only the sub-block of `bytes` (the
-    * chunk at `coord`) inside the region and reduce it in one pass.
+    * chunk at `coord`) inside the region and reduce it run by run.
     */
   def stats(bytes: Array[Byte], coord: Array[Int], dtype: String,
             compression: String, chunkShape: Array[Long],
             rectSizes: Seq[Seq[Long]], lo: Array[Long],
             hi: Array[Long]): Stats = {
+    val st = new Stats
     val blk = blockOf(coord, chunkShape, rectSizes, lo, hi)
-    if (blk == null)
-      return Stats(0L, 0.0, Double.PositiveInfinity, Double.NegativeInfinity)
+    if (blk == null) return st
     val raw = ChunkCodec.decompress(bytes, compression)
     val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    val read: Long => Double = dtype match {
-      case "int8" => p => bb.get(p.toInt).toDouble
-      case "int16" => p => bb.getShort(p.toInt * 2).toDouble
-      case "int32" => p => bb.getInt(p.toInt * 4).toDouble
-      case "int64" => p => bb.getLong(p.toInt * 8).toDouble
-      case "float32" => p => bb.getFloat(p.toInt * 4).toDouble
-      case "float64" => p => bb.getDouble(p.toInt * 8)
-    }
-    var n = 0L; var sum = 0.0
-    var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-    foreachRun(blk) { (base, len) =>
-      var j = 0
-      while (j < len) {
-        val v = read(base + j)
-        n += 1; sum += v
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-        j += 1
-      }
-    }
-    Stats(n, sum, mn, mx)
+    foreachRun(blk)((base, len) => st.addRun(bb, dtype, base.toInt, len))
+    st
   }
 
   /** Iterate the sub-block as contiguous inner runs: `f(basePos, len)` is
@@ -624,6 +620,7 @@ private[graft] object SliceGeom {
     */
   def foreachRun(b: Block)(f: (Long, Int) => Unit): Unit = {
     val nd = b.from.length
+    if (nd == 0) { f(0L, 1); return }
     val runLen = b.until(nd - 1) - b.from(nd - 1)
     if (nd == 1) { f(b.from(0).toLong, runLen); return }
     val idx = b.from.clone()
@@ -661,21 +658,17 @@ case class ChunkSliceStatsExpr(bytes: Expression, coord: Expression,
     extends BinaryExpression with CodegenFallback {
   override def left: Expression = bytes
   override def right: Expression = coord
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType), StructField("sum", DoubleType),
-    StructField("min", DoubleType), StructField("max", DoubleType)))
+  override def dataType: DataType = SliceGeom.StatsType
 
   private val chunkArr = chunkShape.toArray
   private val loArr = lo.toArray
   private val hiArr = hi.toArray
 
-  override def nullSafeEval(b: Any, c: Any): Any = {
-    val s = SliceGeom.stats(b.asInstanceOf[Array[Byte]],
+  override def nullSafeEval(b: Any, c: Any): Any =
+    SliceGeom.stats(b.asInstanceOf[Array[Byte]],
       c.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
         .toIntArray(), dtype, compression, chunkArr, rectSizes, loArr, hiArr)
-    org.apache.spark.sql.catalyst.InternalRow(s.n, s.sum,
-      if (s.n == 0) null else s.min, if (s.n == 0) null else s.max)
-  }
+      .row
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): ChunkSliceStatsExpr =

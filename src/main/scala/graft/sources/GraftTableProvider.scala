@@ -1174,11 +1174,8 @@ case class KeyedValuesPartition(vp: ValuesPartition, keyVals: Array[Long])
 class GraftReaderFactory(required: StructType)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case sp: SplitPartition => new GraftPartitionReader(sp, required)
-      case vp: ValuesPartition => new GraftValuesReader(vp, required)
-      case kp: KeyedValuesPartition => new GraftValuesReader(kp.vp, required)
-    }
+    throw new UnsupportedOperationException(
+      "graft scans are columnar: Spark reads them through createColumnarReader")
 
   /** Both modes hand Spark '''columnar batches''': values fill primitive
     * long/double vectors in tight per-chunk loops; refs append
@@ -1238,39 +1235,6 @@ private[sources] class SplitGroupIterator(files: Array[String],
       val n = list.getFieldRepetitionCount("list")
       Array.tabulate(n)(i => list.getGroup("list", i).getInteger("element", 0))
     }
-}
-
-/** parquet-mr row reader for one manifest split (refs mode). */
-class GraftPartitionReader(part: SplitPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val it = new SplitGroupIterator(part.files, part.fsConf)
-  private var current: Group = _
-
-  override def next(): Boolean = { current = it.next(); current != null }
-
-  private def field(g: Group, name: String): Any = name match {
-    case "node_id" => UTF8String.fromString(part.nodeId)
-    case "split" => part.split
-    case "coord" =>
-      val c = it.coordOf(g)
-      if (c.isEmpty && !it.has(g, "coord")) null else new GenericArrayData(c)
-    case "inline" =>
-      if (!it.has(g, "inline")) null
-      else g.getBinary("inline", 0).getBytes
-    case s @ ("c0" | "c1" | "c2" | "c3" | "last_modified") =>
-      if (!it.has(g, s)) null else g.getInteger(s, 0)
-    case s @ ("offset" | "length") =>
-      if (!it.has(g, s)) null else g.getLong(s, 0)
-    case s => // string fields
-      if (!it.has(g, s)) null
-      else UTF8String.fromString(g.getString(s, 0))
-  }
-
-  override def get(): InternalRow =
-    new GenericInternalRow(
-      required.fields.map(f => field(current, f.name)).toArray[Any])
-
-  override def close(): Unit = it.close()
 }
 
 /** Refs-mode '''columnar''' reader: appends manifest rows column-at-a-time
@@ -1352,32 +1316,20 @@ class GraftRefsColumnarReader(part: SplitPartition, required: StructType)
   }
 }
 
-/** One decoded sub-block: the chunk's coord, its (decompressed) byte
-  * buffer, and the in-chunk positions inside the requested region.
-  */
-/** One overlapping chunk's decoded cells. Exactly one of `positions`
-  * (per-cell element positions, for the row/columnar readers) or `runs`
-  * (packed (base, len) pairs of contiguous cells, for the aggregate
-  * reader — no per-cell array is ever materialized) is non-null.
+/** One overlapping chunk's decoded cells: its coord, its decompressed
+  * buffer, the packed `(base, len)` pairs of its contiguous runs inside
+  * the region ([[SliceGeom.foreachRun]]), and its block geometry
+  * (global start, extent and row-major strides per dim).
   */
 private[sources] final case class ChunkCells(coord: Array[Int],
                                              bb: java.nio.ByteBuffer,
-                                             positions: Array[Long],
-                                             runs: Array[Long] = null,
-                                             // THIS chunk's geometry:
-                                             // global element start,
-                                             // extent, row-major strides
-                                             // per dim (rectilinear grids
-                                             // vary these per coord)
-                                             start: Array[Long] = null,
-                                             extent: Array[Long] = null,
-                                             stride: Array[Long] = null)
+                                             runs: Array[Long],
+                                             blk: SliceGeom.Block)
 
 /** Shared cursor of values-mode readers: ref rows → ranged chunk fetch →
   * sub-block geometry. Yields one [[ChunkCells]] per overlapping chunk.
   */
-private[sources] final class ValuesChunkCursor(part: ValuesPartition,
-                                               wantRuns: Boolean = false) {
+private[sources] final class ValuesChunkCursor(part: ValuesPartition) {
   private val it = new SplitGroupIterator(part.files, part.fsConf)
   private lazy val store = StoreConf.cached(part.storeConf)
   private var bytesFetched = 0L
@@ -1393,21 +1345,14 @@ private[sources] final class ValuesChunkCursor(part: ValuesPartition,
   val ndim: Int =
     if (part.chunkSizes.nonEmpty) part.chunkSizes.size
     else part.chunkShape.size
-  val chunkArr: Array[Long] = part.chunkShape.toArray
-  // rectilinear grid: per-dim chunk lengths + their prefix-sum starts
-  private val rectSizes: Array[Array[Long]] =
-    if (part.chunkSizes.isEmpty) null
-    else part.chunkSizes.map(_.toArray).toArray
-  private val rectStarts: Array[Array[Long]] =
-    if (rectSizes == null) null
-    else rectSizes.map(s => graft.meta.RectGrid.starts(s.toSeq))
+  private val chunkArr: Array[Long] = part.chunkShape.toArray
   private val gridStridesArr: Array[Long] =
     // ord strides over the CHUNK GRID; rect dims come from the explicit
     // per-dim chunk counts, regular from ceil(shape/chunk)
-    if (rectSizes == null)
+    if (part.chunkSizes.isEmpty)
       GraftTableProvider.gridStrides(part.shape, part.chunkShape)
     else GraftTableProvider.gridStridesOf(
-      rectSizes.toSeq.map(_.length.toLong))
+      part.chunkSizes.map(_.size.toLong))
   /** Linearized chunk-grid ordinal of `coord` (the `_chunk_ord` value). */
   def chunkOrd(coord: Array[Int]): Long = {
     var o = 0L
@@ -1463,98 +1408,22 @@ private[sources] final class ValuesChunkCursor(part: ValuesPartition,
       val coord = it.coordOf(g)
       val blk =
         if (keepSet != null && !keepSet.contains(chunkOrd(coord))) null
-        else if (rectSizes == null)
-          SliceGeom.block(coord, chunkArr, loArr, hiArr)
-        else {
-          // rectilinear: this chunk's start/extent come from the per-dim
-          // lookup tables; an out-of-grid coord row cannot overlap
-          if ((0 until ndim).exists(d =>
-              coord(d) < 0 || coord(d) >= rectSizes(d).length)) null
-          else {
-            val st = new Array[Long](ndim)
-            val ex = new Array[Long](ndim)
-            var d = 0
-            while (d < ndim) {
-              st(d) = rectStarts(d)(coord(d)); ex(d) = rectSizes(d)(coord(d))
-              d += 1
-            }
-            SliceGeom.blockAt(st, ex, loArr, hiArr)
-          }
-        }
+        else SliceGeom.blockOf(coord, chunkArr, part.chunkSizes, loArr,
+          hiArr)
       if (blk != null) {
         chunksDecoded += 1
         val raw = ChunkCodec.decompress(fetchBytes(g), part.compression)
         val bb = java.nio.ByteBuffer.wrap(raw)
           .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        if (wantRuns) {
-          val rs = new scala.collection.mutable.ArrayBuilder.ofLong
-          SliceGeom.foreachRun(blk)((base, len) => { rs += base; rs += len })
-          val arr = rs.result()
-          if (arr.nonEmpty) return ChunkCells(coord, bb, null, arr,
-            blk.chunkStart, blk.extent, blk.strides)
-        } else {
-          val ps = new scala.collection.mutable.ArrayBuilder.ofLong
-          SliceGeom.foreachRun(blk)((base, len) => {
-            var j = 0
-            while (j < len) { ps += base + j; j += 1 }
-          })
-          val arr = ps.result()
-          if (arr.nonEmpty) return ChunkCells(coord, bb, arr, null,
-            blk.chunkStart, blk.extent, blk.strides)
-        }
+        val rs = new scala.collection.mutable.ArrayBuilder.ofLong
+        SliceGeom.foreachRun(blk)((base, len) => { rs += base; rs += len })
+        return ChunkCells(coord, bb, rs.result(), blk)
       }
     }
     null
   }
 
   def close(): Unit = it.close()
-}
-
-/** Values-mode row reader: (i0..iN, value) rows, one per in-bounds cell. */
-class GraftValuesReader(part: ValuesPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val cursor = new ValuesChunkCursor(part)
-  private var cells: ChunkCells = _
-  private var idx = 0
-
-  override def next(): Boolean = {
-    while (cells == null || idx >= cells.positions.length) {
-      cells = cursor.nextChunk()
-      if (cells == null) return false
-      idx = 0
-    }
-    idx += 1
-    true
-  }
-
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    cursor.metricsValues
-
-  private def valueAt(p: Long): Any = part.dtype match {
-    case "int8" => cells.bb.get(p.toInt).toLong
-    case "int16" => cells.bb.getShort(p.toInt * 2).toLong
-    case "int32" => cells.bb.getInt(p.toInt * 4).toLong
-    case "int64" => cells.bb.getLong(p.toInt * 8)
-    case "float32" => cells.bb.getFloat(p.toInt * 4).toDouble
-    case _ => cells.bb.getDouble(p.toInt * 8)
-  }
-
-  override def get(): InternalRow = {
-    val pos = cells.positions(idx - 1)
-    val vals = required.fields.map { f =>
-      if (f.name == "value") valueAt(pos)
-      else if (f.name == GraftTableProvider.ChunkOrdCol)
-        cursor.chunkOrd(cells.coord)
-      else {
-        val d = f.name.drop(1).toInt
-        cells.start(d) + (pos / cells.stride(d)) % cells.extent(d)
-      }
-    }
-    new GenericInternalRow(vals.toArray[Any])
-  }
-
-  override def close(): Unit = cursor.close()
 }
 
 class GraftAggReaderFactory(spec: PushedAgg)
@@ -1564,7 +1433,10 @@ class GraftAggReaderFactory(spec: PushedAgg)
     new GraftValuesAggReader(partition.asInstanceOf[ValuesPartition], spec)
 }
 
-/** Per-group partial accumulator for the pushed-aggregate reader. */
+/** Per-group partial accumulator for the pushed-aggregate reader. It is
+  * not [[SliceGeom.Stats]]: SQL's `sum`, `min` and `max` over integer
+  * dtypes are exact `long`s, where the stats loop folds doubles.
+  */
 private final class AggAcc {
   var n = 0L
   var sumL = 0L
@@ -1591,7 +1463,7 @@ private final class AggAcc {
   */
 class GraftValuesAggReader(part: ValuesPartition, spec: PushedAgg)
     extends PartitionReader[InternalRow] {
-  private val cursor = new ValuesChunkCursor(part, wantRuns = true)
+  private val cursor = new ValuesChunkCursor(part)
   private val isInt = ChunkCodec.IntDtypes.contains(part.dtype)
   private val ndim = cursor.ndim
   private val groupDims = spec.groupDims.toArray
@@ -1661,8 +1533,8 @@ class GraftValuesAggReader(part: ValuesPartition, spec: PushedAgg)
           var k = 0
           while (k < groupDims.length) {
             val d = groupDims(k)
-            key(k) = cells.start(d) +
-              (base / cells.stride(d)) % cells.extent(d)
+            key(k) = cells.blk.chunkStart(d) +
+              (base / cells.blk.strides(d)) % cells.blk.extent(d)
             k += 1
           }
           val acc = groups.getOrElseUpdate(
@@ -1676,8 +1548,8 @@ class GraftValuesAggReader(part: ValuesPartition, spec: PushedAgg)
             var k = 0
             while (k < groupDims.length) {
               val d = groupDims(k)
-              key(k) = cells.start(d) +
-                (p / cells.stride(d)) % cells.extent(d)
+              key(k) = cells.blk.chunkStart(d) +
+                (p / cells.blk.strides(d)) % cells.blk.extent(d)
               k += 1
             }
             val acc = groups.getOrElseUpdate(
@@ -1737,75 +1609,67 @@ class GraftValuesColumnarReader(part: ValuesPartition, required: StructType)
     vectors.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
 
   private var cells: ChunkCells = _
-  private var idx = 0
+  private var run = 0 // index of the current run's base in cells.runs
+  private var done = 0 // cells of the current run already emitted
 
   override def next(): Boolean = {
     vectors.foreach(_.reset())
     var row = 0
     while (row < BatchRows) {
-      if (cells == null || idx >= cells.positions.length) {
+      if (cells == null || run >= cells.runs.length) {
         cells = cursor.nextChunk()
         if (cells == null) {
           batch.setNumRows(row)
           return row > 0
         }
-        idx = 0
+        run = 0
+        done = 0
       }
-      // fill every column for the run available in this chunk
-      val take = math.min(BatchRows - row, cells.positions.length - idx)
+      // fill every column from the current run: cells p0 until p0 + take
+      // of the decoded buffer, contiguous by construction
+      val p0 = (cells.runs(run) + done).toInt
+      val take = math.min(BatchRows - row, cells.runs(run + 1).toInt - done)
       var c = 0
       while (c < required.fields.length) {
         val f = required.fields(c)
         val vec = vectors(c)
         if (f.name == "value") {
           val bb = cells.bb
-          // contiguous runs of 8-byte cells bulk-copy straight from the
-          // decoded buffer into the vector (little-endian both sides)
-          val contiguous =
-            cells.positions(idx + take - 1) - cells.positions(idx) == take - 1
           var j = 0
           part.dtype match {
             case "int8" => while (j < take) {
-              vec.putLong(row + j, bb.get(cells.positions(idx + j).toInt)); j += 1 }
+              vec.putLong(row + j, bb.get(p0 + j)); j += 1 }
             case "int16" => while (j < take) {
-              vec.putLong(row + j, bb.getShort(cells.positions(idx + j).toInt * 2)); j += 1 }
+              vec.putLong(row + j, bb.getShort((p0 + j) * 2)); j += 1 }
             case "int32" => while (j < take) {
-              vec.putLong(row + j, bb.getInt(cells.positions(idx + j).toInt * 4)); j += 1 }
-            case "int64" =>
-              if (contiguous && bb.hasArray)
-                vec.putLongsLittleEndian(row, take, bb.array(),
-                  bb.arrayOffset() + cells.positions(idx).toInt * 8)
-              else while (j < take) {
-                vec.putLong(row + j, bb.getLong(cells.positions(idx + j).toInt * 8)); j += 1 }
+              vec.putLong(row + j, bb.getInt((p0 + j) * 4)); j += 1 }
+            // 8-byte cells bulk-copy straight from the decoded buffer
+            // into the vector (little-endian both sides)
+            case "int64" => vec.putLongsLittleEndian(row, take, bb.array(),
+              bb.arrayOffset() + p0 * 8)
             case "float32" => while (j < take) {
-              vec.putDouble(row + j, bb.getFloat(cells.positions(idx + j).toInt * 4)); j += 1 }
-            case _ =>
-              if (contiguous && bb.hasArray)
-                vec.putDoublesLittleEndian(row, take, bb.array(),
-                  bb.arrayOffset() + cells.positions(idx).toInt * 8)
-              else while (j < take) {
-                vec.putDouble(row + j, bb.getDouble(cells.positions(idx + j).toInt * 8)); j += 1 }
+              vec.putDouble(row + j, bb.getFloat((p0 + j) * 4)); j += 1 }
+            case _ => vec.putDoublesLittleEndian(row, take, bb.array(),
+              bb.arrayOffset() + p0 * 8)
           }
         } else if (f.name == GraftTableProvider.ChunkOrdCol) {
-          val ord = cursor.chunkOrd(cells.coord) // constant for the run
-          var j = 0
-          while (j < take) { vec.putLong(row + j, ord); j += 1 }
+          vec.putLongs(row, take, cursor.chunkOrd(cells.coord))
         } else {
+          // a run walks the innermost dim; every other index is constant
           val d = f.name.drop(1).toInt
-          val base = cells.start(d)
-          val stride = cells.stride(d)
-          val extent = cells.extent(d)
-          var j = 0
-          while (j < take) {
-            vec.putLong(row + j,
-              base + (cells.positions(idx + j) / stride) % extent)
-            j += 1
+          val blk = cells.blk
+          val first = blk.chunkStart(d) + (p0 / blk.strides(d)) % blk.extent(d)
+          if (d < cursor.ndim - 1) vec.putLongs(row, take, first)
+          else {
+            var j = 0
+            while (j < take) { vec.putLong(row + j, first + j); j += 1 }
           }
         }
         c += 1
       }
       row += take
-      idx += take
+      done += take
+      if (done == cells.runs(run + 1)) { run += 2; done = 0 }
     }
     batch.setNumRows(row)
     true

@@ -312,9 +312,8 @@ object TensorPlane {
   /** Region statistics with aggregation pushdown into the chunk kernel:
     * extents prune splits, [[ChunkSliceStatsExpr]] prunes within chunks,
     * and NO row machinery runs — the plan for `sum(value) over a slice`.
-    * Exact on any bounds (unlike [[arrayStats]], padding cells of edge
-    * chunks are excluded by the sub-block geometry as long as bounds are
-    * clipped to the array shape).
+    * Exact on any bounds: bounds clip to the array shape, so padding
+    * cells of partial edge chunks never count.
     *
     * Two routes, chosen before any IO from the grid and the clipped
     * bounds. When the touched chunks number at most 32 and their box
@@ -326,8 +325,8 @@ object TensorPlane {
     * ([[graft.functions.SliceGeom.stats]]). The result is a one-row
     * local DataFrame with the Spark route's schema. Larger regions take
     * the Spark route (split-pruned ref scan, one task per chunk group,
-    * one aggregate). An empty region (no stored chunk) yields one
-    * all-null row on both routes.
+    * one aggregate). An empty region (no stored chunk, or bounds that
+    * clip to nothing) yields one all-null row on both routes.
     */
   def sliceStats(session: Session, path: String, dtype: String,
                  bounds: Seq[(Long, Long)],
@@ -339,23 +338,30 @@ object TensorPlane {
     require(bounds.size == node.shape.size,
       s"bounds must cover all ${node.shape.size} dimensions of $path, " +
         s"got ${bounds.size}")
+    bounds.foreach { case (lo, hi) =>
+      require(lo >= 0 && hi >= lo, s"bad bounds [$lo, $hi)") }
     val clipped = bounds.zip(node.shape).map { case ((lo, hi), s) =>
       (lo, math.min(hi, s))
     }
-    val chunkBounds = chunkBoundsOf(node, clipped)
-    val chunks = chunkBounds.map { case (a, b) => BigInt(b - a + 1) }.product
+    val empty = clipped.exists { case (lo, hi) => hi <= lo }
+    val chunkBounds = if (empty) Nil else chunkBoundsOf(node, clipped)
+    val chunks =
+      if (empty) BigInt(0)
+      else chunkBounds.map { case (a, b) => BigInt(b - a + 1) }.product
     val boxCells =
       if (!node.isRectilinear) chunkBounds.zip(node.chunkShape).map {
         case ((a, b), c) => BigInt(b - a + 1) * c }.product
       else chunkBounds.zip(node.chunkSizesPerDim).map {
         case ((a, b), sizes) => BigInt(sizes.slice(a, b + 1).sum) }.product
-    val boxBytes = boxCells * ChunkCodec.dtypeWidth(dtype)
+    val boxBytes =
+      if (empty) BigInt(0) else boxCells * ChunkCodec.dtypeWidth(dtype)
     val onDriver = chunks <= SliceDriverMaxChunks &&
       boxBytes <= SliceDriverMaxBytes
     graft.core.Trace.span("slice", "path" -> path,
         "route" -> (if (onDriver) "driver" else "spark"),
         "chunks" -> chunks.toString, "bytes" -> boxBytes.toString) { _ =>
-      if (onDriver)
+      if (empty) statsFrame(session, Nil)
+      else if (onDriver)
         sliceStatsDriver(session, path, node, dtype, compression, clipped,
           chunkBounds)
       else sliceStatsSpark(session, path, node, dtype, compression, clipped,
@@ -371,14 +377,21 @@ object TensorPlane {
     val chunkShape = node.chunkShape.toArray
     val lo = clipped.map(_._1).toArray
     val hi = clipped.map(_._2).toArray
-    val parts = coords.zip(session.getChunksBatch(coords.map((path, _)),
-        cacheable = false)).collect { case (c, Some(bytes)) =>
-      graft.functions.SliceGeom.stats(bytes, c.toArray, dtype, compression,
-        chunkShape, node.chunkSizesPerDim, lo, hi)
-    }
-    // the Spark route's aggregate: every touched chunk overlaps the
-    // region, so each stored one has cells in it; no stored chunk at all
-    // is the all-null row
+    statsFrame(session, coords.zip(session.getChunksBatch(
+        coords.map((path, _)), cacheable = false)).collect {
+      case (c, Some(bytes)) =>
+        graft.functions.SliceGeom.stats(bytes, c.toArray, dtype, compression,
+          chunkShape, node.chunkSizesPerDim, lo, hi)
+    })
+  }
+
+  /** The Spark route's aggregate over per-chunk stats, as a one-row local
+    * frame: every touched chunk overlaps the region, so each stored one
+    * has cells in it; no stored chunk at all is the all-null row.
+    */
+  private def statsFrame(session: Session,
+                         parts: Seq[graft.functions.SliceGeom.Stats])
+      : DataFrame = {
     val row =
       if (parts.isEmpty) Row(null, null, null, null, null)
       else {
@@ -409,26 +422,16 @@ object TensorPlane {
       .withColumn("avg", col("sum") / col("n"))
   }
 
-  /** Whole-array statistics WITHOUT the row explode: per-chunk native
-    * reduction (count/sum/min/max inside [[ChunkStatsExpr]]) + a rollup
-    * over chunk rows. Decode-bound, not row-machinery-bound — the scale
-    * path for `avg(value)`-style tensor aggregates. NOTE: includes
-    * partial-edge-chunk padding cells for arrays whose shape is not
-    * chunk-aligned (exact on aligned arrays).
+  /** Whole-array statistics WITHOUT the row explode: [[sliceStats]] over
+    * the array's full shape (same route rule, same `slice` span, in-shape
+    * cells only) — the scale path for `avg(value)`-style tensor
+    * aggregates.
     */
   def arrayStats(session: Session, path: String, dtype: String,
                  compression: String = "raw"): DataFrame = {
-    val fetch = sessionFetch(session)
-    val spark = session.repo.spark
-    session.refs(path)
-      .repartition(spark.sparkContext.defaultParallelism * 2, col("coord"))
-      .withColumn("bytes", fetch(col("kind"), col("inline"), col("chunk_id"),
-        col("location"), col("offset"), col("length")))
-      .select(CodecFunctions.chunk_stats(col("bytes"), dtype, compression)
-        .as("s"))
-      .agg(sum(col("s.n")).as("n"), sum(col("s.sum")).as("sum"),
-        min(col("s.min")).as("min"), max(col("s.max")).as("max"))
-      .withColumn("avg", col("sum") / col("n"))
+    val node = session.node(path).filter(_.isArray).getOrElse(
+      throw new GraftException(s"no array at $path"))
+    sliceStats(session, path, dtype, node.shape.map((0L, _)), compression)
   }
 
   /** Append a (i0..iN, value) DataFrame along one dimension
@@ -673,8 +676,8 @@ object TensorPlane {
     * overflow), the rollup sums `chunks × (nbins+2)` longs — NO row
     * explode, so the cost of the full distribution sketch is one decode
     * pass. Returns `(bin, lo, hi, n)` rows, bin −1 = underflow, `nbins` =
-    * overflow, only non-empty bins. Padding caveat of [[arrayStats]]
-    * applies on non-chunk-aligned arrays.
+    * overflow, only non-empty bins. On non-chunk-aligned arrays the
+    * padding cells of partial edge chunks count ([[ChunkHistogramExpr]]).
     */
   def histogram(session: Session, path: String, dtype: String,
                 lo: Double, hi: Double, nbins: Int,
@@ -701,11 +704,13 @@ object TensorPlane {
   }
 
   /** Approximate quantiles via two kernel passes and zero row explode:
-    * pass 1 = [[arrayStats]] (min/max bound the histogram), pass 2 =
+    * pass 1 = [[arrayStats]] (exact min/max bound the histogram), pass 2 =
     * [[histogram]] at `nbins` resolution, then linear interpolation
-    * inside the target bin on the driver (`nbins + 2` rows). Error is
-    * bounded by one bin width, `(max-min)/nbins` — the 100 TB shape for
-    * "p50/p99 of a tensor" (decode cost × 2, row cost zero).
+    * inside the target bin on the driver. Error is bounded by one bin
+    * width, `(max-min)/nbins` — the 100 TB shape for "p50/p99 of a
+    * tensor" (decode cost × 2, row cost zero). Only bins `0 until nbins`
+    * count: every in-shape cell lies in `[min, max]`, so the underflow
+    * and overflow bins hold only padding cells of partial edge chunks.
     */
   def approxQuantiles(session: Session, path: String, dtype: String,
                       probs: Seq[Double], nbins: Int = 1000,
@@ -721,6 +726,7 @@ object TensorPlane {
     val bins = histogram(session, path, dtype, mn, hiEx, nbins,
       compression)
       .collect().map(r => (r.getAs[Long]("bin"), r.getAs[Long]("n")))
+      .filter { case (bin, _) => bin >= 0 && bin < nbins }
       .sortBy(_._1)
     val total = bins.map(_._2).sum.toDouble
     probs.map { p =>

@@ -47,4 +47,19 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(cs == 3)
     } finally ()
   }
+
+  test("chunk_stats and decode_chunk refuse an unknown dtype at plan time") {
+    val spark = SparkTestBase.spark
+    graft.functions.GraftExtensions.registerAll(spark)
+    val bytes = graft.functions.ChunkCodec.encodeLongs(Array(7L), "int64")
+    spark.createDataFrame(Seq(Tuple1(bytes))).toDF("b")
+      .createOrReplaceTempView("chunks9")
+    Seq("chunk_stats(b, 'int9')", "decode_chunk(b, 'int9')").foreach { call =>
+      // analysis builds the expression: the refusal comes before any task
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM chunks9"))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("unknown dtype 'int9'")), s"$call: $e")
+    }
+  }
 }

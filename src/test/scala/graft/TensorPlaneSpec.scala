@@ -64,6 +64,27 @@ class TensorPlaneSpec extends SparkTestBase {
     assert(values.count() == 10) // 12 decoded cells, 2 clipped by bounds
     val total = values.agg(sum("value")).head().getDouble(0)
     assert(math.abs(total - (0 until 10).map(_ * 0.5).sum) < 1e-6)
+    // whole-array stats clip the same two padding cells
+    val st = TensorPlane.arrayStats(ro, "/f", "float32", "zstd").head()
+    assert(st.getAs[Long]("n") == 10)
+    assert(st.getAs[Double]("sum") == (0 until 10).map(_ * 0.5).sum)
+    assert(st.getAs[Double]("max") == 4.5)
+  }
+
+  test("stats on a 0-d array and on an array with a zero-length dim") {
+    val repo = Repository.create(Store.local(tmpDir("repo")), spark)
+    val s = repo.writableSession("main")
+    s.addArray("/z", Nil, Nil) // rank 0: one cell, one chunk at coord ()
+    s.writeChunk("/z", Nil, ChunkCodec.encodeLongs(Array(42L), "int64"))
+    s.addArray("/e", Seq(0, 8), Seq(4, 4))
+    s.commit("scalars")
+    val ro = repo.readonlySession(VersionRef.Branch("main"))
+    Seq(TensorPlane.sliceStats(ro, "/z", "int64", Nil),
+        TensorPlane.arrayStats(ro, "/z", "int64")).foreach { df =>
+      assert(df.head() == org.apache.spark.sql.Row(1L, 42.0, 42.0, 42.0, 42.0))
+    }
+    assert(TensorPlane.arrayStats(ro, "/e", "int64").head() ==
+      org.apache.spark.sql.Row(null, null, null, null, null))
   }
 
   test("append_dim grows the array; region writes land chunk-aligned") {
@@ -264,6 +285,23 @@ class TensorPlaneSpec extends SparkTestBase {
     val ro2 = repo.readonlySession(VersionRef.Branch("main"))
     assert(TensorPlane.approxQuantiles(ro2, "/const", "int64",
       Seq(0.0, 0.5, 1.0)) == Seq(7.0, 7.0, 7.0))
+  }
+
+  test("quantiles of a non-aligned array ignore padding outside its range") {
+    val repo = Repository.create(Store.local(tmpDir("repo")), spark)
+    val s = repo.writableSession("main")
+    s.addArray("/p", Seq(10), Seq(4)) // last chunk: cells 8, 9 + 2 padding
+    for (c <- 0 until 3) {
+      val vals = Array.tabulate(4) { i =>
+        val g = c * 4L + i; if (g < 10) g else if (g == 10) -1000L else 1000L
+      }
+      s.writeChunk("/p", Seq(c), ChunkCodec.encodeLongs(vals, "int64"))
+    }
+    s.commit("padded")
+    val ro = repo.readonlySession(VersionRef.Branch("main"))
+    val q = TensorPlane.approxQuantiles(ro, "/p", "int64", Seq(0.0, 1.0),
+      nbins = 10)
+    assert(q(0) >= 0.0 && q(1) <= 9.0, s"quantiles $q")
   }
 
   test("combine: 2-D ragged max, fill for one-sided chunks, sparse stays sparse") {

@@ -579,12 +579,16 @@ object Bench {
         assert(st.getAs[Long]("n") == 4L * cube * cube)
       }
       // DSv2 columnar values scan over the whole cube: vectorized batches
-      // from the sub-block decoder straight into whole-stage codegen
+      // from the sub-block decoder straight into whole-stage codegen. The
+      // sum is over a cast, an aggregate `pushAggregation` refuses, so the
+      // scan runs the columnar reader (`ColumnarToRow`, no
+      // `PushedAggregates`), not the pushed-aggregate reader
       entry("engine_v2_columnar_scan") {
         val v = spark.read.format("graft-v2")
           .option("path", dir.toString).option("array", "/cube")
           .option("mode", "values").option("dtype", "int64").load()
-        val res = v.agg(sum(col("value")), count(lit(1))).head()
+        val res = v.agg(sum(col("value").cast("double")), count(lit(1)))
+          .head()
         assert(res.getLong(1) == cube.toLong * cube * cube)
       }
       // per-timestep stats via pushed GROUP BY: partials are

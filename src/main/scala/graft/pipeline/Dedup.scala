@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row,
   SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Trace
+import graft.core.{DriverRoute, Trace}
 
 /** Deduplication operators for training-data pipelines, each designed for
   * the 100 TB shape: exact dedup is one hash-shuffle; the near-dup family
@@ -16,24 +16,27 @@ import graft.core.Trace
   * '''Route rule''' of [[minhashCandidates]], [[ngramJaccardPairsLsh]] and
   * [[nearDupClusters]]: each call collects the `doc_id`, shingle-set
   * size, MinHash signature and band bucket keys of its per-document rows
-  * ([[signed]]) — never the shingles — with `limit(DriverMaxDocs + 1)`,
-  * when the call is made. A corpus of at most `DriverMaxDocs` (50,000)
-  * rows with an integral `doc_id`, whose band buckets yield at most
-  * `DriverMaxPairs` (10,000) distinct candidate pairs, takes the DRIVER
-  * route: the band join, the distinct and the component solve run on
-  * the driver, while the per-pair rules (estimated Jaccard, size-ratio
-  * cut, exact verify) stay the Spark route's own column expressions,
-  * evaluated over a local relation. The verify of
-  * [[ngramJaccardPairsLsh]] then fetches, in a second Spark job, the
-  * shingles of only the documents in size-ratio-surviving candidates,
-  * if its pairs carry at most `DriverMaxShingles` (1,000,000) shingles
-  * in all. The result is a local DataFrame; its own use runs no Spark
-  * job. Any other corpus takes the SPARK route (bucket self-join over
-  * [[stageCached]] intermediates, lazy as before), which computes the
-  * per-document rows once more: the collect's pass is not reused. Both
-  * routes build every per-row value (shingles, hashes, signature, band
-  * key, `portable`) with the same expressions ([[signed]]), so they
-  * return identical rows.
+  * ([[signed]]) — never the shingles — through the bounded collect of
+  * [[graft.core.DriverRoute.collectBounded]], when the call is made: with
+  * no limit when Spark knows the corpus' row count (a local relation or a
+  * built cache), not at all when that count is over the bound, and under
+  * `limit(DriverMaxDocs + 1)` otherwise. A corpus of at most
+  * `DriverMaxDocs` (50,000) rows with an integral `doc_id`, whose band
+  * buckets yield at most `DriverMaxPairs` (10,000) distinct candidate
+  * pairs, takes the DRIVER route: the band join, the distinct and the
+  * component solve run on the driver, while the per-pair rules
+  * (estimated Jaccard, size-ratio cut, exact verify) stay the Spark
+  * route's own column expressions, evaluated over a local relation. The
+  * verify of [[ngramJaccardPairsLsh]] then fetches, in a second Spark
+  * job, the shingles of only the documents in size-ratio-surviving
+  * candidates, if its pairs carry at most `DriverMaxShingles`
+  * (1,000,000) shingles in all. The result is a local DataFrame; its own
+  * use runs no Spark job. Any other corpus takes the SPARK route (bucket
+  * self-join over [[stageCached]] intermediates, lazy as before), which
+  * computes the per-document rows once more: the collect's pass, if one
+  * ran, is not reused. Both routes build every per-row value (shingles,
+  * hashes, signature, band key, `portable`) with the same expressions
+  * ([[signed]]), so they return identical rows.
   */
 object Dedup {
 
@@ -197,8 +200,8 @@ object Dedup {
         withShingles = false)
       val keys = bandKeys(numHashes, bands, portable)
       routed(sg, keys, Seq("sig"), h) { b =>
-        Some(local(withEstimate(b.frame(b.pairs, Seq("sig")), numHashes,
-          Nil), distinct = true))
+        Some(DriverRoute.local(withEstimate(b.frame(b.pairs, Seq("sig")),
+          numHashes, Nil), distinct = true))
       } {
         withEstimate(bandJoin(sg, keys, Seq("sig")), numHashes, Nil)
           .distinct()
@@ -290,11 +293,9 @@ object Dedup {
       if (!integral) None
       else {
         val sel = sg.select(("doc_id" +: carry).map(col) :+ keys.as("keys"): _*)
-        val rows = sel.limit(DriverMaxDocs + 1).collect()
-        h.set("docs", rows.length.toLong)
-        if (rows.length > DriverMaxDocs) None
-        else bandPairsDriver(rows, carry.size + 1, h)
-          .flatMap(p => driver(Banded(sg.sparkSession, rows, sel.schema, p)))
+        DriverRoute.collectBounded(sel, DriverMaxDocs, h, "docs")
+          .flatMap(rows => bandPairsDriver(rows, carry.size + 1, h)
+            .flatMap(p => driver(Banded(sg.sparkSession, rows, sel.schema, p))))
       }
     h.set("route", if (out.isDefined) "driver" else "spark")
     out.getOrElse(viaSpark)
@@ -360,16 +361,6 @@ object Dedup {
       }.toSeq
       spark.createDataFrame(out.asJava, StructType(fields))
     }
-  }
-
-  /** Evaluate `df` over a local relation (no Spark job) into a local
-    * DataFrame, dropping duplicate rows when `distinct` (as the Spark
-    * route's `distinct` does).
-    */
-  private def local(df: DataFrame, distinct: Boolean = false): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      (if (distinct) rows.distinct else rows).toSeq.asJava, df.schema)
   }
 
   /** Exact Jaccard of two distinct shingle arrays given their sizes, with
@@ -645,8 +636,8 @@ object Dedup {
           val rowsOf = rows.indices.groupBy(i => rows(i).get(0))
           val pairs = candidates.toSeq.flatMap(c =>
             for (i <- rowsOf(c.get(0)); j <- rowsOf(c.get(1))) yield (i, j))
-          local(verified(Banded(b.spark, rows, fetch.schema, pairs.toArray)
-            .frame(pairs, Seq("sh", "sz")), threshold))
+          DriverRoute.local(verified(Banded(b.spark, rows, fetch.schema,
+            pairs.toArray).frame(pairs, Seq("sh", "sz")), threshold))
         }
       } {
         val staged = stageCached(sg)

@@ -1,8 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.core.{DriverRoute, Trace}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`ARRAY<FLOAT>`). Brute-force cosine is the correctness baseline; the
@@ -10,6 +18,39 @@ import org.apache.spark.sql.expressions.Window
   * probe's bucket) — both pure column expressions, no UDFs.
   */
 object Similarity {
+
+  /** '''Route rule''' of [[ivfIndex]] and [[neighborsPerVector]]: each call
+    * collects its input through [[DriverRoute.collectBounded]] (no
+    * limit when Spark knows the row count, none at all when that count is
+    * over the bound). An input of at most `DriverMaxVectors` rows and
+    * `DriverMaxCells` vector cells (vectors × dim), with no null vector or
+    * element, takes the DRIVER route; [[neighborsPerVector]] also needs
+    * unique, non-null ids of an integral or string type, no zero norm (the
+    * Spark route's division fails there under ANSI) and at most
+    * `DriverMaxPairs` pairs (Σ m·min(m, cap) over its LSH buckets). Every
+    * per-row value (double cast, sign bits, norm, bucket cap hash,
+    * nearest centroid) is the Spark route's own column expression,
+    * evaluated over a local relation; the per-pair cosine is the same
+    * double, computed natively. The result is a local DataFrame, whose use
+    * runs no Spark job. [[ivfTopK]] answers on the driver when its index
+    * is such a local DataFrame (cached or not). Any other input takes the
+    * SPARK route, unchanged.
+    *
+    * Sizing: both routes forced, 4 vCPUs, `local[4]`, 64-dim unit
+    * vectors in 20 tight clusters (the perfbench shape), cached input,
+    * median of 4 warm runs, result collected. `ivfIndex` (nlist 16): the
+    * driver route took 346 / 488 / 1,274 / 1,506 / 2,022 ms at 2k / 10k /
+    * 20k / 30k / 50k vectors, the Spark route 501 / 797 / 1,658 / 793 /
+    * 1,006 ms (its fastest run at 20k: 655 ms): the interpreted
+    * per-row expressions grow with the cells, so the routes cross near
+    * 20k vectors of 64 dims, and the cell bound is that many cells.
+    * `neighborsPerVector` (k 5, 8 planes, so about n²/20 pairs): the
+    * driver route took 527 / 1,030 / 2,508 ms at 2k / 10k / 20k vectors
+    * (20M pairs), the Spark route 1,383 / 4,089 / 14,074 ms.
+    */
+  private final val DriverMaxVectors = 20000
+  private final val DriverMaxCells = DriverMaxVectors * 64L
+  private final val DriverMaxPairs = 20000000L
 
   /** Codegen'd sequential Σ aᵢ·bᵢ ([[graft.functions.DotProductExpr]]) —
     * same summation order as the `aggregate(zip_with(...))` HOF form it
@@ -200,24 +241,77 @@ object Similarity {
     * The quantizer is fit on a bounded sample (`fitSampleCap` rows,
     * driver-side Lloyd's — centroid quality needs a representative
     * sample, not the corpus), then assignment runs distributed as one
-    * codegen'd nearest-centroid expression per row. Index build is one
-    * count + one sampled collect, never `maxIter` full passes.
+    * codegen'd nearest-centroid expression per row. Index build on the
+    * Spark route is one count + one sampled collect, never `maxIter` full
+    * passes; on the driver route (see the route rule) it is the one
+    * bounded collect, the fit on the collected points in collect order (the
+    * order the Spark route's collect sees) and the same assignment over a
+    * local relation, so the index is a local DataFrame that [[ivfTopK]]
+    * answers from with no job. Past `fitSampleCap` rows both routes fit on
+    * the same Spark sample job.
     */
   def ivfIndex(embeddings: DataFrame, nlist: Int = 64, seed: Long = 42L,
                vecCol: String = "embedding", fitSampleCap: Int = 100000,
-               maxIter: Int = 10): (DataFrame, Array[Array[Double]]) = {
-    val vecs = embeddings.select(col(vecCol).cast("array<double>"))
-    val n = embeddings.count()
-    require(n > 0, "ivfIndex: empty corpus")
-    val sampled =
-      if (n <= fitSampleCap) vecs
-      else vecs.sample(withReplacement = false,
-        math.min(1.0, fitSampleCap * 1.1 / n), seed).limit(fitSampleCap)
-    val points = sampled.collect().map(_.getSeq[Double](0).toArray)
-    val centers = KMeansLocal.fit(points, math.min(nlist, points.length),
-      maxIter, seed)
-    (embeddings.withColumn("list_id",
-      nearestCentroid(col(vecCol).cast("array<double>"), centers)), centers)
+               maxIter: Int = 10): (DataFrame, Array[Array[Double]]) =
+    Trace.span("ann.ivf_build") { h =>
+      val asDouble = col(vecCol).cast("array<double>")
+      def sampled(n: Long) = embeddings.select(asDouble)
+        .sample(withReplacement = false,
+          math.min(1.0, fitSampleCap * 1.1 / n), seed).limit(fitSampleCap)
+        .collect().map(_.getSeq[Double](0).toArray)
+      def fit(points: Array[Array[Double]]) =
+        KMeansLocal.fit(points, math.min(nlist, points.length), maxIter, seed)
+      val at = embeddings.schema.fieldNames.indexOf(vecCol)
+      val driver = (if (at < 0) None else collectVectors(embeddings, at, h))
+          .flatMap { rows =>
+        val local = embeddings.sparkSession.createDataFrame(rows.toSeq.asJava,
+          embeddings.schema)
+        val vecs = vectors(DriverRoute.localRows(local.select(asDouble)), 0)
+        vecs.map { v =>
+          require(v.nonEmpty, "ivfIndex: empty corpus")
+          // the sample path keeps the Spark route's sample job, so the
+          // centers are the same
+          val centers = fit(if (v.length <= fitSampleCap) v
+            else sampled(v.length))
+          (DriverRoute.local(
+            local.withColumn("list_id", nearestCentroid(asDouble, centers))),
+            centers)
+        }
+      }
+      h.set("route", if (driver.isDefined) "driver" else "spark")
+      driver.getOrElse {
+        val n = embeddings.count()
+        require(n > 0, "ivfIndex: empty corpus")
+        val centers = fit(if (n <= fitSampleCap)
+          embeddings.select(asDouble).collect().map(_.getSeq[Double](0).toArray)
+          else sampled(n))
+        (embeddings.withColumn("list_id", nearestCentroid(asDouble, centers)),
+          centers)
+      }
+    }
+
+  /** The rows of `df` through the bounded collect, if they hold at most
+    * `DriverMaxVectors` rows and `DriverMaxCells` cells in the vectors of
+    * column `at`; sets the span's `vectors`.
+    */
+  private def collectVectors(df: DataFrame, at: Int,
+                             h: Trace.Handle): Option[Array[Row]] =
+    DriverRoute.collectBounded(df, DriverMaxVectors, h, "vectors")
+      .filter(_.iterator.map(r =>
+        if (r.isNullAt(at)) 0L else r.getSeq[Any](at).size.toLong).sum <=
+        DriverMaxCells)
+
+  /** The vectors in column `at` of locally evaluated rows, in row order,
+    * or `None` for a null vector or element (the driver routes leave
+    * those to the Spark route).
+    */
+  private def vectors(rows: Array[InternalRow],
+                      at: Int): Option[Array[Array[Double]]] = {
+    def plain(a: ArrayData) =
+      (0 until a.numElements).forall(i => !a.isNullAt(i))
+    if (rows.forall(r => !r.isNullAt(at) && plain(r.getArray(at))))
+      Some(rows.map(_.getArray(at).toDoubleArray))
+    else None
   }
 
   /** Codegen'd argmin over centroids: `argmin_i ‖v−cᵢ‖² =
@@ -247,22 +341,91 @@ object Similarity {
   def ivfTopK(indexed: DataFrame, centers: Array[Array[Double]],
               query: Seq[Float], k: Int, nprobe: Int = 8,
               vecCol: String = "embedding",
-              idCol: String = "vec_id"): DataFrame = {
-    val q = query.map(_.toDouble).toArray
-    val qn = math.sqrt(q.map(x => x * x).sum)
-    val probes = centers.zipWithIndex.map { case (c, i) =>
-      val dot = c.zip(q).map { case (x, y) => x * y }.sum
-      val cn = math.sqrt(c.map(x => x * x).sum)
-      i -> (if (cn == 0) -1.0 else dot / (cn * qn))
-    }.sortBy(-_._2).take(nprobe).map(_._1)
-    // the probe set as an array literal, not `isin`: generated code
-    // inlines `isin` values, so every probe set would compile anew
-    indexed.filter(array_contains(typedLit(probes.toSeq), col("list_id")))
-      .select(col(idCol),
+              idCol: String = "vec_id"): DataFrame =
+    Trace.span("ann.ivf_query") { h =>
+      val q = query.map(_.toDouble).toArray
+      val qn = math.sqrt(q.map(x => x * x).sum)
+      val probes = centers.zipWithIndex.map { case (c, i) =>
+        val dot = c.zip(q).map { case (x, y) => x * y }.sum
+        val cn = math.sqrt(c.map(x => x * x).sum)
+        i -> (if (cn == 0) -1.0 else dot / (cn * qn))
+      }.sortBy(-_._2).take(nprobe).map(_._1)
+      def scored(df: DataFrame) = df.select(col(idCol),
         round(cosineToQuery(col(vecCol).cast("array<double>"), q.toSeq), 6)
           .as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+      val driver = indexed.queryExecution.analyzed match {
+        case l: LocalRelation if qn != 0.0 => topKDriver(
+          indexed.sparkSession, l, probes.toSet, k, h)(idCol, vecCol, scored)
+        case _ => None
+      }
+      h.set("route", if (driver.isDefined) "driver" else "spark")
+      // the probe set as an array literal, not `isin`: generated code
+      // inlines `isin` values, so every probe set would compile anew
+      driver.getOrElse(scored(indexed.filter(
+          array_contains(typedLit(probes.toSeq), col("list_id"))))
+        .orderBy(col("cos").desc, col(idCol))
+        .limit(k))
+    }
+
+  /** [[ivfTopK]] over a driver-held index: the rows of the probed lists,
+    * scored by the Spark route's own expression over a local relation of
+    * their id and vector only (a relation of the index's own columns and
+    * rows would be swapped for the index's cache, which runs a job), then
+    * sorted on the driver in Spark's `(cos desc, id)` order. `None` (the
+    * Spark route) when the columns are missing, `list_id` is not an int,
+    * the id type has no driver order ([[idOrder]]) or a probed row has a
+    * null id or vector. The scoring runs within the call, so an error it
+    * raises (a zero-norm vector's division under ANSI) is raised there,
+    * not when the result is used.
+    */
+  private def topKDriver(spark: SparkSession, index: LocalRelation,
+                         probes: Set[Int], k: Int, h: Trace.Handle)(
+      idCol: String, vecCol: String,
+      scored: DataFrame => DataFrame): Option[DataFrame] = {
+    val schema = index.schema
+    val Seq(iId, iVec, iList) = Seq(idCol, vecCol, "list_id")
+      .map(schema.fieldNames.indexOf(_))
+    if (iId < 0 || iVec < 0 || iList < 0 ||
+        schema(iList).dataType != IntegerType) return None
+    val idType = schema(iId).dataType
+    val kept = index.data.filter(r =>
+      !r.isNullAt(iList) && probes(r.getInt(iList)))
+    h.set("vectors", kept.size.toLong)
+    if (kept.exists(r => r.isNullAt(iId) || r.isNullAt(iVec))) return None
+    idOrder(idType).map { byId =>
+      val probed = DriverRoute.localFrame(spark,
+        StructType(Seq(schema(iId), schema(iVec))),
+        kept.map(r => new GenericInternalRow(
+          Array[Any](r.get(iId, idType), r.getArray(iVec))): InternalRow))
+      val out = scored(probed)
+      val top = DriverRoute.localRows(out).sortWith { (x, y) =>
+        val c = compareCos(x, y, 1)
+        if (c != 0) c < 0 else byId.lt(x.get(0, idType), y.get(0, idType))
+      }.take(k)
+      DriverRoute.localFrame(spark, out.schema, top.toSeq)
+    }
+  }
+
+  /** Spark's `desc` order of the doubles at `at` of two rows: NaN above
+    * every number, -0.0 equal to 0.0, nulls last. Negative when `x` comes
+    * first.
+    */
+  private def compareCos(x: InternalRow, y: InternalRow, at: Int): Int =
+    if (x.isNullAt(at) || y.isNullAt(at))
+      java.lang.Boolean.compare(x.isNullAt(at), y.isNullAt(at))
+    else SQLOrderingUtil.compareDoubles(y.getDouble(at), x.getDouble(at))
+
+  /** Spark's ascending order of non-null ids of type `dt`, for the types
+    * the driver routes take: integral, and strings of the default binary
+    * collation (`UTF8String` order).
+    */
+  private def idOrder(dt: DataType): Option[Ordering[Any]] = dt match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      Some(Ordering.by((x: Any) => x.asInstanceOf[Number].longValue))
+    case StringType =>
+      Some(Ordering.fromLessThan[Any]((x, y) =>
+        x.asInstanceOf[UTF8String].compareTo(y.asInstanceOf[UTF8String]) < 0))
+    case _ => None
   }
 
   /** `cosine(vec, typedLit(q))` for a per-call query `q`, as the same
@@ -366,38 +529,155 @@ object Similarity {
     * The probe side keeps every row, so every vector still receives k
     * neighbors; pairs per bucket are ≤ m·cap instead of m². Bucket
     * counts (≤ 2^numPlanes rows) broadcast.
+    *
+    * On the driver route (see the route rule) the buckets, norms and cap
+    * filter are these expressions over a local relation, and each vector
+    * ranks its bucket's candidates by the same cosine double in the same
+    * `(cos desc, id_b)` order, in parallel over vectors.
     */
   def neighborsPerVector(embeddings: DataFrame, k: Int,
                          numPlanes: Int = 8, dim: Int = 64,
                          vecCol: String = "embedding",
                          idCol: String = "vec_id",
-                         maxBucketSize: Int = 4096): DataFrame = {
-    // hoist the float→double cast and the self-norm ABOVE the pair join:
-    // computed per pair they dominate the kernel (an array allocation +
-    // two extra dot folds per candidate — measured ~3× the pair cost).
-    // The per-pair value dot(a,b)/(n_a·n_b) is bit-identical to
-    // [[cosine]] (same fold, same op order), so oracles are unaffected.
-    val bucketed = lshBuckets(embeddings, numPlanes, dim, 42L, vecCol)
-      .select(col("bucket"), col(idCol),
-        transform(col(vecCol), _.cast("double")).as("_v"))
-      .withColumn("_n", sqrt(dot(col("_v"), col("_v"))))
-    val a = bucketed.select(col("bucket"), col(idCol).as("id_a"),
-      col("_v").as("v_a"), col("_n").as("n_a"))
-    val counts = bucketed.groupBy("bucket").count()
-    val b = bucketed
-      .join(broadcast(counts), Seq("bucket"))
-      .filter(col("count") <= maxBucketSize ||
-        pmod(xxhash64(col(idCol), col("bucket")), col("count"))
-          < maxBucketSize)
-      .select(col("bucket"), col(idCol).as("id_b"),
-        col("_v").as("v_b"), col("_n").as("n_b"))
-    val w = Window.partitionBy("id_a").orderBy(col("cos").desc, col("id_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 6)
-          .as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+                         maxBucketSize: Int = 4096): DataFrame =
+    Trace.span("ann.neighbors") { h =>
+      // hoist the float→double cast and the self-norm ABOVE the pair join:
+      // computed per pair they dominate the kernel (an array allocation +
+      // two extra dot folds per candidate — measured ~3× the pair cost).
+      // The per-pair value dot(a,b)/(n_a·n_b) is bit-identical to
+      // [[cosine]] (same fold, same op order), so oracles are unaffected.
+      def normed(e: DataFrame) = lshBuckets(e, numPlanes, dim, 42L, vecCol)
+        .select(col("bucket"), col(idCol),
+          transform(col(vecCol), _.cast("double")).as("_v"))
+        .withColumn("_n", sqrt(dot(col("_v"), col("_v"))))
+      val kept = col("count") <= maxBucketSize ||
+        pmod(xxhash64(col(idCol), col("bucket")), col("count")) < maxBucketSize
+      val sel = embeddings.select(col(idCol), col(vecCol))
+      val driver = collectVectors(sel, 1, h).flatMap { rows =>
+        val local = embeddings.sparkSession.createDataFrame(
+          rows.toSeq.asJava, sel.schema)
+        neighborsDriver(normed(local), k, maxBucketSize, kept, h)
+      }
+      h.set("route", if (driver.isDefined) "driver" else "spark")
+      driver.getOrElse {
+        val bucketed = normed(embeddings)
+        val a = bucketed.select(col("bucket"), col(idCol).as("id_a"),
+          col("_v").as("v_a"), col("_n").as("n_a"))
+        val counts = bucketed.groupBy("bucket").count()
+        val b = bucketed
+          .join(broadcast(counts), Seq("bucket"))
+          .filter(kept)
+          .select(col("bucket"), col(idCol).as("id_b"),
+            col("_v").as("v_b"), col("_n").as("n_b"))
+        val w = Window.partitionBy("id_a")
+          .orderBy(col("cos").desc, col("id_b"))
+        a.join(b, Seq("bucket"))
+          .filter(col("id_a") =!= col("id_b"))
+          .select(col("id_a"), col("id_b"),
+            round(dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 6)
+              .as("cos"))
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= k)
+      }
+    }
+
+  /** [[neighborsPerVector]]'s driver route over `normed`, a local frame
+    * of `(bucket, id, _v, _n)`: `None` (the Spark route) for ids that are
+    * null, repeated or of a type with no driver order, for null vectors,
+    * for a zero norm or past `DriverMaxPairs`. `kept` is the Spark
+    * route's cap filter over `(id, bucket, count)`, evaluated for the rows
+    * of the buckets over the cap only.
+    */
+  private def neighborsDriver(normed: DataFrame, k: Int, cap: Int,
+                              kept: Column,
+                              h: Trace.Handle): Option[DataFrame] = {
+    val spark = normed.sparkSession
+    val idField = normed.schema(1)
+    val rows = DriverRoute.localRows(normed)
+    val n = rows.length
+    val id = rows.map(r =>
+      if (r.isNullAt(1)) null else r.get(1, idField.dataType))
+    val byId = idOrder(idField.dataType).filter(_ => !id.contains(null))
+      .map(o => (0 until n).sortWith((i, j) => o.lt(id(i), id(j))).toArray)
+      .filter(s => s.indices.drop(1).forall(x => id(s(x - 1)) != id(s(x))))
+    val members = (0 until n).groupBy(i => rows(i).getLong(0))
+    val pairs = members.valuesIterator
+      .map(m => m.size.toLong * math.min(m.size, cap)).sum
+    val norm = rows.map(r => if (r.isNullAt(3)) 0.0 else r.getDouble(3))
+    // a zero divisor n_a·n_b fails the Spark route's division (ANSI) or
+    // gives null: such inputs stay on it
+    val least = norm.filterNot(_.isNaN).minOption.getOrElse(1.0)
+    h.set("pairs", pairs)
+    for (sorted <- byId; v <- vectors(rows, 2)
+         if least * least != 0.0 && pairs <= DriverMaxPairs) yield {
+      val rank = new Array[Int](n)
+      sorted.indices.foreach(x => rank(sorted(x)) = x)
+      val hot = members.filter(_._2.size > cap).toSeq
+      val at = hot.flatMap(_._2).toArray
+      val flags = if (at.isEmpty) Array.empty[InternalRow] else
+        DriverRoute.localRows(DriverRoute.localFrame(spark,
+          StructType(Seq(idField, StructField("bucket", LongType, false),
+            StructField("count", LongType, false))),
+          hot.flatMap { case (bk, m) => m.map(i => new GenericInternalRow(
+            Array[Any](id(i), bk, m.size.toLong)): InternalRow) })
+          .select(kept))
+      val keptHot =
+        at.indices.filter(x => flags(x).getBoolean(0)).map(at).toSet
+      val candidates = members.map { case (bk, m) =>
+        bk -> (if (m.size > cap) m.filter(keptHot).toArray else m.toArray) }
+      val top = new Array[Array[(Int, Double)]](n)
+      java.util.stream.IntStream.range(0, n).parallel().forEach { a =>
+        top(a) = nearest(a, candidates(rows(a).getLong(0)), v, norm, rank, k)
+      }
+      val out = for (a <- 0 until n; ((b, c), r) <- top(a).iterator
+        .zipWithIndex) yield new GenericInternalRow(
+          Array[Any](id(a), id(b), c, r + 1)): InternalRow
+      DriverRoute.localFrame(spark, StructType(Seq(
+        idField.copy(name = "id_a"), idField.copy(name = "id_b"),
+        StructField("cos", DoubleType, true),
+        StructField("rank", IntegerType, false))), out)
+    }
   }
+
+  /** Row `a`'s best `k` of `candidates` (row indices; `a` itself skipped)
+    * by the Spark route's `round(dot(v_a, v_b) / (n_a·n_b), 6)`, in its
+    * `(cos desc, id_b)` order (`rank` orders ids). Rounding is monotone,
+    * so only candidates within 2e-6 of the k-th best unrounded cosine can
+    * reach the top k; only those are rounded and sorted.
+    */
+  private def nearest(a: Int, candidates: Array[Int],
+                      v: Array[Array[Double]], norm: Array[Double],
+                      rank: Array[Int], k: Int): Array[(Int, Double)] = {
+    val others = candidates.filter(_ != a)
+    val raw = others.map { b =>
+      val (x, y) = (v(a), v(b))
+      val len = math.min(x.length, y.length)
+      var d = 0.0
+      var i = 0
+      while (i < len) { d += x(i) * y(i); i += 1 }
+      d / (norm(a) * norm(b))
+    }
+    val floor =
+      if (raw.length <= k) Double.NegativeInfinity
+      else {
+        val s = raw.clone
+        java.util.Arrays.sort(s)
+        s(s.length - k) - 2e-6
+      }
+    others.indices.iterator
+      .filter(x => raw(x).isNaN || raw(x) >= floor)
+      .map(x => (others(x), round6(raw(x))))
+      .toArray
+      .sortWith { case ((b1, c1), (b2, c2)) =>
+        val c = SQLOrderingUtil.compareDoubles(c2, c1)
+        if (c != 0) c < 0 else rank(b1) < rank(b2)
+      }
+      .take(k)
+  }
+
+  /** Spark's `round(x, 6)` of a double (HALF_UP on its decimal form). */
+  private def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 }

@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 
 /** Regenerates PLANS.md: formatted physical plans of the headline queries
   * with the scale-relevant properties called out. Run after changing any
@@ -17,8 +18,28 @@ object Plans {
     def fmt(df: DataFrame): String =
       df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+    // the final adaptive plan, which shows the row/columnar transitions
+    // (adaptive execution inserts them only when the query runs)
+    def ran(df: DataFrame): String = { df.collect(); fmt(df) }
+
     def condense(plan: String, keep: Int = 40): String =
       plan.split("\n").take(keep).mkString("\n")
+
+    // tiny repo: the engine-side plans (DSv2 columnar values scans)
+    val values = {
+      val dir = Files.createTempDirectory("plans-repo").toString
+      val repo = graft.repo.Repository.create(
+        graft.storage.Store.local(dir), spark)
+      val s = repo.writableSession("main")
+      s.addArray("/cube", Seq(8, 8), Seq(2, 2))
+      val df0 = spark.range(64).selectExpr("id div 8 as i0", "id % 8 as i1",
+        "id as value")
+      graft.tensor.TensorPlane.writeValues(s, "/cube", df0, "int64")
+      s.commit("cube")
+      spark.read.format("graft-v2")
+        .option("path", dir).option("array", "/cube")
+        .option("mode", "values").option("dtype", "int64").load()
+    }
 
     val sections = Seq(
       ("entry — star-schema rollup",
@@ -50,30 +71,19 @@ object Plans {
           "join as single rows, and CosinePairsExpr evaluates each BxB " +
           "tile in one native kernel call (explode emits only qualifying " +
           "pairs).",
-        fmt(graft.Queries.q_embedding_neardups(spark, d))), {
-        // tiny repo: the engine-side plans (DSv2 columnar slice scan)
-        val dir = Files.createTempDirectory("plans-repo").toString
-        val repo = graft.repo.Repository.create(
-          graft.storage.Store.local(dir), spark)
-        val s = repo.writableSession("main")
-        s.addArray("/cube", Seq(8, 8), Seq(2, 2))
-        val df0 = spark.range(64).selectExpr("id div 8 as i0", "id % 8 as i1",
-          "id as value")
-        graft.tensor.TensorPlane.writeValues(s, "/cube", df0, "int64")
-        s.commit("cube")
-        val sliced = spark.read.format("graft-v2")
-          .option("path", dir).option("array", "/cube")
-          .option("mode", "values").option("dtype", "int64").load()
-          .filter(org.apache.spark.sql.functions.col("i0") >= 2 &&
-            org.apache.spark.sql.functions.col("i0") <= 3)
-          .agg(org.apache.spark.sql.functions.sum("value"))
-        ("graft-v2 values slice — vectorized scan with all-dim pushdown",
-          "BatchScan description carries the pushed element bounds (splits " +
-            "outside them are never planned; in-chunk decode is bounded " +
-            "too); ColumnarToRow above the scan marks the vectorized " +
-            "reader feeding whole-stage codegen.",
-          fmt(sliced))
-      },
+        fmt(graft.Queries.q_embedding_neardups(spark, d))),
+      ("graft-v2 values slice — vectorized scan with all-dim pushdown",
+        "BatchScan description carries the pushed element bounds (splits " +
+          "outside them are never planned; in-chunk decode is bounded " +
+          "too); ColumnarToRow above the scan marks the vectorized " +
+          "reader feeding whole-stage codegen (a sum of a cast is an " +
+          "aggregate the scan does not push).",
+        ran(values.filter(col("i0") >= 2 && col("i0") <= 3)
+          .agg(sum(col("value").cast("double"))))),
+      ("graft-v2 values scan — graft.Bench engine_v2_columnar_scan",
+        "The bench entry's query: ColumnarToRow above the scan and no " +
+          "PushedAggregates, so it times the columnar values reader.",
+        ran(values.agg(sum(col("value").cast("double")), count(lit(1))))),
       ("q_dedup_ngram_lsh — LSH blocking + containment audit",
         "The production path is the bucket join (minhash bands → " +
           "equi-join); the verify threshold is the single-reference form " +

@@ -197,6 +197,19 @@ class PlanCheckSpec extends SparkTestBase {
     assert(!prod.contains("CartesianProduct") &&
       !prod.contains("BroadcastNestedLoopJoin"),
       s"neighborsPerVector must stay bucket-joined:\n${prod.take(2000)}")
+    // past the 20,000-vector bound the Spark route plans; it too stays
+    // bucket-joined
+    import org.apache.spark.sql.functions.{col, expr}
+    val overBound = plan(graft.pipeline.Similarity.neighborsPerVector(
+      spark.range(20001).select(col("id").as("vec_id"), expr(
+        "transform(sequence(0, 7), i -> " +
+          "cast((xxhash64(id, i) % 1000) / 1000.0 as float))").as("embedding")),
+      k = 5, numPlanes = 6, dim = 8))
+    assert(overBound.contains("SortMergeJoin") ||
+      overBound.contains("BroadcastHashJoin"), overBound.take(2000))
+    assert(!overBound.contains("CartesianProduct") &&
+      !overBound.contains("BroadcastNestedLoopJoin"),
+      s"the Spark route must stay bucket-joined:\n${overBound.take(2000)}")
     // q_ann_neighbors ADDS the exact all-pairs audit side (test scale
     // only, Queries.annAudit doc) — exactly one BNL, nothing else
     val audit = plan(Queries.all("q_ann_neighbors")(spark, sf))

@@ -143,6 +143,7 @@ class TraceSpec extends SparkTestBase {
       "expire", "compact", "scan.plan", "scan.spj.error",
       "rechunk", "downsample", "slice", "fsck", "zarr.list", "zarr.getsize",
       "dedup.minhash", "dedup.lsh_verify", "dedup.clusters",
+      "ann.ivf_build", "ann.neighbors", "ann.ivf_query",
       // flush-phase breakdown spans (r16 optimization round)
       "flush.splits", "flush.finalize", "manifest.write")
     val srcDir = java.nio.file.Paths.get("src/main/scala")

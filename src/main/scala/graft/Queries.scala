@@ -639,8 +639,8 @@ object Queries {
     */
   val q_ann_neighbors: Q = (s, d) => {
     val emb = t(s, d, "embeddings")
-    // cast + self-norm hoisted above the all-pairs audit join (same
-    // dot/(n·n) op order as Similarity.cosine — values bit-identical)
+    // cast + self-norm hoisted above the all-pairs audit join (the same
+    // cosine rule as Similarity.cosine — values bit-identical)
     val pre = emb.select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("_v"))
       .withColumn("_n", sqrt(Similarity.dot(col("_v"), col("_v"))))
@@ -656,8 +656,9 @@ object Queries {
       .orderBy(col("cos").desc, col("id_b"))
     val exact = a.join(b, col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(Similarity.dot(col("v_a"), col("v_b")) /
-          (col("n_a") * col("n_b")), 6).as("cos"))
+        round(graft.functions.VectorFunctions.cosine(
+          Similarity.dot(col("v_a"), col("v_b")), col("n_a"), col("n_b")), 6)
+          .as("cos"))
       .withColumn("rank", row_number().over(byScore))
       .filter(col("rank") <= 5)
     val lsh = Similarity.neighborsPerVector(emb, k = 5, numPlanes = 6)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, Sqrt}
 
 /** Catalyst extension registering the graft expression library as SQL
   * functions, so plain `spark.sql` can use the native kernels:
@@ -52,18 +52,11 @@ object GraftExtensions {
         s"$what must be an integer literal")
     }
 
-  /** cosine(a, b) composed from the native dot kernel + Catalyst math
-    * (no UDF): dot(a,b) / (sqrt(dot(a,a)) · sqrt(dot(b,b))). */
-  private[functions] def cosineExpr(a: Expression,
-                                    b: Expression): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
-    Divide(DotProductExpr(a, b),
-      Multiply(Sqrt(DotProductExpr(a, a)), Sqrt(DotProductExpr(b, b))))
-  }
-
   private[functions] val extraBuilders
       : Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_sim" -> (args => cosineExpr(args(0), args(1))),
+    "cosine_sim" -> (args => Cosine(DotProductExpr(args(0), args(1)),
+      Sqrt(DotProductExpr(args(0), args(0))),
+      Sqrt(DotProductExpr(args(1), args(1))))),
     "word_shingles" -> (args => WordShinglesExpr(args(0),
       if (args.size > 1) litInt(args(1), "n") else 3)),
     "char_shingles" -> (args => CharShinglesExpr(args(0),

@@ -57,6 +57,33 @@ case class DotProductExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** '''The cosine rule''' of every similarity operator: `dot / (‖a‖·‖b‖)`,
+  * and NULL when the norm product is ±0.0 (a zero vector or a zero
+  * query). Null is SQL's answer for an undefined quotient (`try_divide`
+  * gives it too): it sorts last under `cos desc`, so a zero vector never
+  * tops a top-k, and it fails every `>= threshold` test. A NaN element
+  * still gives NaN. [[apply]] is the Catalyst form, [[of]] the same rule
+  * on doubles for the JVM kernels.
+  */
+object Cosine {
+
+  /** The rule over `(dot, ‖a‖, ‖b‖)` (the neighbour paths hoist the
+    * norms). The product is the one-term dot product `(‖a‖)·(‖b‖)`
+    * (0.0 + x·y: the same double as x·y, bar the sign of a zero), so a
+    * per-call norm, such as a query's, folds into an array literal, which
+    * generated code references where it would inline a scalar: a new query
+    * compiles nothing.
+    */
+  def apply(dot: Expression, na: Expression, nb: Expression): Expression =
+    Divide(dot, DotProductExpr(CreateArray(Seq(na)), CreateArray(Seq(nb))),
+      NumericEvalContext(EvalMode.TRY))
+
+  def of(dot: Double, na: Double, nb: Double): java.lang.Double = {
+    val p = na * nb
+    if (p == 0.0) null else dot / p
+  }
+}
+
 /** Engine-portable 64-bit token hash: two 32-bit FNV-1a folds over the
   * string's CODE POINTS (hi = standard offset basis 0x811c9dc5, lo =
   * basis xor 0x5bd1e995 = 3670897744), packed `(hi << 32) | lo`. Plain
@@ -215,8 +242,8 @@ case class WordShinglesExpr(child: Expression, n: Int)
   * kernel of the block-matrix similarity join. Inputs are two
   * ARRAY<STRUCT<id BIGINT, v ARRAY<DOUBLE>>> blocks plus a same-block
   * flag; emits ARRAY<STRUCT<id_a, id_b, cos>> for pairs with
-  * cos ≥ threshold (id_a < id_b). Norms are computed once per block side;
-  * dot products run in sequential order (same FP result as
+  * [[Cosine]] ≥ threshold (id_a < id_b). Norms are computed once per
+  * block side; dot products run in sequential order (same FP result as
   * [[DotProductExpr]] pair-at-a-time).
   */
 case class CosinePairsExpr(blockA: Expression, blockB: Expression,
@@ -270,8 +297,8 @@ case class CosinePairsExpr(blockA: Expression, blockB: Expression,
           var acc = 0.0
           var k = 0
           while (k < n) { acc += va(k) * vb(k); k += 1 }
-          val cos = acc / (nrmA(i) * nrmB(j))
-          if (cos >= threshold) {
+          val cos = Cosine.of(acc, nrmA(i), nrmB(j))
+          if (cos != null && cos >= threshold) {
             val (lo, hi) =
               if (idsA(i) < idsB(j)) (idsA(i), idsB(j))
               else (idsB(j), idsA(i))
@@ -506,6 +533,10 @@ object VectorFunctions {
   /** Codegen'd Σ aᵢ·bᵢ. */
   def dot_product(a: Column, b: Column): Column =
     column(DotProductExpr(expression(a), expression(b)))
+
+  /** [[Cosine]] of a dot product and two norms. */
+  def cosine(dot: Column, na: Column, nb: Column): Column =
+    column(Cosine(expression(dot), expression(na), expression(nb)))
 
   /** Portable dual-FNV-1a 64-bit hash (see [[Fnv64TokenExpr]]). */
   def fnv_long64(s: Column): Column =

@@ -601,11 +601,6 @@ final class AssetManager(val store: Store, spark: SparkSession) {
       s"${Layout.txLogPrefix(snapshotId)}/part-00000-driver.zstd.parquet",
       DriverParquet.writeEditRows(rows))
 
-  /** Read back one manifest split for a node (partition-pruned scan). */
-  def readManifestSplit(ref: ManifestRef, nodeId: String): DataFrame =
-    readManifest(ref.manifestId)
-      .filter(col("node_id") === nodeId && col("split") === ref.split)
-
   /** Driver-side cache of manifest splits for point lookups — the Spark
     * analog of the reference's manifest LRU + preload cap
     * (asset_manager.rs:71-147, config.rs:294). Manifests are immutable so

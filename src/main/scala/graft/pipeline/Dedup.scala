@@ -721,36 +721,45 @@ object Dedup {
   def embeddingNearDups(embeddings: DataFrame, threshold: Double,
                         vecCol: String = "embedding",
                         idCol: String = "vec_id",
-                        numBlocks: Int = 16): DataFrame = {
-    require(embeddings.schema(idCol).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"embeddingNearDups needs a numeric id column; '$idCol' is " +
-        s"${embeddings.schema(idCol).dataType.simpleString} — add a " +
-        "monotonically_increasing_id() surrogate first")
-    val staged = embeddings.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-      .withColumn("blk",
-        pmod(xxhash64(col("id")), lit(numBlocks)).cast("int"))
-    val blocks = staged.groupBy("blk")
+                        numBlocks: Int = 16): DataFrame =
+    blockPairs(embeddings, Nil, threshold, vecCol, idCol, numBlocks)
+
+  /** The block-pair join of [[embeddingNearDups]] and of [[semanticDedup]]'s
+    * centroid mode: `(id_a, id_b, cos)` for every pair with cos ≥
+    * `threshold` ([[graft.functions.CosinePairsExpr]]) that agrees on the
+    * columns `keys` (none, or `list_id`). Vectors hash into `numBlocks`
+    * blocks per key; the upper-triangle block pairs enumerate as a tiny
+    * broadcast relation and each side equi-joins on its block and the
+    * keys: hash joins that distribute block rows to their tiles.
+    * A `blk_a <= blk_b` theta-join would plan a BroadcastNestedLoopJoin
+    * and broadcast EVERY vector (PlanCheckSpec guards this); no constant
+    * key stands in for `keys = Nil`, as the optimizer may drop a foldable
+    * key and plan a Cartesian product.
+    */
+  private def blockPairs(embeddings: DataFrame, keys: Seq[String],
+                         threshold: Double, vecCol: String, idCol: String,
+                         numBlocks: Int): DataFrame = {
+    val idType = embeddings.schema(idCol).dataType
+    require(idType.isInstanceOf[NumericType],
+      s"the embedding near-dup join needs a numeric id column; '$idCol' " +
+        s"is ${idType.simpleString} — add a monotonically_increasing_id() " +
+        "surrogate first")
+    val blocks = embeddings.select(keys.map(col) ++ Seq(
+        col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>").as("v"),
+        pmod(xxhash64(col(idCol).cast("long")), lit(numBlocks)).cast("int")
+          .as("blk")): _*)
+      .groupBy(keys.map(col) :+ col("blk"): _*)
       .agg(collect_list(struct(col("id"), col("v"))).as("vecs"))
-    val a = blocks.select(col("blk").as("blk_a"), col("vecs").as("vecs_a"))
-    val b = blocks.select(col("blk").as("blk_b"), col("vecs").as("vecs_b"))
-    // enumerate the upper-triangle block PAIRS as a tiny broadcast
-    // relation and equi-join each side: hash joins that distribute block
-    // rows to their tiles. A `blk_a <= blk_b` theta-join would plan a
-    // BroadcastNestedLoopJoin and broadcast EVERY vector — fine at test
-    // scale, a >8 GB broadcast at 100 TB (PlanCheckSpec guards this).
-    val spark = embeddings.sparkSession
-    import scala.jdk.CollectionConverters._
-    val pairDf = spark.createDataFrame(
+    def side(s: String) = blocks.select(keys.map(col) ++ Seq(
+      col("blk").as(s"blk_$s"), col("vecs").as(s"vecs_$s")): _*)
+    val pairDf = embeddings.sparkSession.createDataFrame(
       (for { i <- 0 until numBlocks; j <- i until numBlocks }
-        yield org.apache.spark.sql.Row(i, j)).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("blk_a",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("blk_b",
-          org.apache.spark.sql.types.IntegerType))))
-    broadcast(pairDf).join(a, Seq("blk_a")).join(b, Seq("blk_b"))
+        yield Row(i, j)).asJava,
+      StructType(Seq(StructField("blk_a", IntegerType),
+        StructField("blk_b", IntegerType))))
+    broadcast(pairDf).join(side("a"), Seq("blk_a"))
+      .join(side("b"), keys :+ "blk_b")
       .select(explode(graft.functions.VectorFunctions.cosine_pairs(
         col("vecs_a"), col("vecs_b"), col("blk_a") === col("blk_b"),
         threshold)).as("p"))
@@ -899,40 +908,12 @@ object Dedup {
                     vecCol: String = "embedding", idCol: String = "vec_id",
                     numCentroids: Int = 0, numBlocks: Int = 8,
                     seed: Long = 42L): DataFrame = {
-    val pairs =
-      if (numCentroids <= 1)
+    val pairs = (if (numCentroids <= 1)
         embeddingNearDups(embeddings, threshold, vecCol, idCol)
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      else {
-        val (indexed, centers) = Similarity.ivfIndex(embeddings,
-          nlist = numCentroids, seed = seed, vecCol = vecCol)
-        val staged = indexed.select(col(idCol).cast("long").as("id"),
-            col(vecCol).cast("array<double>").as("v"), col("list_id"))
-          .withColumn("blk",
-            pmod(xxhash64(col("id")), lit(numBlocks)).cast("int"))
-        val blocks = staged.groupBy("list_id", "blk")
-          .agg(collect_list(struct(col("id"), col("v"))).as("vecs"))
-        val a = blocks.select(col("list_id"), col("blk").as("blk_a"),
-          col("vecs").as("vecs_a"))
-        val b = blocks.select(col("list_id"), col("blk").as("blk_b"),
-          col("vecs").as("vecs_b"))
-        val spark = embeddings.sparkSession
-        import scala.jdk.CollectionConverters._
-        val pairDf = spark.createDataFrame(
-          (for { i <- 0 until numBlocks; j <- i until numBlocks }
-            yield org.apache.spark.sql.Row(i, j)).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("blk_a",
-              org.apache.spark.sql.types.IntegerType),
-            org.apache.spark.sql.types.StructField("blk_b",
-              org.apache.spark.sql.types.IntegerType))))
-        broadcast(pairDf).join(a, Seq("blk_a"))
-          .join(b, Seq("list_id", "blk_b"))
-          .select(explode(graft.functions.VectorFunctions.cosine_pairs(
-            col("vecs_a"), col("vecs_b"), col("blk_a") === col("blk_b"),
-            threshold)).as("p"))
-          .select(col("p.id_a").as("doc_a"), col("p.id_b").as("doc_b"))
-      }
+      else blockPairs(Similarity.ivfIndex(embeddings, nlist = numCentroids,
+          seed = seed, vecCol = vecCol)._1, Seq("list_id"), threshold, vecCol,
+        idCol, numBlocks))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val labels = ConnectedComponents.run(pairs)
       .withColumnRenamed("id", idCol)
     embeddings.select(col(idCol))

@@ -538,12 +538,6 @@ object Multimodal {
       .withColumnRenamed("col", "frame")
       .filter(pmod(col("frame_idx"), lit(stride)) === 0)
 
-  /** STUB resize: truncate/pad the payload to `targetBytes` (plumbing for
-    * image resize — constant output size per row).
-    */
-  def fakeResize(bin: Column, targetBytes: Int): Column =
-    substring(bin, 1, targetBytes)
-
   /** End-to-end multimodal feature pass: treat a binary column as media,
     * attach metadata, extract stub features. One scan, no shuffle.
     */

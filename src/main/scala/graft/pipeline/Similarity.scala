@@ -11,6 +11,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{DriverRoute, Trace}
+import graft.functions.Cosine
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`ARRAY<FLOAT>`). Brute-force cosine is the correctness baseline; the
@@ -25,16 +26,15 @@ object Similarity {
     * over the bound). An input of at most `DriverMaxVectors` rows and
     * `DriverMaxCells` vector cells (vectors × dim), with no null vector or
     * element, takes the DRIVER route; [[neighborsPerVector]] also needs
-    * unique, non-null ids of an integral or string type, no zero norm (the
-    * Spark route's division fails there under ANSI) and at most
+    * unique, non-null ids of an integral or string type and at most
     * `DriverMaxPairs` pairs (Σ m·min(m, cap) over its LSH buckets). Every
     * per-row value (double cast, sign bits, norm, bucket cap hash,
     * nearest centroid) is the Spark route's own column expression,
     * evaluated over a local relation; the per-pair cosine is the same
-    * double, computed natively. The result is a local DataFrame, whose use
-    * runs no Spark job. [[ivfTopK]] answers on the driver when its index
-    * is such a local DataFrame (cached or not). Any other input takes the
-    * SPARK route, unchanged.
+    * rule ([[graft.functions.Cosine]]), computed natively. The result is a
+    * local DataFrame, whose use runs no Spark job. [[ivfTopK]] answers on
+    * the driver when its index is such a local DataFrame (cached or not).
+    * Any other input takes the SPARK route, unchanged.
     *
     * Sizing: both routes forced, 4 vCPUs, `local[4]`, 64-dim unit
     * vectors in 20 tight clusters (the perfbench shape), cached input,
@@ -61,21 +61,34 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** The cosine rule ([[graft.functions.Cosine]]) of two vectors. */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
+    graft.functions.VectorFunctions.cosine(dot(a, b), norm(a), norm(b))
+
+  /** `(id, cos)`: each row's cosine to the query `q`, rounded to 6 places.
+    * The query rides as an array literal and its norm folds into one, so
+    * a new query compiles no new code.
+    */
+  private def scored(df: DataFrame, q: Seq[Double], vecCol: String,
+                     idCol: String): DataFrame =
+    df.select(col(idCol),
+      round(cosine(col(vecCol).cast("array<double>"), typedLit(q)), 6)
+        .as("cos"))
+
+  /** [[scored]]'s best `k` rows in `(cos desc, id)` order (TakeOrdered —
+    * no full sort shuffle).
+    */
+  private def topK(df: DataFrame, q: Seq[Double], k: Int, vecCol: String,
+                   idCol: String): DataFrame =
+    scored(df, q, vecCol, idCol).orderBy(col("cos").desc, col(idCol)).limit(k)
 
   /** Brute-force top-k by cosine against one query vector: one scan, one
-    * top-k (TakeOrdered — no full sort shuffle).
+    * top-k.
     */
   def bruteForceTopK(embeddings: DataFrame, query: Seq[Float], k: Int,
                      vecCol: String = "embedding",
-                     idCol: String = "vec_id"): DataFrame = {
-    val q = typedLit(query.map(_.toDouble))
-    embeddings.select(col(idCol),
-        round(cosine(col(vecCol).cast("array<double>"), q), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
+                     idCol: String = "vec_id"): DataFrame =
+    topK(embeddings, query.map(_.toDouble), k, vecCol, idCol)
 
   /** Prototypicality / outlier scoring against per-label centroids (the
     * D4-style sibling of SemDeDup): each embedding's Euclidean distance
@@ -221,13 +234,10 @@ object Similarity {
       val sz = sizes.getOrElse(b, 0L)
       if (sz > 0 || chosen.isEmpty) { chosen += b; have += sz }
     }
-    bucketed
-      .filter(col("bucket").isin(chosen.toSeq: _*))
-      .select(col(idCol),
-        round(cosine(col(vecCol).cast("array<double>"),
-          typedLit(query.map(_.toDouble))), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    // the buckets as an array literal, not `isin`: generated code inlines
+    // `isin` values, so every probe set would compile anew
+    topK(bucketed.filter(array_contains(typedLit(chosen.toSeq), col("bucket"))),
+      query.map(_.toDouble), k, vecCol, idCol)
   }
 
   /** IVF (inverted-file) ANN index: k-means coarse quantizer over the
@@ -255,10 +265,8 @@ object Similarity {
                maxIter: Int = 10): (DataFrame, Array[Array[Double]]) =
     Trace.span("ann.ivf_build") { h =>
       val asDouble = col(vecCol).cast("array<double>")
-      def sampled(n: Long) = embeddings.select(asDouble)
-        .sample(withReplacement = false,
-          math.min(1.0, fitSampleCap * 1.1 / n), seed).limit(fitSampleCap)
-        .collect().map(_.getSeq[Double](0).toArray)
+      def sampled(n: Long) = fitSample(embeddings.select(asDouble), n,
+        fitSampleCap, seed, "ivfIndex")
       def fit(points: Array[Array[Double]]) =
         KMeansLocal.fit(points, math.min(nlist, points.length), maxIter, seed)
       val at = embeddings.schema.fieldNames.indexOf(vecCol)
@@ -280,15 +288,23 @@ object Similarity {
       }
       h.set("route", if (driver.isDefined) "driver" else "spark")
       driver.getOrElse {
-        val n = embeddings.count()
-        require(n > 0, "ivfIndex: empty corpus")
-        val centers = fit(if (n <= fitSampleCap)
-          embeddings.select(asDouble).collect().map(_.getSeq[Double](0).toArray)
-          else sampled(n))
+        val centers = fit(sampled(embeddings.count()))
         (embeddings.withColumn("list_id", nearestCentroid(asDouble, centers)),
           centers)
       }
     }
+
+  /** The vectors of `vecs` (one `array<double>` column, `n` rows) that
+    * k-means fits on: all of them up to `cap` rows, else a seeded sample
+    * of at most `cap`.
+    */
+  private def fitSample(vecs: DataFrame, n: Long, cap: Int, seed: Long,
+                        op: String): Array[Array[Double]] = {
+    require(n > 0, s"$op: empty corpus")
+    val picked = if (n <= cap) vecs else vecs.sample(withReplacement = false,
+      math.min(1.0, cap * 1.1 / n), seed).limit(cap)
+    picked.collect().map(_.getSeq[Double](0).toArray)
+  }
 
   /** The rows of `df` through the bounded collect, if they hold at most
     * `DriverMaxVectors` rows and `DriverMaxCells` cells in the vectors of
@@ -343,28 +359,23 @@ object Similarity {
               vecCol: String = "embedding",
               idCol: String = "vec_id"): DataFrame =
     Trace.span("ann.ivf_query") { h =>
-      val q = query.map(_.toDouble).toArray
-      val qn = math.sqrt(q.map(x => x * x).sum)
-      val probes = centers.zipWithIndex.map { case (c, i) =>
-        val dot = c.zip(q).map { case (x, y) => x * y }.sum
-        val cn = math.sqrt(c.map(x => x * x).sum)
-        i -> (if (cn == 0) -1.0 else dot / (cn * qn))
-      }.sortBy(-_._2).take(nprobe).map(_._1)
-      def scored(df: DataFrame) = df.select(col(idCol),
-        round(cosineToQuery(col(vecCol).cast("array<double>"), q.toSeq), 6)
-          .as("cos"))
+      val q = query.map(_.toDouble)
+      def l2(v: Seq[Double]) = math.sqrt(v.map(x => x * x).sum)
+      val cos = centers.map(c => Cosine.of(
+        c.zip(q).map { case (x, y) => x * y }.sum, l2(c.toSeq), l2(q)))
+      val probes = centers.indices
+        .sortWith((i, j) => cosOrder(cos(i), cos(j)) < 0).take(nprobe)
       val driver = indexed.queryExecution.analyzed match {
-        case l: LocalRelation if qn != 0.0 => topKDriver(
-          indexed.sparkSession, l, probes.toSet, k, h)(idCol, vecCol, scored)
+        case l: LocalRelation => topKDriver(indexed.sparkSession, l,
+          probes.toSet, k, h)(idCol, vecCol, scored(_, q, vecCol, idCol))
         case _ => None
       }
       h.set("route", if (driver.isDefined) "driver" else "spark")
       // the probe set as an array literal, not `isin`: generated code
       // inlines `isin` values, so every probe set would compile anew
-      driver.getOrElse(scored(indexed.filter(
-          array_contains(typedLit(probes.toSeq), col("list_id"))))
-        .orderBy(col("cos").desc, col(idCol))
-        .limit(k))
+      driver.getOrElse(topK(indexed.filter(
+          array_contains(typedLit(probes), col("list_id"))), q, k, vecCol,
+        idCol))
     }
 
   /** [[ivfTopK]] over a driver-held index: the rows of the probed lists,
@@ -374,9 +385,7 @@ object Similarity {
     * sorted on the driver in Spark's `(cos desc, id)` order. `None` (the
     * Spark route) when the columns are missing, `list_id` is not an int,
     * the id type has no driver order ([[idOrder]]) or a probed row has a
-    * null id or vector. The scoring runs within the call, so an error it
-    * raises (a zero-norm vector's division under ANSI) is raised there,
-    * not when the result is used.
+    * null id or vector.
     */
   private def topKDriver(spark: SparkSession, index: LocalRelation,
                          probes: Set[Int], k: Int, h: Trace.Handle)(
@@ -398,22 +407,22 @@ object Similarity {
         kept.map(r => new GenericInternalRow(
           Array[Any](r.get(iId, idType), r.getArray(iVec))): InternalRow))
       val out = scored(probed)
+      def cos(r: InternalRow): java.lang.Double =
+        if (r.isNullAt(1)) null else r.getDouble(1)
       val top = DriverRoute.localRows(out).sortWith { (x, y) =>
-        val c = compareCos(x, y, 1)
+        val c = cosOrder(cos(x), cos(y))
         if (c != 0) c < 0 else byId.lt(x.get(0, idType), y.get(0, idType))
       }.take(k)
       DriverRoute.localFrame(spark, out.schema, top.toSeq)
     }
   }
 
-  /** Spark's `desc` order of the doubles at `at` of two rows: NaN above
-    * every number, -0.0 equal to 0.0, nulls last. Negative when `x` comes
-    * first.
+  /** Spark's `desc` order of two cosines: NaN above every number, -0.0
+    * equal to 0.0, nulls last. Negative when `x` comes first.
     */
-  private def compareCos(x: InternalRow, y: InternalRow, at: Int): Int =
-    if (x.isNullAt(at) || y.isNullAt(at))
-      java.lang.Boolean.compare(x.isNullAt(at), y.isNullAt(at))
-    else SQLOrderingUtil.compareDoubles(y.getDouble(at), x.getDouble(at))
+  private def cosOrder(x: java.lang.Double, y: java.lang.Double): Int =
+    if (x == null || y == null) java.lang.Boolean.compare(x == null, y == null)
+    else SQLOrderingUtil.compareDoubles(y, x)
 
   /** Spark's ascending order of non-null ids of type `dt`, for the types
     * the driver routes take: integral, and strings of the default binary
@@ -426,17 +435,6 @@ object Similarity {
       Some(Ordering.fromLessThan[Any]((x, y) =>
         x.asInstanceOf[UTF8String].compareTo(y.asInstanceOf[UTF8String]) < 0))
     case _ => None
-  }
-
-  /** `cosine(vec, typedLit(q))` for a per-call query `q`, as the same
-    * double. Spark would fold ‖q‖ into a scalar literal, which generated
-    * code inlines, so every query would compile anew; here ‖q‖ stays in
-    * an array literal, multiplied in as the one-term dot product
-    * `(‖vec‖)·(‖q‖)` (0.0 + x·y: exact).
-    */
-  private def cosineToQuery(vec: Column, q: Seq[Double]): Column = {
-    val qn = math.sqrt(q.foldLeft(0.0)((acc, x) => acc + x * x))
-    dot(vec, typedLit(q)) / dot(array(norm(vec)), typedLit(Seq(qn)))
   }
 
   /** Product-quantization model: `m` subspaces × `k` centroids each,
@@ -459,13 +457,7 @@ object Similarity {
     require(m >= 1 && dim % m == 0, s"pqFit: dim $dim not divisible by m $m")
     val subDim = dim / m
     val vecs = embeddings.select(col(vecCol).cast("array<double>"))
-    val n = embeddings.count()
-    require(n > 0, "pqFit: empty corpus")
-    val sampled =
-      if (n <= fitSampleCap) vecs
-      else vecs.sample(withReplacement = false,
-        math.min(1.0, fitSampleCap * 1.1 / n), seed).limit(fitSampleCap)
-    val points = sampled.collect().map(_.getSeq[Double](0).toArray)
+    val points = fitSample(vecs, vecs.count(), fitSampleCap, seed, "pqFit")
     val codebooks = Array.tabulate(m) { mi =>
       val sub = points.map(_.slice(mi * subDim, (mi + 1) * subDim))
       KMeansLocal.fit(sub, math.min(k, sub.length), maxIter, seed + mi)
@@ -544,8 +536,8 @@ object Similarity {
       // hoist the float→double cast and the self-norm ABOVE the pair join:
       // computed per pair they dominate the kernel (an array allocation +
       // two extra dot folds per candidate — measured ~3× the pair cost).
-      // The per-pair value dot(a,b)/(n_a·n_b) is bit-identical to
-      // [[cosine]] (same fold, same op order), so oracles are unaffected.
+      // The per-pair value is the cosine rule over the hoisted norms, the
+      // same double as [[cosine]], so oracles are unaffected.
       def normed(e: DataFrame) = lshBuckets(e, numPlanes, dim, 42L, vecCol)
         .select(col("bucket"), col(idCol),
           transform(col(vecCol), _.cast("double")).as("_v"))
@@ -574,7 +566,8 @@ object Similarity {
         a.join(b, Seq("bucket"))
           .filter(col("id_a") =!= col("id_b"))
           .select(col("id_a"), col("id_b"),
-            round(dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 6)
+            round(graft.functions.VectorFunctions.cosine(
+              dot(col("v_a"), col("v_b")), col("n_a"), col("n_b")), 6)
               .as("cos"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= k)
@@ -583,10 +576,10 @@ object Similarity {
 
   /** [[neighborsPerVector]]'s driver route over `normed`, a local frame
     * of `(bucket, id, _v, _n)`: `None` (the Spark route) for ids that are
-    * null, repeated or of a type with no driver order, for null vectors,
-    * for a zero norm or past `DriverMaxPairs`. `kept` is the Spark
-    * route's cap filter over `(id, bucket, count)`, evaluated for the rows
-    * of the buckets over the cap only.
+    * null, repeated or of a type with no driver order, for null vectors or
+    * past `DriverMaxPairs`. `kept` is the Spark route's cap filter over
+    * `(id, bucket, count)`, evaluated for the rows of the buckets over the
+    * cap only.
     */
   private def neighborsDriver(normed: DataFrame, k: Int, cap: Int,
                               kept: Column,
@@ -604,12 +597,9 @@ object Similarity {
     val pairs = members.valuesIterator
       .map(m => m.size.toLong * math.min(m.size, cap)).sum
     val norm = rows.map(r => if (r.isNullAt(3)) 0.0 else r.getDouble(3))
-    // a zero divisor n_a·n_b fails the Spark route's division (ANSI) or
-    // gives null: such inputs stay on it
-    val least = norm.filterNot(_.isNaN).minOption.getOrElse(1.0)
     h.set("pairs", pairs)
     for (sorted <- byId; v <- vectors(rows, 2)
-         if least * least != 0.0 && pairs <= DriverMaxPairs) yield {
+         if pairs <= DriverMaxPairs) yield {
       val rank = new Array[Int](n)
       sorted.indices.foreach(x => rank(sorted(x)) = x)
       val hot = members.filter(_._2.size > cap).toSeq
@@ -625,7 +615,7 @@ object Similarity {
         at.indices.filter(x => flags(x).getBoolean(0)).map(at).toSet
       val candidates = members.map { case (bk, m) =>
         bk -> (if (m.size > cap) m.filter(keptHot).toArray else m.toArray) }
-      val top = new Array[Array[(Int, Double)]](n)
+      val top = new Array[Array[(Int, java.lang.Double)]](n)
       java.util.stream.IntStream.range(0, n).parallel().forEach { a =>
         top(a) = nearest(a, candidates(rows(a).getLong(0)), v, norm, rank, k)
       }
@@ -640,14 +630,16 @@ object Similarity {
   }
 
   /** Row `a`'s best `k` of `candidates` (row indices; `a` itself skipped)
-    * by the Spark route's `round(dot(v_a, v_b) / (n_a·n_b), 6)`, in its
-    * `(cos desc, id_b)` order (`rank` orders ids). Rounding is monotone,
-    * so only candidates within 2e-6 of the k-th best unrounded cosine can
-    * reach the top k; only those are rounded and sorted.
+    * by the Spark route's rounded cosine, in its `(cos desc, id_b)` order
+    * ([[cosOrder]]; `rank` orders ids). Rounding is monotone, so only
+    * candidates within 2e-6 of the k-th best unrounded non-null cosine can
+    * reach the top k; only those and the null cosines (which sort last)
+    * are rounded and sorted.
     */
   private def nearest(a: Int, candidates: Array[Int],
                       v: Array[Array[Double]], norm: Array[Double],
-                      rank: Array[Int], k: Int): Array[(Int, Double)] = {
+                      rank: Array[Int],
+                      k: Int): Array[(Int, java.lang.Double)] = {
     val others = candidates.filter(_ != a)
     val raw = others.map { b =>
       val (x, y) = (v(a), v(b))
@@ -655,29 +647,29 @@ object Similarity {
       var d = 0.0
       var i = 0
       while (i < len) { d += x(i) * y(i); i += 1 }
-      d / (norm(a) * norm(b))
+      Cosine.of(d, norm(a), norm(b))
     }
+    val defined = raw.filter(_ != null).map(_.doubleValue)
     val floor =
-      if (raw.length <= k) Double.NegativeInfinity
+      if (defined.length <= k) Double.NegativeInfinity
       else {
-        val s = raw.clone
-        java.util.Arrays.sort(s)
-        s(s.length - k) - 2e-6
+        java.util.Arrays.sort(defined)
+        defined(defined.length - k) - 2e-6
       }
     others.indices.iterator
-      .filter(x => raw(x).isNaN || raw(x) >= floor)
+      .filter(x => raw(x) == null || raw(x).isNaN || raw(x) >= floor)
       .map(x => (others(x), round6(raw(x))))
       .toArray
       .sortWith { case ((b1, c1), (b2, c2)) =>
-        val c = SQLOrderingUtil.compareDoubles(c2, c1)
+        val c = cosOrder(c1, c2)
         if (c != 0) c < 0 else rank(b1) < rank(b2)
       }
       .take(k)
   }
 
   /** Spark's `round(x, 6)` of a double (HALF_UP on its decimal form). */
-  private def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
+  private def round6(x: java.lang.Double): java.lang.Double =
+    if (x == null || x.isNaN || x.isInfinite) x
     else java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 }

@@ -132,23 +132,29 @@ class AnnRouteSpec extends SparkTestBase {
     assert(sorted(capped) != sorted(edgeRows(4096)), "the cap kept every row")
   }
 
-  test("neighbors: repeated ids and a zero vector take the Spark route") {
-    def route(x: DataFrame) = {
-      val mem = Trace.toMemory()
-      try {
-        val out = Similarity.neighborsPerVector(x, k = 5, numPlanes = 4,
-          dim = 8)
-        (out, mem.spans.filter(_.name == "ann.neighbors").map(_.attrs("route")))
-      } finally Trace.disable()
-    }
-    val (repeated, r1) = route(edge(Float.NaN).unionByName(
-      edge(Float.NaN).limit(1)))
-    assert(r1 == Seq("spark") && repeated.count() > 0)
-    // the Spark route divides by a zero norm (DIVIDE_BY_ZERO under ANSI)
-    val (zero, r2) = route(edge(0f))
-    assert(r2 == Seq("spark"))
-    val e = intercept[ArithmeticException](zero.collect())
-    assert(e.getMessage.contains("DIVIDE_BY_ZERO"))
+  test("neighbors: repeated ids take the Spark route, a zero vector the driver") {
+    def op(x: DataFrame) = Similarity.neighborsPerVector(x, k = 5,
+      numPlanes = 4, dim = 8)
+    val (repeated, r1) = routed("ann.neighbors")(op(edge(Float.NaN)
+      .unionByName(edge(Float.NaN).limit(1))))
+    assert(r1.map(_("route")) == Seq("spark") && repeated.nonEmpty)
+    // a zero vector's cosines are null, the same rows on both routes
+    val zero = edge(0f)
+    val (driver, dAttrs) = routed("ann.neighbors")(op(zero))
+    val (viaSpark, sAttrs) = routed("ann.neighbors")(
+      op(zero.unionByName(wideFiller(zero, 4, 8))))
+    assert(dAttrs.map(_("route")) == Seq("driver"))
+    assert(sAttrs.map(_("route")) == Seq("spark"))
+    assert(sorted(own(viaSpark, 2)) == sorted(driver))
+    // vector 0 is the zero vector, in a bucket of three others: it gets
+    // them by id, and each of them gets it last
+    val (ofZero, rest) = driver.partition(r =>
+      r.getInt(0) == 0 || r.getInt(1) == 0)
+    assert(ofZero.size == 6 && ofZero.forall(_.isNullAt(2)))
+    assert(rest.forall(r => !r.isNullAt(2)))
+    assert(ofZero.filter(_.getInt(0) == 0).map(r => (r.getInt(1), r.getInt(3)))
+      == Seq((1, 1), (2, 2), (3, 3)))
+    assert(ofZero.filter(_.getInt(1) == 0).forall(_.getInt(3) == 3))
   }
 
   test("ivfIndex: the driver route equals the Spark route's fit and " +
@@ -219,13 +225,19 @@ class AnnRouteSpec extends SparkTestBase {
       if (name == "NaN vector" && nprobe == 16)
         assert(driver.head.getDouble(1).isNaN)
     }
-    // a zero query divides by zero on the Spark route: it stays there
-    val mem = Trace.toMemory()
-    try {
-      Similarity.ivfTopK(ix, centers, vecs(0).map(_ => 0f), 10, 4)
-      assert(mem.spans.filter(_.name == "ann.ivf_query")
-        .map(_.attrs("route")) == Seq("spark"))
-    } finally Trace.disable()
+    // a zero query's cosines are all null: both routes give the probed
+    // lists' lowest ids
+    val zero = vecs(0).map(_ => 0f)
+    val (driver, d) = routed("ann.ivf_query")(
+      Similarity.ivfTopK(ix, centers, zero, 10, 4))
+    val (viaSpark, s) = routed("ann.ivf_query")(
+      Similarity.ivfTopK(ix.repartition(3), centers, zero, 10, 4))
+    assert(d.map(_("route")) == Seq("driver"))
+    assert(s.map(_("route")) == Seq("spark"))
+    assert(driver.map(_.mkString("|")) == viaSpark.map(_.mkString("|")))
+    assert(driver.size == 10 && driver.forall(_.isNullAt(1)))
+    val ids = driver.map(_.getLong(0))
+    assert(ids == ids.sorted)
   }
 
   test("job counts: a driver-held index answers with no job; the driver " +

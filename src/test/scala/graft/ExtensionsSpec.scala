@@ -48,6 +48,27 @@ class ExtensionsSpec extends AnyFunSuite {
     } finally ()
   }
 
+  test("cosine_sim: a zero norm gives null, as try_divide does, not an error") {
+    val spark = SparkTestBase.spark
+    graft.functions.GraftExtensions.registerAll(spark)
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    // the rule's zero test is try_divide's for doubles: ±0.0 gives null
+    val row = spark.sql("SELECT try_divide(0d, 0d), try_divide(1d, -0d), " +
+      "try_divide(1d, 2d), cosine_sim(array(0d, 0d), array(1d, 2d)), " +
+      "cosine_sim(array(1d, 2d), array(0d, 0d)), " +
+      "cosine_sim(array(0d, 0d), array(0d, 0d)), " +
+      "cosine_sim(array(cast('NaN' as double), 1d), array(1d, 2d))").head()
+    assert(row.isNullAt(0) && row.isNullAt(1) && row.getDouble(2) == 0.5)
+    assert(row.isNullAt(3) && row.isNullAt(4) && row.isNullAt(5))
+    assert(row.getDouble(6).isNaN)
+    // over a table, so the generated code takes the same zero test
+    spark.sql("SELECT * FROM VALUES (array(0d, 0d)), (array(3d, 4d)) AS " +
+      "t(v)").createOrReplaceTempView("cos_vs")
+    val cos = spark.sql("SELECT cosine_sim(v, array(3d, 4d)) FROM cos_vs")
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    assert(cos.toSeq == Seq(None, Some(1.0)))
+  }
+
   test("chunk_stats and decode_chunk refuse an unknown dtype at plan time") {
     val spark = SparkTestBase.spark
     graft.functions.GraftExtensions.registerAll(spark)

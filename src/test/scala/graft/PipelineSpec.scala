@@ -118,6 +118,16 @@ class PipelineSpec extends SparkTestBase {
     Similarity.ivfTopK(ix2, c2, vecs(1L), 10, nprobe = 6).collect()
     assert(compiles == warm, "a rebuilt index or a new probe set recompiled")
     assert(c1.map(_.toSeq).toSeq != c2.map(_.toSeq).toSeq)
+    // the other query operators: a new query (and probe set) compiles
+    // nothing either
+    def others(q: Seq[Float]) = {
+      Similarity.bruteForceTopK(emb, q, 10).collect()
+      Similarity.annTopK(emb, q, 10).collect()
+    }
+    others(vecs(0L))
+    val warmTopK = compiles
+    others(vecs(1L))
+    assert(compiles == warmTopK, "a new top-k query recompiled")
     // probing every list, IVF ranks exactly like brute force (same cos)
     assert(Similarity.ivfTopK(ix2, c2, vecs(1L), 10, nprobe = 16).collect()
       .toSeq == Similarity.bruteForceTopK(emb, vecs(1L), 10).collect().toSeq)
@@ -133,6 +143,49 @@ class PipelineSpec extends SparkTestBase {
         }
         assert(list == d.indices.minBy(i => (d(i), i)), s"vec $id")
       }
+    }
+  }
+
+  test("top-k: a zero vector ranks last, a zero query gives null cosines " +
+      "by id") {
+    import spark.implicits._
+    val rng = new scala.util.Random(5)
+    val vecs = (0 until 6).map(i =>
+      if (i == 2) Seq.fill(8)(0f) else Seq.fill(8)(rng.nextGaussian().toFloat))
+    val emb = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+    Seq[(Seq[Float], Int) => org.apache.spark.sql.DataFrame](
+      Similarity.bruteForceTopK(emb, _, _),
+      Similarity.annTopK(emb, _, _, numPlanes = 4)).foreach { op =>
+      val all = rows(op(vecs(0), 6))
+      assert(all.size == 6 && all.last == (2L, None))
+      assert(all.init.forall(_._2.isDefined))
+      assert(rows(op(vecs(2), 3)) == Seq((0L, None), (1L, None), (2L, None)))
+    }
+  }
+
+  test("embedding near-dups: a zero vector pairs with nothing, in every " +
+      "mode") {
+    import spark.implicits._
+    val rng = new scala.util.Random(9)
+    val bases = Seq.fill(4)(Seq.fill(8)(rng.nextGaussian()))
+    val vecs = Seq.fill(8)(0f) +: (0 until 16).map(i =>
+      bases(i % 4).map(x => (x + 0.01 * rng.nextGaussian()).toFloat))
+    val emb = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    val pairs = Dedup.embeddingNearDups(emb, threshold = 0.9, numBlocks = 4)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+    // each base's four near copies pair up, the zero vector with nothing
+    assert(pairs.toSet == (1L to 16L).combinations(2).collect {
+      case Seq(a, b) if (a - b) % 4 == 0 => (a, b) }.toSet)
+    Seq(0, 2).foreach { centroids =>
+      val groups = Dedup.semanticDedup(emb, threshold = 0.9,
+          numCentroids = centroids, numBlocks = 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(groups(0L) == 0L, s"centroids $centroids")
+      assert(groups.count(g => g._1 == g._2) == 5, s"centroids $centroids")
     }
   }
 

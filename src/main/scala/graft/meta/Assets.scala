@@ -44,6 +44,16 @@ object Layout {
   def manifestPrefix(id: String): String = s"manifests/$id"
   def txLogPrefix(id: String): String = s"transactions/$id"
   def chunkKey(id: String): String = s"chunks/$id"
+  /** The one chunk publish rule: a chunk object is written once under a
+    * fresh id and only ever referenced afterwards (manifests, staged
+    * refs), never overwritten. Returns the id. Every chunk upload, on the
+    * driver or in a task, goes through here.
+    */
+  def publishChunk(store: Store, bytes: Array[Byte]): String = {
+    val id = Ids.toBase32(Ids.newObjectId())
+    store.putBytes(chunkKey(id), bytes)
+    id
+  }
   def stagingPrefix(token: String): String = s"staging/$token"
 }
 
@@ -887,11 +897,8 @@ final class AssetManager(val store: Store, spark: SparkSession) {
     store.list(Layout.txLogPrefix(snapshotId)).nonEmpty
 
   // ---- chunk blobs ----
-  def writeChunk(bytes: Array[Byte]): String = {
-    val id = Ids.toBase32(Ids.newObjectId())
-    store.putBytes(Layout.chunkKey(id), bytes)
-    id
-  }
+  def writeChunk(bytes: Array[Byte]): String =
+    Layout.publishChunk(store, bytes)
 
   /** Ranged chunk read — a 4 KB slice of a 128 MB chunk is one ranged GET,
     * not a whole-object fetch (get_object_range, storage.rs:196-206).

@@ -239,60 +239,30 @@ object ZarrImport {
               col("offset"), col("length"))
           else if (copy && a.shard.isDefined) {
             val srcConf = src.conf
-            val dstConf = repo.store.conf
-            val copied = innerKeyed
-              .select(col("coord"), col("key"), col("offset"),
-                col("length"))
-              .as[(Seq[Int], String, Long, Long)].mapPartitions { it =>
-                val s = graft.storage.StoreConf.cached(srcConf)
-                val d = graft.storage.StoreConf.cached(dstConf)
-                it.map { case (coord, key, off, len) =>
-                  val bytes = s.getRange(key, off, len)
-                  val id = graft.core.Ids.toBase32(
-                    graft.core.Ids.newObjectId())
-                  d.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-                  (coord, id, bytes.length.toLong)
-                }
-              }.toDF("coord", "chunk_id", "length")
-              .select(col("coord"), lit("ref").as("kind"),
-                col("chunk_id"), lit(0L).as("offset"), col("length"))
-            val stagingKey = graft.meta.Layout.stagingPrefix(
-              graft.core.Ids.toBase32(graft.core.Ids.newObjectId()))
-            copied.write.parquet(repo.store.uri(stagingKey))
-            session.trackStaging(stagingKey)
-            spark.read.parquet(repo.store.uri(stagingKey))
+            session.stageUploads(graft.tensor.TensorPlane.uploadChunks(
+              innerKeyed.select(col("coord"), col("key"), col("offset"),
+                col("length")).as[(Seq[Int], String, Long, Long)],
+              repo.store.conf)(_.map { case (coord, key, off, len) =>
+                (coord, graft.storage.StoreConf.cached(srcConf)
+                  .getRange(key, off, len))
+              }))
           }
           else if (!copy)
             keyed.select(col("coord"), lit("virtual").as("kind"),
               concat(lit(srcRoot + "/"), col("key")).as("location"),
               lit(0L).as("offset"), col("size").as("length"))
           else {
+            // the upload job is side-effecting: stageUploads runs it
+            // EXACTLY once and changeset actions (commit's node-id scan,
+            // flush, CAS retries) replay the staged rows. Without this
+            // every re-evaluation re-uploaded the whole store under fresh
+            // ids.
             val srcConf = src.conf
-            val dstConf = repo.store.conf
-            val copied = keyed.select(col("coord"), col("key"))
-              .as[(Seq[Int], String)].mapPartitions { it =>
-                val s = graft.storage.StoreConf.cached(srcConf)
-                val d = graft.storage.StoreConf.cached(dstConf)
-                it.map { case (coord, key) =>
-                  val bytes = s.getBytes(key)
-                  val id = graft.core.Ids.toBase32(
-                    graft.core.Ids.newObjectId())
-                  d.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-                  (coord, id, bytes.length.toLong)
-                }
-              }.toDF("coord", "chunk_id", "length")
-              .select(col("coord"), lit("ref").as("kind"),
-                col("chunk_id"), lit(0L).as("offset"), col("length"))
-            // the upload job is side-effecting: run it EXACTLY once and
-            // let changeset actions (commit's node-id scan, flush, CAS
-            // retries) replay from the staging Parquet — the same
-            // contract as writeValues/rechunk. Without this every
-            // re-evaluation re-uploaded the whole store under fresh ids.
-            val stagingKey = graft.meta.Layout.stagingPrefix(
-              graft.core.Ids.toBase32(graft.core.Ids.newObjectId()))
-            copied.write.parquet(repo.store.uri(stagingKey))
-            session.trackStaging(stagingKey)
-            spark.read.parquet(repo.store.uri(stagingKey))
+            session.stageUploads(graft.tensor.TensorPlane.uploadChunks(
+              keyed.select(col("coord"), col("key")).as[(Seq[Int], String)],
+              repo.store.conf)(_.map { case (coord, key) =>
+                (coord, graft.storage.StoreConf.cached(srcConf).getBytes(key))
+              }))
           }
         session.stageChunkRefs(a.path, refs)
       }

@@ -103,9 +103,11 @@ final class ChangeSet {
     */
   def addExclusion(df: DataFrame): Unit = { exclusions += df; touched() }
 
-  /** The resolved chunk edits as driver rows when they fit `maxRows`
-    * (None = too large — use [[chunkChanges]]). Memoized until the next
-    * mutation; point-only changesets answer from memory with no job.
+  /** The resolved chunk edits as driver rows when they fit
+    * [[Session.SmallCommitMaxRefs]] (None = too large — use
+    * [[chunkChanges]]). Memoized until the next mutation, and the flush
+    * seeds the same memo under the same bound; point-only changesets
+    * answer from memory with no job.
     *
     * r17: resolves from the RAW (window-free) relation and applies the
     * last-write-wins precedence driver-side — a small changeset's
@@ -115,13 +117,13 @@ final class ChangeSet {
     * bound post-dedup routes to the Spark path instead — a routing
     * change only, never a semantic one.
     */
-  def resolvedDriver(spark: SparkSession,
-                     maxRows: Int = 10000): Option[Seq[ChunkRef]] = {
+  def resolvedDriver(spark: SparkSession): Option[Seq[ChunkRef]] = {
     if (pointOnly) return Some(resolvedPointEdits)
     resolvedMemo match {
       case Some((s, v)) if s == stamp => v
       case _ =>
-        val v = ChangeSet.collectRawHead(chunkChangesRaw(spark), maxRows)
+        val v = ChangeSet.collectRawHead(chunkChangesRaw(spark),
+          Session.SmallCommitMaxRefs)
         resolvedMemo = Some((stamp, v))
         v
     }

@@ -55,6 +55,21 @@ final class Session private[repo] (
     stagingKeys += key
     putLease(key)
   }
+  /** The one staging replay for chunk-upload jobs: `uploads` carries
+    * `(coord, chunk_id, length)` rows from a side-effecting upload job.
+    * It runs exactly once, into a Parquet under `staging/`; the returned
+    * refs (`kind = ref`, `offset = 0`) read that Parquet back, so every
+    * changeset action (flush, tx log, rebase retries) replays the
+    * recorded rows instead of uploading again under fresh ids.
+    */
+  private[graft] def stageUploads(uploads: DataFrame): DataFrame = {
+    val key = Layout.stagingPrefix(Ids.toBase32(Ids.newObjectId()))
+    uploads.write.parquet(repo.store.uri(key))
+    trackStaging(key)
+    spark.read.parquet(repo.store.uri(key))
+      .withColumn("kind", lit(ChunkRef.KindRef))
+      .withColumn("offset", lit(0L))
+  }
   private def putLease(key: String): Unit =
     try repo.store.putBytes(key.stripSuffix("/") + "/.lease",
       s"""{"held_at":"${java.time.Instant.now()}"}""".getBytes("UTF-8"))

@@ -14,6 +14,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import graft.repo.{Repository, VersionRef}
 import graft.storage.Store
+import graft.tensor.TensorPlane.{paddedDoubles, paddedLongs}
 
 /** `spark.readStream.format("graft-cell-changes")` — CELL-level CDC as a
   * Structured Streaming SOURCE: each micro-batch carries exactly the
@@ -208,8 +209,8 @@ class GraftCellChangesStream(opts: Map[String, String], schema: StructType)
   */
 class CellChangesPartitionReader(part: CellChangesPartition)
     extends PartitionReader[InternalRow] {
-  private val C = graft.functions.ChunkCodec
-  private val intMath = C.IntDtypes.contains(part.dtype)
+  private val intMath =
+    graft.functions.ChunkCodec.IntDtypes.contains(part.dtype)
   private val cells = part.chunkShape.product.toInt
   private val strides = part.chunkShape.indices.map(i =>
     part.chunkShape.drop(i + 1).product)
@@ -221,21 +222,6 @@ class CellChangesPartitionReader(part: CellChangesPartition)
     if (kind.isEmpty) null
     else graft.tensor.TensorPlane.fetchRef(part.conf, part.resolver,
       kind, inline, id, loc, off, len, cacheable = false)
-
-  private def longsOf(raw: Array[Byte]): Array[Long] =
-    if (raw == null) new Array[Long](cells)
-    else {
-      val v = C.decodeLongs(C.decompress(raw, part.compression), part.dtype)
-      if (v.length >= cells) v else java.util.Arrays.copyOf(v, cells)
-    }
-  private def doublesOf(raw: Array[Byte]): Array[Double] =
-    if (raw == null) new Array[Double](cells)
-    else {
-      val d = C.decompress(raw, part.compression)
-      val v = if (intMath) C.decodeLongs(d, part.dtype).map(_.toDouble)
-        else C.decodeDoubles(d, part.dtype)
-      if (v.length >= cells) v else java.util.Arrays.copyOf(v, cells)
-    }
 
   private def rowsOf(pair: (Seq[Int], String, Array[Byte], String, String,
       Long, Long, String, Array[Byte], String, String, Long,
@@ -265,12 +251,14 @@ class CellChangesPartitionReader(part: CellChangesPartition)
       }
     }
     if (intMath) {
-      val o = longsOf(oRaw); val n = longsOf(nRaw)
+      val o = paddedLongs(oRaw, cells, part.dtype, part.compression)
+      val n = paddedLongs(nRaw, cells, part.dtype, part.compression)
       (0 until cells).iterator.flatMap { p =>
         if (o(p) == n(p)) None else emit(p, o(p), n(p))
       }
     } else {
-      val o = doublesOf(oRaw); val n = doublesOf(nRaw)
+      val o = paddedDoubles(oRaw, cells, part.dtype, part.compression)
+      val n = paddedDoubles(nRaw, cells, part.dtype, part.compression)
       (0 until cells).iterator.flatMap { p =>
         // NaN-safe: NaN == NaN counts as unchanged (valueDiff's <=>)
         if (java.lang.Double.compare(o(p), n(p)) == 0) None

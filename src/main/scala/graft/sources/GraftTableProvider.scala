@@ -2065,22 +2065,19 @@ class GraftValuesBatchWrite(opts: Map[String, String], schema: StructType,
           .toDF("_1", "_2", "_3")
         val comp = compression
         val dt = dtype
-        val out =
+        import graft.tensor.TensorPlane.{streamEncode, uploadChunks}
+        Some(
           if (isInt)
-            left.as[(Seq[Int], Long, Long)].mapPartitions { it =>
-              graft.tensor.TensorPlane.streamEncode[Long](it,
+            uploadChunks(left.as[(Seq[Int], Long, Long)], conf)(
+              streamEncode[Seq[Int], Long](_, identity,
                 _ => new Array[Long](cells), (a, p, v) => a(p) = v,
-                a => ChunkCodec.compress(ChunkCodec.encodeLongs(a, dt), comp),
-                conf)
-            }
+                a => ChunkCodec.compress(ChunkCodec.encodeLongs(a, dt), comp)))
           else
-            left.as[(Seq[Int], Long, Double)].mapPartitions { it =>
-              graft.tensor.TensorPlane.streamEncode[Double](it,
+            uploadChunks(left.as[(Seq[Int], Long, Double)], conf)(
+              streamEncode[Seq[Int], Double](_, identity,
                 _ => new Array[Double](cells), (a, p, v) => a(p) = v,
-                a => ChunkCodec.compress(ChunkCodec.encodeDoubles(a, dt), comp),
-                conf)
-            }
-        Some(out.toDF("coord", "chunk_id", "length"))
+                a => ChunkCodec.compress(ChunkCodec.encodeDoubles(a, dt),
+                  comp))))
       }
     val directRefs =
       if (refKeys.isEmpty) None
@@ -2344,8 +2341,7 @@ class GraftValuesDataWriter(storeConf: StoreConf, stagingRoot: String,
         val encoded = ChunkCodec.compress(
           if (isInt) ChunkCodec.encodeLongs(oc.bufL, dtype)
           else ChunkCodec.encodeDoubles(oc.bufD, dtype), compression)
-        val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-        store.putBytes(graft.meta.Layout.chunkKey(id), encoded)
+        val id = graft.meta.Layout.publishChunk(store, encoded)
         refWriter.write(new GenericInternalRow(Array[Any](
           coordArr, UTF8String.fromString(id), encoded.length.toLong)))
         refRows += 1

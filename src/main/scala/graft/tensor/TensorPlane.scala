@@ -1,6 +1,6 @@
 package graft.tensor
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
   StructType}
@@ -74,6 +74,73 @@ object TensorPlane {
         resolver.ranged(location, offset, length)
       case _ => null
     }
+
+  /** The one padded decode of a stored chunk: decompress, decode to longs
+    * (or to doubles, int dtypes widening), zero-pad a short buffer to
+    * `cells`, and read an absent chunk (`raw == null`, e.g. [[fetchRef]]
+    * of an empty kind) as `cells` zeros — zarr's fill value 0. Regular
+    * grids store edge chunks at the full chunk volume, so `cells` is the
+    * volume the caller's geometry walks; `cells = 0` keeps the stored
+    * length (no pad).
+    */
+  private[graft] def paddedLongs(raw: Array[Byte], cells: Int,
+      dtype: String, compression: String): Array[Long] =
+    if (raw == null) new Array[Long](cells)
+    else {
+      val v = ChunkCodec.decodeLongs(
+        ChunkCodec.decompress(raw, compression), dtype)
+      if (v.length >= cells) v else java.util.Arrays.copyOf(v, cells)
+    }
+
+  private[graft] def paddedDoubles(raw: Array[Byte], cells: Int,
+      dtype: String, compression: String): Array[Double] =
+    if (raw == null) new Array[Double](cells)
+    else {
+      val d = ChunkCodec.decompress(raw, compression)
+      val v =
+        if (ChunkCodec.IntDtypes.contains(dtype))
+          ChunkCodec.decodeLongs(d, dtype).map(_.toDouble)
+        else ChunkCodec.decodeDoubles(d, dtype)
+      if (v.length >= cells) v else java.util.Arrays.copyOf(v, cells)
+    }
+
+  /** The one per-chunk upload kernel of the value plane: each partition
+    * of `rows` runs `f` to `(coord, bytes)` chunks, each chunk is
+    * published through the task's cached store client
+    * ([[graft.meta.Layout.publishChunk]]), and the result is the
+    * `(coord, chunk_id, length)` upload frame that
+    * [[Session.stageUploads]] replays. It adds no exchange: `rows`
+    * arrives partitioned the way the op needs.
+    */
+  private[graft] def uploadChunks[T](rows: Dataset[T],
+      conf: graft.storage.StoreConf)(
+      f: Iterator[T] => Iterator[(Seq[Int], Array[Byte])]): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.mapPartitions { it =>
+      val store = graft.storage.StoreConf.cached(conf)
+      f(it).map { case (coord, bytes) =>
+        (coord, graft.meta.Layout.publishChunk(store, bytes),
+          bytes.length.toLong)
+      }
+    }.toDF("coord", "chunk_id", "length")
+  }
+
+  private type RefRow =
+    (Seq[Int], String, Array[Byte], String, String, Long, Long)
+  /** A rechunk fragment: (dst coord, src coord, src ref fields...). */
+  private type Frag =
+    (Seq[Int], Seq[Int], String, Array[Byte], String, String, Long, Long)
+
+  /** A ref relation as the typed rows the per-chunk kernels map:
+    * (coord, kind, inline, chunk_id, location, offset, length).
+    */
+  private def refRows(refs: DataFrame): Dataset[RefRow] = {
+    val spark = refs.sparkSession
+    import spark.implicits._
+    refs.select(Seq("coord", "kind", "inline", "chunk_id", "location",
+      "offset", "length").map(col): _*).as[RefRow]
+  }
 
   /** Chunk-ref rows with a materialized `bytes` column. */
   def chunkBytes(session: Session, path: String): DataFrame = {
@@ -538,14 +605,15 @@ object TensorPlane {
     *     moves (coord, pos, value) triples, never materialized chunk
     *     buffers (a 128 MB chunk would be 16 M structs through ONE
     *     aggregation buffer under a collect_list plan);
-    *  3. `mapPartitions` streams the sorted run, holding exactly one
-    *     chunk array at a time: fill → encode → compress → upload through
-    *     the per-executor store client;
-    *  4. the resulting refs are '''materialized once''' to a staging
-    *     Parquet dataset under the store, then staged on the session —
-    *     re-evaluating the changeset (flush, tx log, rebase retries)
-    *     re-reads the staging files instead of re-running the upload job
-    *     (no duplicate chunk objects, no write amplification).
+    *  3. [[streamEncode]] streams the sorted run, holding exactly one
+    *     chunk array at a time: fill → encode → compress, and
+    *     [[uploadChunks]] uploads each chunk through the per-executor
+    *     store client;
+    *  4. the upload frame goes through [[Session.stageUploads]]: it runs
+    *     '''once''' into a staging Parquet, and re-evaluating the
+    *     changeset (flush, tx log, rebase retries) re-reads those rows
+    *     instead of re-running the upload job (no duplicate chunk
+    *     objects, no write amplification).
     *
     * Staging files are deleted on commit/discard ([[Session]]) and swept
     * by GC if a session dies (ops/Maintenance).
@@ -633,7 +701,7 @@ object TensorPlane {
     * cells wholly inside one partition — writeValues' repartition, or a
     * producer-side exchange the aggregation reused, e.g. [[downsample]]).
     * Sorts within partitions, streams one chunk buffer at a time, stages
-    * the refs via the replayable staging Parquet.
+    * the refs through [[Session.stageUploads]].
     */
   private def encodeStageOrd(session: Session, path: String,
       keyed: DataFrame, grid: Array[Long], allocCells: Seq[Int] => Int,
@@ -648,26 +716,26 @@ object TensorPlane {
       .sortWithinPartitions("_cl", "pos")
       // tuple encoders resolve by field name, not position
       .toDF("_1", "_2", "_3")
+    // row-major linear chunk index -> coord, once per CHUNK
+    val strides = grid.indices.map(i => grid.drop(i + 1).product).toArray
+    val coordOf: Long => Seq[Int] = cl =>
+      strides.indices.map(i => ((cl / strides(i)) % grid(i)).toInt)
     val refsDf =
-      (if (isInt)
-        sorted.as[(Long, Long, Long)].mapPartitions { it =>
-          streamEncodeOrd[Long](it, grid,
+      if (isInt)
+        uploadChunks(sorted.as[(Long, Long, Long)], conf)(
+          streamEncode[Long, Long](_, coordOf,
             c => new Array[Long](allocCells(c)),
             (arr, p, v) => arr(p) = v,
             arr => ChunkCodec.compress(
-              ChunkCodec.encodeLongs(arr, dtype), compression), conf)
-        }
+              ChunkCodec.encodeLongs(arr, dtype), compression)))
       else
-        sorted.as[(Long, Long, Double)].mapPartitions { it =>
-          streamEncodeOrd[Double](it, grid,
+        uploadChunks(sorted.as[(Long, Long, Double)], conf)(
+          streamEncode[Long, Double](_, coordOf,
             c => new Array[Double](allocCells(c)),
             (arr, p, v) => arr(p) = v,
             arr => ChunkCodec.compress(
-              ChunkCodec.encodeDoubles(arr, dtype), compression), conf)
-        }).toDF("coord", "chunk_id", "length")
-    // run the upload job exactly once; changeset actions replay from the
-    // staging Parquet, not from the side-effecting job
-    stageViaParquet(session, path, refsDf)
+              ChunkCodec.encodeDoubles(arr, dtype), compression)))
+    session.stageChunkRefs(path, session.stageUploads(refsDf))
   }
 
   /** Fixed-width value histogram with the counting pushed into the chunk
@@ -879,9 +947,9 @@ object TensorPlane {
     * permuted, every destination chunk is exactly ONE source chunk with
     * its buffer re-strided — no fragment relation and NO SHUFFLE at all:
     * the job is a pure map over the ref relation (fetch → re-stride →
-    * encode → upload from the executor), and the refs land through the
-    * same replayable staging-Parquet contract as [[rechunk]] (flush and
-    * rebase retries replay the staged rows; the copy job runs once).
+    * encode → upload from the executor), and the refs land through
+    * [[Session.stageUploads]] (flush and rebase retries replay the staged
+    * rows; the copy job runs once).
     * At 100 TB this moves each payload byte exactly once, through no
     * exchange. The identity permutation stages the SOURCE refs verbatim
     * — a zero-copy alias (chunk objects shared, GC-safe because both
@@ -921,7 +989,6 @@ object TensorPlane {
       return
     }
     val spark = session.repo.spark
-    import spark.implicits._
     val conf = session.repo.store.conf
     val resolver = session.repo.virtualResolver
     val cs = node.chunkShape.toArray
@@ -930,52 +997,37 @@ object TensorPlane {
       else node.chunkSizesPerDim.map(_.map(_.toInt).toArray).toArray
     val permA = perm.toArray
     val isInt = ChunkCodec.IntDtypes.contains(dtype)
-    val rows = session.refs(srcPath)
-      // a manifest is a handful of Parquet files — spread the per-chunk
-      // decode/re-stride/upload work across the cluster before the map
-      .repartition(spark.sparkContext.defaultParallelism * 2, col("coord"))
-      .select(col("coord"), col("kind"), col("inline"), col("chunk_id"),
-        col("location"), col("offset"), col("length"))
-      .as[(Seq[Int], String, Array[Byte], String, String, Long, Long)]
-    val refsDf = rows.mapPartitions { it =>
-      val store = graft.storage.StoreConf.cached(conf)
-      // storage convention: regular-grid buffers are row-major over the
-      // FULL chunk shape (short edge buffers pad; readers filter cells
-      // beyond the array bounds) — so the re-stride always runs on the
-      // full chunk extents, and a padded source cell lands at a
-      // destination position that is out of bounds there too.
-      // Rectilinear buffers are exact-extent: extents come from the
-      // per-dim chunk-length tables at this chunk's coord, no padding.
-      it.map { case (coord, kind, inline, chunkId, location, off, len) =>
+    // a manifest is a handful of Parquet files — spread the per-chunk
+    // decode/re-stride/upload work across the cluster before the map
+    val rows = refRows(session.refs(srcPath).repartition(
+      spark.sparkContext.defaultParallelism * 2, col("coord")))
+    // storage convention: regular-grid buffers are row-major over the
+    // FULL chunk shape (short edge buffers pad; readers filter cells
+    // beyond the array bounds) — so the re-stride always runs on the
+    // full chunk extents, and a padded source cell lands at a
+    // destination position that is out of bounds there too.
+    // Rectilinear buffers are exact-extent: extents come from the
+    // per-dim chunk-length tables at this chunk's coord, no padding.
+    val refsDf = uploadChunks(rows, conf)(_.map {
+      case (coord, kind, inline, chunkId, location, off, len) =>
         val srcExt =
           if (rectSizes == null) cs.map(_.toInt)
           else Array.tabulate(coord.size)(d => rectSizes(d)(coord(d)))
         val cells = srcExt.map(_.toLong).product.toInt
-        val raw = ChunkCodec.decompress(
-          fetchRef(conf, resolver, kind, inline, chunkId, location, off,
-            len, cacheable = false), compression)
+        val raw = fetchRef(conf, resolver, kind, inline, chunkId, location,
+          off, len, cacheable = false)
         val bytes =
-          if (isInt) {
-            val src = ChunkCodec.decodeLongs(raw, dtype)
-            val padded = if (src.length >= cells) src
-              else java.util.Arrays.copyOf(src, cells)
-            ChunkCodec.compress(ChunkCodec.encodeLongs(
-              permuteLongs(padded, srcExt, permA), dtype), compression)
-          } else {
-            val src = ChunkCodec.decodeDoubles(raw, dtype)
-            val padded = if (src.length >= cells) src
-              else java.util.Arrays.copyOf(src, cells)
-            ChunkCodec.compress(ChunkCodec.encodeDoubles(
-              permuteDoubles(padded, srcExt, permA), dtype), compression)
-          }
-        val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-        store.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-        (permA.toSeq.map(coord(_)), id, bytes.length.toLong)
-      }
-    }.toDF("coord", "chunk_id", "length")
-    // run the copy job exactly once; changeset actions replay from the
-    // staging Parquet (flush, tx log, rebase retries)
-    stageViaParquet(session, dstPath, refsDf)
+          if (isInt)
+            ChunkCodec.compress(ChunkCodec.encodeLongs(permuteLongs(
+              paddedLongs(raw, cells, dtype, compression), srcExt, permA),
+              dtype), compression)
+          else
+            ChunkCodec.compress(ChunkCodec.encodeDoubles(permuteDoubles(
+              paddedDoubles(raw, cells, dtype, compression), srcExt, permA),
+              dtype), compression)
+        (permA.toSeq.map(coord(_)), bytes)
+    })
+    session.stageChunkRefs(dstPath, session.stageUploads(refsDf))
   }
 
   /** Elementwise algebra between two SAME-GRID arrays into a new array —
@@ -990,9 +1042,8 @@ object TensorPlane {
     * once and shuffles only metadata. A chunk absent on one side reads
     * as fill (0), matching zarr missing-chunk semantics; chunks absent
     * on BOTH sides stay absent (sparse stays sparse). Refs land through
-    * the same replayable staging-Parquet contract as [[rechunk]] /
-    * [[transpose]] (rebase retries replay staged rows; the copy job runs
-    * once).
+    * [[Session.stageUploads]] (rebase retries replay staged rows; the
+    * copy job runs once).
     *
     * `op`: add | sub | mul | div | min | max. Integer dtypes compute in
     * long arithmetic except `div`, which always lands float64 (integer
@@ -1077,53 +1128,28 @@ object TensorPlane {
       coalesce(col(s"$tag.location"), lit("")).as(s"${tag}_loc"),
       coalesce(col(s"$tag.offset"), lit(0L)).as(s"${tag}_off"),
       coalesce(col(s"$tag.length"), lit(0L)).as(s"${tag}_len"))
+    // per-element dispatch on an int tag, not the op STRING (a string
+    // equality per cell was ~6 compares × 134M cells on the 1 GiB
+    // combine — guide §1.2 step 2: per-task work after plan shape)
+    val opId = op match {
+      case "add" => 0; case "sub" => 1; case "mul" => 2; case "div" => 3
+      case "min" => 4; case "max" => 5
+    }
     val rows = side(session, pathA, "a")
       .join(side(sB, pathB, "b"), Seq("coord"), "full_outer")
       .repartition(spark.sparkContext.defaultParallelism * 2, col("coord"))
       .select(col("coord") +: (flat("a") ++ flat("b")): _*)
       .as[(Seq[Int], String, Array[Byte], String, String, Long, Long,
            String, Array[Byte], String, String, Long, Long)]
-    val refsDf = rows.mapPartitions { it =>
-      val store = graft.storage.StoreConf.cached(confA)
-      // decode one side into a full-chunk-volume buffer; absent → fill 0
-      def longsOf(cells: Int, kind: String, inline: Array[Byte],
-                  id: String,
-                  loc: String, off: Long, len: Long,
-                  conf: graft.storage.StoreConf,
-                  res: graft.virt.VirtualChunkResolver): Array[Long] =
-        if (kind.isEmpty) new Array[Long](cells)
-        else {
-          val v = ChunkCodec.decodeLongs(ChunkCodec.decompress(
-            fetchRef(conf, res, kind, inline, id, loc, off, len,
-              cacheable = false), compression), dtype)
-          if (v.length >= cells) v else java.util.Arrays.copyOf(v, cells)
-        }
-      def doublesOf(cells: Int, kind: String, inline: Array[Byte],
-                    id: String,
-                    loc: String, off: Long, len: Long,
-                    conf: graft.storage.StoreConf,
-                    res: graft.virt.VirtualChunkResolver): Array[Double] =
-        if (kind.isEmpty) new Array[Double](cells)
-        else {
-          val raw = ChunkCodec.decompress(
-            fetchRef(conf, res, kind, inline, id, loc, off, len,
-              cacheable = false), compression)
-          val v =
-            if (ChunkCodec.IntDtypes.contains(dtype))
-              ChunkCodec.decodeLongs(raw, dtype).map(_.toDouble)
-            else ChunkCodec.decodeDoubles(raw, dtype)
-          if (v.length >= cells) v else java.util.Arrays.copyOf(v, cells)
-        }
-      // per-element dispatch on an int tag, not the op STRING (a string
-      // equality per cell was ~6 compares × 134M cells on the 1 GiB
-      // combine — guide §1.2 step 2: per-task work after plan shape)
-      val opId = op match {
-        case "add" => 0; case "sub" => 1; case "mul" => 2; case "div" => 3
-        case "min" => 4; case "max" => 5
-      }
-      it.map { case (coord, ak, ai, aid, aloc, aoff, alen,
-                     bk, bi, bid, bloc, boff, blen) =>
+    val refsDf = uploadChunks(rows, confA)(_.map {
+      case (coord, ak, ai, aid, aloc, aoff, alen,
+            bk, bi, bid, bloc, boff, blen) =>
         val cells = cellsOf(coord)
+        // an absent side (empty kind) fetches null and decodes as fill 0
+        def rawA = fetchRef(confA, resolverA, ak, ai, aid, aloc, aoff, alen,
+          cacheable = false)
+        def rawB = fetchRef(confB, resolverB, bk, bi, bid, bloc, boff, blen,
+          cacheable = false)
         // a ⊕ a / aliased chunks (concat/identity-transpose share chunk
         // objects): both sides resolve to the SAME stored bytes — fetch
         // and decode once, combine the buffer with itself
@@ -1132,11 +1158,9 @@ object TensorPlane {
           java.util.Arrays.equals(ai, bi)
         val bytes =
           if (intMath) {
-            val a = longsOf(cells, ak, ai, aid, aloc, aoff, alen, confA,
-              resolverA)
+            val a = paddedLongs(rawA, cells, dtype, compression)
             val b = if (sharedRef) a
-              else longsOf(cells, bk, bi, bid, bloc, boff, blen, confB,
-                resolverB)
+              else paddedLongs(rawB, cells, dtype, compression)
             val out = new Array[Long](cells)
             var i = 0
             while (i < cells) {
@@ -1152,11 +1176,9 @@ object TensorPlane {
             ChunkCodec.compress(ChunkCodec.encodeLongs(out, outDtype),
               compression)
           } else {
-            val a = doublesOf(cells, ak, ai, aid, aloc, aoff, alen, confA,
-              resolverA)
+            val a = paddedDoubles(rawA, cells, dtype, compression)
             val b = if (sharedRef) a
-              else doublesOf(cells, bk, bi, bid, bloc, boff, blen, confB,
-                resolverB)
+              else paddedDoubles(rawB, cells, dtype, compression)
             val out = new Array[Double](cells)
             var i = 0
             while (i < cells) {
@@ -1173,19 +1195,9 @@ object TensorPlane {
             ChunkCodec.compress(ChunkCodec.encodeDoubles(out, outDtype),
               compression)
           }
-        val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-        store.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-        (coord, id, bytes.length.toLong)
-      }
-    }.toDF("coord", "chunk_id", "length")
-    val stagingKey = graft.meta.Layout.stagingPrefix(
-      graft.core.Ids.toBase32(graft.core.Ids.newObjectId()))
-    refsDf.write.parquet(session.repo.store.uri(stagingKey))
-    val refs = spark.read.parquet(session.repo.store.uri(stagingKey))
-      .withColumn("kind", lit(ChunkRef.KindRef))
-      .withColumn("offset", lit(0L))
-    session.trackStaging(stagingKey)
-    session.stageChunkRefs(dstPath, refs)
+        (coord, bytes)
+    })
+    session.stageChunkRefs(dstPath, session.stageUploads(refsDf))
   }
 
   /** Affine transform of one array into a new array:
@@ -1227,8 +1239,8 @@ object TensorPlane {
         graft.repo.GraftError.InvalidConfig)
     val sL = scale.toLong
     val oL = offset.toLong
-    val refsDf = transformChunkRefs(session, srcPath, dtype, outDtype,
-      intMath, compression)(
+    stageTransformed(session, srcPath, dstPath, node, dtype, outDtype,
+      intMath, offset, compression)(
       fLong = v => {
         var i = 0
         while (i < v.length) { v(i) = v(i) * sL + oL; i += 1 }
@@ -1239,58 +1251,6 @@ object TensorPlane {
         while (i < v.length) { v(i) = v(i) * scale + offset; i += 1 }
         v
       })
-    stageTransformedRefs(session, srcPath, dstPath, node, refsDf,
-      fillOut = offset, intMath = intMath, outDtype = outDtype,
-      compression = compression)
-  }
-
-  /** The shared per-chunk transform scaffolding of [[mapValues]] and
-    * [[mapUnary]]: fetch/decompress/decode each ref's payload, run ONE
-    * kernel (`fLong` when intMath, else `fDouble`; kernels are selected
-    * once, not per cell), re-encode/compress/upload, and return the
-    * (coord, chunk_id, length) relation for [[stageTransformedRefs]].
-    */
-  private def transformChunkRefs(session: Session, srcPath: String,
-      dtype: String, outDtype: String, intMath: Boolean,
-      compression: String)(
-      fLong: Array[Long] => Array[Long],
-      fDouble: Array[Double] => Array[Double])
-      : org.apache.spark.sql.DataFrame = {
-    val spark = session.repo.spark
-    import spark.implicits._
-    val conf = session.repo.store.conf
-    val resolver = session.repo.virtualResolver
-    val isIntSrc = ChunkCodec.IntDtypes.contains(dtype)
-    session.refs(srcPath)
-      .repartition(spark.sparkContext.defaultParallelism * 2, col("coord"))
-      .select(col("coord"), col("kind"), col("inline"), col("chunk_id"),
-        col("location"), col("offset"), col("length"))
-      .as[(Seq[Int], String, Array[Byte], String, String, Long, Long)]
-      .mapPartitions { it =>
-        val store = graft.storage.StoreConf.cached(conf)
-        it.map { case (coord, kind, inline, chunkId, location, off, len) =>
-          val raw = ChunkCodec.decompress(
-            fetchRef(conf, resolver, kind, inline, chunkId, location,
-              off, len, cacheable = false), compression)
-          val bytes =
-            if (intMath)
-              ChunkCodec.compress(ChunkCodec.encodeLongs(
-                fLong(ChunkCodec.decodeLongs(raw, dtype)), outDtype),
-                compression)
-            else {
-              val v =
-                if (isIntSrc)
-                  ChunkCodec.decodeLongs(raw, dtype).map(_.toDouble)
-                else ChunkCodec.decodeDoubles(raw, dtype)
-              ChunkCodec.compress(
-                ChunkCodec.encodeDoubles(fDouble(v), outDtype),
-                compression)
-            }
-          val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-          store.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-          (coord, id, bytes.length.toLong)
-        }
-      }.toDF("coord", "chunk_id", "length")
   }
 
   /** userData for a transform DESTINATION: dtype plus the codec the
@@ -1368,7 +1328,7 @@ object TensorPlane {
     * [[MaxDistinctCellCounts]] constant blobs. Fires only when absent
     * chunks actually need fill (a fully dense degenerate grid transforms
     * fine), and BEFORE the destination array is staged (addLike runs
-    * after the fill plan in [[stageTransformedRefs]]), so a refusal
+    * after the fill plan in [[stageTransformed]]), so a refusal
     * leaves no half-created dst in the session changeset.
     */
   private def requireFillableGrid(node: graft.meta.NodeSpec,
@@ -1380,101 +1340,113 @@ object TensorPlane {
           "a regular grid first",
         graft.repo.GraftError.InvalidConfig)
 
-  /** Stage a per-chunk-transformed ref relation for `dstPath`. When the
-    * transform maps the fill value 0 to `fillOut != 0`, absent source
-    * coords must READ `fillOut` in the destination, so they materialize
-    * as refs to shared constant chunks (content-addressed: one object
-    * per chunk volume the ABSENT coords actually need, one metadata row
-    * per absent coord; a fully-dense source adds no rows because the
-    * anti-join is empty). Shared by [[mapValues]] and [[mapUnary]].
+  /** The per-chunk transform of [[mapValues]] and [[mapUnary]] into
+    * `dstPath`: each stored chunk decodes at its stored length (no pad,
+    * so every chunk's bytes keep their length), runs ONE kernel (`fLong`
+    * when intMath, else `fDouble`; kernels are selected once, not per
+    * cell) and re-encodes to `outDtype`. When the transform maps the
+    * fill value 0 to `fillOut != 0`, absent source coords must READ
+    * `fillOut` in the destination, so they materialize as refs to shared
+    * constant chunks (content-addressed: one object per chunk volume the
+    * ABSENT coords actually need, one metadata row per absent coord; a
+    * fully-dense source adds no rows because the anti-join is empty).
     */
-  private def stageTransformedRefs(session: Session, srcPath: String,
-      dstPath: String, node: graft.meta.NodeSpec,
-      refsDf: org.apache.spark.sql.DataFrame, fillOut: Double,
-      intMath: Boolean, outDtype: String, compression: String): Unit = {
+  private def stageTransformed(session: Session, srcPath: String,
+      dstPath: String, node: graft.meta.NodeSpec, dtype: String,
+      outDtype: String, intMath: Boolean, fillOut: Double,
+      compression: String)(
+      fLong: Array[Long] => Array[Long],
+      fDouble: Array[Double] => Array[Double]): Unit = {
     val spark = session.repo.spark
-    var absentCache: Option[org.apache.spark.sql.DataFrame] = None
-    val withFill =
-      if (fillOut == 0.0) refsDf
-      else {
-        val gridDims = node.numChunksPerDim
-        val strides = gridDims.indices.map(d =>
-          gridDims.drop(d + 1).map(_.toLong).product)
-        val coordExpr = array(gridDims.indices.map(d =>
-          expr(s"cast((id div ${strides(d)}) % ${gridDims(d)} as int)")): _*)
-        // persist: the emptiness check and the staging write would
-        // otherwise each run the full O(grid) anti-join
-        val absent = spark.range(gridDims.map(_.toLong).product)
-          .select(coordExpr.as("coord"))
-          .join(session.refs(srcPath).select(col("coord")),
-            Seq("coord"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        absentCache = Some(absent)
-        if (absent.isEmpty) refsDf
+    val conf = session.repo.store.conf
+    val resolver = session.repo.virtualResolver
+    val refsDf = uploadChunks(refRows(session.refs(srcPath).repartition(
+        spark.sparkContext.defaultParallelism * 2, col("coord"))), conf)(
+      _.map { case (coord, kind, inline, chunkId, location, off, len) =>
+        val raw = fetchRef(conf, resolver, kind, inline, chunkId, location,
+          off, len, cacheable = false)
+        (coord,
+          if (intMath)
+            ChunkCodec.compress(ChunkCodec.encodeLongs(
+              fLong(paddedLongs(raw, 0, dtype, compression)), outDtype),
+              compression)
+          else
+            ChunkCodec.compress(ChunkCodec.encodeDoubles(
+              fDouble(paddedDoubles(raw, 0, dtype, compression)), outDtype),
+              compression))
+      })
+    var absentCache: Option[DataFrame] = None
+    try {
+      val withFill =
+        if (fillOut == 0.0) refsDf
         else {
-          // one shared constant chunk PER DISTINCT CELL COUNT the ABSENT
-          // coords actually use (regular: exactly one; rect: collected
-          // from the persisted absent relation — bounded by the
-          // MaxDistinctCellCounts refusal, and a grid volume no absent
-          // chunk needs uploads no blob). Degenerate grids were refused
-          // by requireFillableGrid in the caller, before any staging;
-          // the re-check here is defense in depth.
-          requireFillableGrid(node, srcPath)
-          val sizes = node.chunkSizesPerDim
-          def cellsExpr = sizes.indices.map(d =>
-            element_at(typedLit(sizes(d)),
-              element_at(col("coord"), d + 1) + 1)).reduce(_ * _)
-          val neededCounts: Seq[Long] =
-            if (!node.isRectilinear) Seq(node.chunkShape.product)
-            else absent.withColumn("_cells", cellsExpr)
-              .select("_cells").distinct()
-              .collect().map(_.getLong(0)).toSeq
-          val constByCells: Map[Long, (String, Long)] =
-            neededCounts.map { c =>
-              val bytes =
-                if (intMath)
-                  ChunkCodec.compress(ChunkCodec.encodeLongs(
-                    Array.fill(c.toInt)(fillOut.toLong), outDtype),
-                    compression)
-                else
-                  ChunkCodec.compress(ChunkCodec.encodeDoubles(
-                    Array.fill(c.toInt)(fillOut), outDtype), compression)
-              val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-              session.repo.store.putBytes(
-                graft.meta.Layout.chunkKey(id), bytes)
-              c -> (id, bytes.length.toLong)
-            }.toMap
-          if (!node.isRectilinear) {
-            val (constId, constLen) = constByCells(neededCounts.head)
-            refsDf.union(absent.select(col("coord"),
-              lit(constId).as("chunk_id"), lit(constLen).as("length")))
-          } else {
-            // per-coord chunk volume from the literal size tables, then
-            // a broadcast map to the matching constant chunk
-            import spark.implicits._
-            val constDf = broadcast(constByCells.toSeq
-              .map { case (c, (id, len)) => (c, id, len) }
-              .toDF("_cells", "chunk_id", "length"))
-            refsDf.union(absent
-              .withColumn("_cells", cellsExpr)
-              .join(constDf, Seq("_cells"))
-              .select(col("coord"), col("chunk_id"), col("length")))
+          val gridDims = node.numChunksPerDim
+          val strides = gridDims.indices.map(d =>
+            gridDims.drop(d + 1).map(_.toLong).product)
+          val coordExpr = array(gridDims.indices.map(d =>
+            expr(s"cast((id div ${strides(d)}) % ${gridDims(d)} as int)")): _*)
+          // persist: the emptiness check and the staging write would
+          // otherwise each run the full O(grid) anti-join
+          val absent = spark.range(gridDims.map(_.toLong).product)
+            .select(coordExpr.as("coord"))
+            .join(session.refs(srcPath).select(col("coord")),
+              Seq("coord"), "left_anti")
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          absentCache = Some(absent)
+          if (absent.isEmpty) refsDf
+          else {
+            // one shared constant chunk PER DISTINCT CELL COUNT the ABSENT
+            // coords actually use (regular: exactly one; rect: collected
+            // from the persisted absent relation — bounded by the
+            // MaxDistinctCellCounts refusal, and a grid volume no absent
+            // chunk needs uploads no blob)
+            requireFillableGrid(node, srcPath)
+            val sizes = node.chunkSizesPerDim
+            def cellsExpr = sizes.indices.map(d =>
+              element_at(typedLit(sizes(d)),
+                element_at(col("coord"), d + 1) + 1)).reduce(_ * _)
+            val neededCounts: Seq[Long] =
+              if (!node.isRectilinear) Seq(node.chunkShape.product)
+              else absent.withColumn("_cells", cellsExpr)
+                .select("_cells").distinct()
+                .collect().map(_.getLong(0)).toSeq
+            val constByCells: Map[Long, (String, Long)] =
+              neededCounts.map { c =>
+                val bytes =
+                  if (intMath)
+                    ChunkCodec.compress(ChunkCodec.encodeLongs(
+                      Array.fill(c.toInt)(fillOut.toLong), outDtype),
+                      compression)
+                  else
+                    ChunkCodec.compress(ChunkCodec.encodeDoubles(
+                      Array.fill(c.toInt)(fillOut), outDtype), compression)
+                c -> (graft.meta.Layout.publishChunk(session.repo.store,
+                  bytes), bytes.length.toLong)
+              }.toMap
+            if (!node.isRectilinear) {
+              val (constId, constLen) = constByCells(neededCounts.head)
+              refsDf.union(absent.select(col("coord"),
+                lit(constId).as("chunk_id"), lit(constLen).as("length")))
+            } else {
+              // per-coord chunk volume from the literal size tables, then
+              // a broadcast map to the matching constant chunk
+              import spark.implicits._
+              val constDf = broadcast(constByCells.toSeq
+                .map { case (c, (id, len)) => (c, id, len) }
+                .toDF("_cells", "chunk_id", "length"))
+              refsDf.union(absent
+                .withColumn("_cells", cellsExpr)
+                .join(constDf, Seq("_cells"))
+                .select(col("coord"), col("chunk_id"), col("length")))
+            }
           }
         }
-      }
-    // create the destination only AFTER every refusal above has had its
-    // chance to fire — a refused transform must not leave a half-created
-    // dst array in the session changeset
-    addLike(session, dstPath, node, outDtype, compression)
-    val stagingKey = graft.meta.Layout.stagingPrefix(
-      graft.core.Ids.toBase32(graft.core.Ids.newObjectId()))
-    withFill.write.parquet(session.repo.store.uri(stagingKey))
-    absentCache.foreach(_.unpersist(blocking = false))
-    val refs = spark.read.parquet(session.repo.store.uri(stagingKey))
-      .withColumn("kind", lit(ChunkRef.KindRef))
-      .withColumn("offset", lit(0L))
-    session.trackStaging(stagingKey)
-    session.stageChunkRefs(dstPath, refs)
+      // create the destination only AFTER every refusal above has had its
+      // chance to fire — a refused transform must not leave a half-created
+      // dst array in the session changeset
+      addLike(session, dstPath, node, outDtype, compression)
+      session.stageChunkRefs(dstPath, session.stageUploads(withFill))
+    } finally absentCache.foreach(_.unpersist(blocking = false))
   }
 
   /** Unary elementwise math into a new array: op ∈ `abs` | `square` |
@@ -1569,11 +1541,8 @@ object TensorPlane {
         v
       }
     }
-    val refsDf = transformChunkRefs(session, srcPath, dtype, outDtype,
-      intMath, compression)(fLong, fDouble)
-    stageTransformedRefs(session, srcPath, dstPath, node, refsDf,
-      fillOut = fillOut, intMath = intMath, outDtype = outDtype,
-      compression = compression)
+    stageTransformed(session, srcPath, dstPath, node, dtype, outDtype,
+      intMath, fillOut, compression)(fLong, fDouble)
   }
 
   /** ZERO-COPY concatenation of arrays along one axis into a new array —
@@ -1601,27 +1570,6 @@ object TensorPlane {
     * regular source ragged along an INNER dim (its padded buffers
     * cannot be relabeled into exact-extent rect strides).
     */
-  /** Run a chunk-upload job's output through a staging Parquet and stage
-    * the refs from the RECORDED rows: changeset actions (flush, tx log,
-    * rebase retries) replay from the Parquet, so the side-effecting
-    * upload job runs exactly once. `refsDf` carries
-    * `(coord, chunk_id, length)`; kind/offset are constants here.
-    * The ONE replay contract shared by [[writeValues]], [[transpose]]
-    * and [[concat]].
-    */
-  private def stageViaParquet(session: Session, dstPath: String,
-                              refsDf: DataFrame): Unit = {
-    val spark = refsDf.sparkSession
-    val stagingKey = graft.meta.Layout.stagingPrefix(
-      graft.core.Ids.toBase32(graft.core.Ids.newObjectId()))
-    refsDf.write.parquet(session.repo.store.uri(stagingKey))
-    session.trackStaging(stagingKey)
-    session.stageChunkRefs(dstPath,
-      spark.read.parquet(session.repo.store.uri(stagingKey))
-        .withColumn("kind", lit(ChunkRef.KindRef))
-        .withColumn("offset", lit(0L)))
-  }
-
   def concat(session: Session, srcPaths: Seq[String], dstPath: String,
              axis: Int, dtype: String,
              compression: String = "raw"): Unit = {
@@ -1727,7 +1675,6 @@ object TensorPlane {
     }
     session.addArrayRectilinear(dstPath, dstShape, dstSizes,
       head.dimNames, userData = destUserData(dtype, compression))
-    val spark = session.repo.spark
     val conf = session.repo.store.conf
     val resolver = session.repo.virtualResolver
     var offsetChunks = 0L
@@ -1741,17 +1688,6 @@ object TensorPlane {
       val ragged0 = !n.isRectilinear && n.shape(0) % n.chunkShape(0) != 0
       if (!ragged0) session.stageChunkRefs(dstPath, relabeled)
       else {
-        // the truncation path DECODES payload bytes — a stored
-        // compression different from the decode parameter would cut
-        // compressed bytes at a raw offset (corrupt output, no error)
-        graft.sources.GraftCatalog.compressionFromUserData(n.userData)
-          .foreach { stored =>
-            if (stored != compression) throw new GraftException(
-              s"concat: $p stores compression $stored but decode " +
-                s"compression is $compression — pass the stored codec",
-              graft.repo.GraftError.SchemaMismatch)
-          }
-        import spark.implicits._
         // `relabeled` coords are shifted by `off` on the concat axis —
         // when that axis IS dim 0, the tail's dim-0 index shifts with it
         val srcTail = n.shape(0) / n.chunkShape(0) // floor = tail index
@@ -1763,24 +1699,17 @@ object TensorPlane {
         val exactBytes = exactCells * ChunkCodec.dtypeWidth(dtype)
         session.stageChunkRefs(dstPath,
           relabeled.filter(element_at(col("coord"), 1) =!= tailC0))
-        val tail = relabeled.filter(element_at(col("coord"), 1) === tailC0)
-          .select(col("coord"), col("kind"), col("inline"), col("chunk_id"),
-            col("location"), col("offset"), col("length"))
-          .as[(Seq[Int], String, Array[Byte], String, String, Long, Long)]
-        val cut = tail.mapPartitions { it =>
-          val store = graft.storage.StoreConf.cached(conf)
-          it.map { case (coord, kind, inline, chunkId, location, o, l) =>
+        val tail = refRows(
+          relabeled.filter(element_at(col("coord"), 1) === tailC0))
+        val cut = uploadChunks(tail, conf)(_.map {
+          case (coord, kind, inline, chunkId, location, o, l) =>
             val raw = ChunkCodec.decompress(
               fetchRef(conf, resolver, kind, inline, chunkId, location,
                 o, l, cacheable = false), compression)
-            val bytes = ChunkCodec.compress(
-              java.util.Arrays.copyOf(raw, exactBytes.toInt), compression)
-            val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-            store.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-            (coord, id, bytes.length.toLong)
-          }
-        }.toDF("coord", "chunk_id", "length")
-        stageViaParquet(session, dstPath, cut)
+            (coord, ChunkCodec.compress(
+              java.util.Arrays.copyOf(raw, exactBytes.toInt), compression))
+        })
+        session.stageChunkRefs(dstPath, session.stageUploads(cut))
       }
       offsetChunks += axisSizes(idx).size
     }
@@ -1874,9 +1803,8 @@ object TensorPlane {
     *     make a source shared by several destinations decode ~once;
     *  3. each destination chunk is assembled with row-major
     *     `System.arraycopy` runs, encoded, and uploaded from the
-    *     executor; refs land in a staging Parquet dataset that
-    *     flush/rebase replay (same idempotence contract as
-    *     [[writeValues]]);
+    *     executor ([[uploadChunks]]); refs land through
+    *     [[Session.stageUploads]], which flush/rebase replay;
     *  4. [[Session.rechunkArray]] swaps the chunk grid and the whole ref
     *     relation atomically in the changeset (rewritten-node semantics).
     *
@@ -1947,17 +1875,12 @@ object TensorPlane {
       .flatMap(c => scala.util.Try(c.toInt).toOption)
       .getOrElse(spark.sparkContext.defaultParallelism)
     // one assemble pipeline for either partitioning route below
-    type Frag = (Seq[Int], Seq[Int], String, Array[Byte], String, String,
-      Long, Long)
-    val assemble: Iterator[Frag] => Iterator[(Seq[Int], String, Long)] =
+    val assemble: Iterator[Frag] => Iterator[(Seq[Int], Array[Byte])] =
       if (isInt)
         it => assembleChunks[Long](it, srcGeom, maxSrcCells, slots, dstA,
           shpA,
           () => new Array[Long](dstCells),
-          raw => ChunkCodec.decodeLongs(
-            ChunkCodec.decompress(raw, compression), dtype),
-          (a, n) => if (a.length >= n) a
-            else java.util.Arrays.copyOf(a, n), // short edge chunk
+          paddedLongs(_, _, dtype, compression),
           arr => ChunkCodec.compress(
             ChunkCodec.encodeLongs(arr, dtype), compression),
           conf, resolver)
@@ -1965,10 +1888,7 @@ object TensorPlane {
         it => assembleChunks[Double](it, srcGeom, maxSrcCells, slots, dstA,
           shpA,
           () => new Array[Double](dstCells),
-          raw => ChunkCodec.decodeDoubles(
-            ChunkCodec.decompress(raw, compression), dtype),
-          (a, n) => if (a.length >= n) a
-            else java.util.Arrays.copyOf(a, n),
+          paddedDoubles(_, _, dtype, compression),
           arr => ChunkCodec.compress(
             ChunkCodec.encodeDoubles(arr, dtype), compression),
           conf, resolver)
@@ -1990,7 +1910,7 @@ object TensorPlane {
         Long, Long)]
       .collect()
     phase("plan")
-    val refsDf =
+    val frags: org.apache.spark.sql.Dataset[Frag] =
       if (head.length <= headCap) {
         import scala.math.Ordering.Implicits._
         val rows = head.sortBy(r => (r._1, r._3.toIndexedSeq: Seq[Int]))
@@ -2009,28 +1929,15 @@ object TensorPlane {
           if (cur.length >= target) { slices += cur.toVector; cur.clear() }
         }
         if (cur.nonEmpty) slices += cur.toVector
-        val rdd = spark.sparkContext
+        // each slice stays one partition, in order
+        spark.createDataset(spark.sparkContext
           .parallelize(slices.toSeq, math.max(1, slices.size))
-          .mapPartitions(it => assemble(it.flatMap(_.iterator)))
-        spark.createDataset(rdd).toDF("coord", "chunk_id", "length")
+          .flatMap(_.iterator))
       } else
         rechunkFragments(session, path, newChunks)
-          .toDF("_1", "_2", "_3", "_4", "_5", "_6", "_7", "_8")
-          .as[(Seq[Int], Seq[Int], String, Array[Byte], String, String,
-            Long, Long)]
-          .mapPartitions(assemble)
-          .toDF("coord", "chunk_id", "length")
-
-    // run the copy job exactly once; changeset actions replay from the
-    // staging Parquet (flush, tx log, rebase retries)
-    val stagingKey = graft.meta.Layout.stagingPrefix(
-      graft.core.Ids.toBase32(graft.core.Ids.newObjectId()))
-    refsDf.write.parquet(session.repo.store.uri(stagingKey))
+          .toDF("_1", "_2", "_3", "_4", "_5", "_6", "_7", "_8").as[Frag]
+    val refs = session.stageUploads(uploadChunks(frags, conf)(assemble))
     phase("copy")
-    val refs = spark.read.parquet(session.repo.store.uri(stagingKey))
-      .withColumn("kind", lit(ChunkRef.KindRef))
-      .withColumn("offset", lit(0L))
-    session.trackStaging(stagingKey)
     session.rechunkArray(path, newChunks, refs)
     phase("swap")
     } // end not-already-on-grid
@@ -2112,9 +2019,9 @@ object TensorPlane {
   }
 
   /** Assemble destination chunks from a (dst, src, ref...) run sorted by
-    * dst: fetch + decode each source once per miss (decoded LRU),
-    * block-copy the overlap, upload, emit (coord, chunk_id,
-    * encodedLength).
+    * dst: fetch + decode each source once per miss (decoded LRU, `decode`
+    * pads a short edge buffer to the source's stored extent), block-copy
+    * the overlap, emit (coord, encoded bytes) for [[uploadChunks]].
     *
     * Memory discipline (the source of run-to-run bench variance on
     * small-heap runners): the per-task decoded-source LRU budget adapts
@@ -2125,20 +2032,16 @@ object TensorPlane {
     * template, instead of allocating a fresh multi-MB (G1-humongous)
     * array per destination chunk.
     */
-  private[graft] def assembleChunks[V](
-      it: Iterator[(Seq[Int], Seq[Int], String, Array[Byte], String,
-        String, Long, Long)],
+  private[graft] def assembleChunks[V](it: Iterator[Frag],
       srcGeom: Seq[Int] => (Array[Long], Array[Long]),
       maxSrcCells: Long, taskSlots: Int,
       dstChunks: Array[Long], shape: Array[Long],
       alloc: () => Array[V],
-      decode: Array[Byte] => Array[V],
-      pad: (Array[V], Int) => Array[V],
+      decode: (Array[Byte], Int) => Array[V],
       encode: Array[V] => Array[Byte],
       conf: graft.storage.StoreConf,
       resolver: graft.virt.VirtualChunkResolver)
-      : Iterator[(Seq[Int], String, Long)] = {
-    val store = graft.storage.StoreConf.cached(conf)
+      : Iterator[(Seq[Int], Array[Byte])] = {
     // slots = concurrent tasks in THIS JVM (driver passes executor.cores
     // or local parallelism — availableProcessors would be machine cores,
     // which on a big host running few slots would collapse the budget
@@ -2158,9 +2061,9 @@ object TensorPlane {
     val template = alloc()
     val arr = template.clone()
     val buf = it.buffered
-    new Iterator[(Seq[Int], String, Long)] {
+    new Iterator[(Seq[Int], Array[Byte])] {
       override def hasNext: Boolean = buf.hasNext
-      override def next(): (Seq[Int], String, Long) = {
+      override def next(): (Seq[Int], Array[Byte]) = {
         val dst = buf.head._1
         System.arraycopy(template, 0, arr, 0, arr.length)
         while (buf.hasNext && buf.head._1 == dst) {
@@ -2175,16 +2078,13 @@ object TensorPlane {
             // hot point-lookup entries it exists for
             val raw = fetchRef(conf, resolver, kind, inline, chunkId,
               location, offset, length, cacheable = false)
-            decoded = pad(decode(raw), srcExt.product.toInt)
+            decoded = decode(raw, srcExt.product.toInt)
             lru.put(src, decoded)
           }
           copyBlock(decoded, arr, srcStart, srcExt, dst.toArray,
             dstChunks, shape)
         }
-        val bytes = encode(arr)
-        val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-        store.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-        (dst, id, bytes.length.toLong)
+        (dst, encode(arr))
       }
     }
   }
@@ -2246,76 +2146,33 @@ object TensorPlane {
     }
   }
 
-  /** [[streamEncode]] keyed by the row-major LINEAR chunk index instead
-    * of the coord array: the value sink's shuffle/sort/decode then moves
-    * 8 bytes per row where the array form allocated a boxed Seq[Int] per
-    * value cell (guide §2.3: narrower types; r16 — the per-row coord
-    * materialization was the dominant task cost of the 16.7M-cell value
-    * writes). Coords re-derive once per CHUNK, not per row.
+  /** Stream one run of (key, pos, value) cells, sorted by key then pos,
+    * into chunks holding one chunk buffer at a time: `coordOf` names the
+    * key's chunk, `alloc` sizes its buffer, `encode` serializes it; emits
+    * (coord, encoded bytes) for [[uploadChunks]]. The value sink keys by
+    * the row-major LINEAR chunk index, so its shuffle/sort/decode moves
+    * 8 bytes per row and coords re-derive once per CHUNK (r16: a boxed
+    * Seq[Int] per value cell was the dominant task cost of the 16.7M-cell
+    * value writes); the DSv2 leftover merge keys by coord.
     */
-  private[graft] def streamEncodeOrd[V](it: Iterator[(Long, Long, V)],
-                              grid: Array[Long],
+  private[graft] def streamEncode[K, V](it: Iterator[(K, Long, V)],
+                              coordOf: K => Seq[Int],
                               alloc: Seq[Int] => Array[V],
                               set: (Array[V], Int, V) => Unit,
-                              encode: Array[V] => Array[Byte],
-                              conf: graft.storage.StoreConf)
-      : Iterator[(Seq[Int], String, Long)] = {
-    val store = graft.storage.StoreConf.cached(conf)
-    val nd = grid.length
-    val strides = new Array[Long](nd)
-    strides(nd - 1) = 1
-    var k = nd - 2
-    while (k >= 0) { strides(k) = strides(k + 1) * grid(k + 1); k -= 1 }
-    def coordOf(cl: Long): Seq[Int] = {
-      var r = cl
-      val c = new Array[Int](nd)
-      var i = 0
-      while (i < nd) { c(i) = (r / strides(i)).toInt; r %= strides(i); i += 1 }
-      c.toIndexedSeq
-    }
+                              encode: Array[V] => Array[Byte])
+      : Iterator[(Seq[Int], Array[Byte])] = {
     val buf = it.buffered
-    new Iterator[(Seq[Int], String, Long)] {
+    new Iterator[(Seq[Int], Array[Byte])] {
       override def hasNext: Boolean = buf.hasNext
-      override def next(): (Seq[Int], String, Long) = {
-        val cl = buf.head._1
-        val coord = coordOf(cl)
+      override def next(): (Seq[Int], Array[Byte]) = {
+        val key = buf.head._1
+        val coord = coordOf(key)
         val arr = alloc(coord)
-        while (buf.hasNext && buf.head._1 == cl) {
+        while (buf.hasNext && buf.head._1 == key) {
           val (_, pos, v) = buf.next()
           set(arr, pos.toInt, v)
         }
-        val bytes = encode(arr)
-        val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-        store.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-        (coord, id, bytes.length.toLong)
-      }
-    }
-  }
-
-  /** Stream one sorted (coord, pos, value) run: assemble, encode, and
-    * upload chunk-at-a-time; emits (coord, chunk_id, encodedLength).
-    */
-  private[graft] def streamEncode[V](it: Iterator[(Seq[Int], Long, V)],
-                              alloc: Seq[Int] => Array[V],
-                              set: (Array[V], Int, V) => Unit,
-                              encode: Array[V] => Array[Byte],
-                              conf: graft.storage.StoreConf)
-      : Iterator[(Seq[Int], String, Long)] = {
-    val store = graft.storage.StoreConf.cached(conf)
-    val buf = it.buffered
-    new Iterator[(Seq[Int], String, Long)] {
-      override def hasNext: Boolean = buf.hasNext
-      override def next(): (Seq[Int], String, Long) = {
-        val coord = buf.head._1
-        val arr = alloc(coord)
-        while (buf.hasNext && buf.head._1 == coord) {
-          val (_, pos, v) = buf.next()
-          set(arr, pos.toInt, v)
-        }
-        val bytes = encode(arr)
-        val id = graft.core.Ids.toBase32(graft.core.Ids.newObjectId())
-        store.putBytes(graft.meta.Layout.chunkKey(id), bytes)
-        (coord, id, bytes.length.toLong)
+        (coord, encode(arr))
       }
     }
   }

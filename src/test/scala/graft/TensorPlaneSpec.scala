@@ -533,4 +533,70 @@ class TensorPlaneSpec extends SparkTestBase {
       assert(got((i.toLong, j.toLong)) == i * 10 + j, s"cell ($i,$j)")
     assert(!got.values.exists(v => v == 999L || v == 888L || v == 777L))
   }
+
+  test("a refused fill materialization releases its cached absent " +
+      "relation and leaves no destination node") {
+    val repo = Repository.create(Store.local(tmpDir("fill-refuse")), spark)
+    val s0 = repo.writableSession("main")
+    // 300 distinct chunk lengths, no chunk written: every coord is
+    // absent, and their volumes exceed what the fill path materializes
+    val sizes = (1 to 300).map(_.toLong)
+    s0.addArrayRectilinear("/r", Seq(sizes.sum), Seq(sizes))
+    s0.commit("rect")
+    val s = repo.writableSession("main")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[GraftException](
+      TensorPlane.mapValues(s, "/r", "/m", 1.0, 1.0, "int64"))
+    assert(e.kind == GraftError.InvalidConfig)
+    assert(s.node("/m").isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+  }
+
+  test("every upload op publishes each chunk once and replays it through " +
+      "a rebased commit; no staging is left") {
+    val store = Store.local(tmpDir("replay"))
+    val repo = Repository.create(store, spark)
+    val s0 = repo.writableSession("main")
+    // 40 x 16 in 16 x 16 chunks: ragged along dim 0 (a padded tail chunk
+    // for concat to cut), chunk (1, 0) absent (fill for mapValues), and
+    // 2 KB payloads, above the inline threshold
+    for (p <- Seq("/a", "/rc")) {
+      s0.addArray(p, Seq(40, 16), Seq(16, 16))
+      for (c <- Seq(0, 2))
+        s0.writeChunk(p, Seq(c, 0), ChunkCodec.encodeLongs(
+          Array.tabulate(256)(i => (c * 1000 - i).toLong), "int64"))
+    }
+    s0.commit("base")
+    def refIds(r: Session, paths: Seq[String]): Set[String] =
+      paths.flatMap(p => r.refs(p).filter(col("kind") === "ref")
+        .select("chunk_id").collect().map(_.getString(0))).toSet
+    val baseIds = refIds(repo.readonlySession(VersionRef.Branch("main")),
+      Seq("/a", "/rc"))
+    val chunksBefore = store.list("chunks/").map(_.key).toSet
+
+    val s = repo.writableSession("main")
+    s.addArray("/w", Seq(100), Seq(10))
+    TensorPlane.writeValues(s, "/w", spark.range(100).select(
+      col("id").as("i0"), col("id").as("value")), "int64")
+    TensorPlane.transpose(s, "/a", "/t", Seq(1, 0), "int64")
+    TensorPlane.combine(s, "/a", "/rc", "/sum", "add", "int64")
+    TensorPlane.mapValues(s, "/a", "/mv", 2.0, 1.0, "int64")
+    TensorPlane.mapUnary(s, "/a", "/mu", "abs", "int64")
+    TensorPlane.rechunk(s, "/rc", Seq(8, 8), "int64")
+    TensorPlane.concat(s, Seq("/a", "/a"), "/cat", 0, "int64")
+    // a concurrent commit lands first: this commit rebases and re-flushes
+    val other = repo.writableSession("main")
+    other.addGroup("/other")
+    other.commit("concurrent")
+    s.commit("every upload op")
+
+    val ro = repo.readonlySession(VersionRef.Branch("main"))
+    assert(ro.node("/other").isDefined)
+    val newIds = refIds(ro,
+      Seq("/w", "/t", "/sum", "/mv", "/mu", "/rc", "/cat")) -- baseIds
+    val added = store.list("chunks/").map(_.key).toSet -- chunksBefore
+    assert(newIds.nonEmpty)
+    assert(added == newIds.map("chunks/" + _))
+    assert(store.list("staging/").isEmpty)
+  }
 }
